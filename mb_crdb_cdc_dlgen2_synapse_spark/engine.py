@@ -845,16 +845,15 @@ class Engine:
         Resolution is two monotone binary searches (O(log V) property
         reads): first the largest recorded watermark W <= ``src_version``
         (watermarks only advance), then the FIRST index version carrying
-        W. The first-occurrence choice is what makes the pin torn-state
-        safe: maintenance paths that land a fold's data and its
-        watermark bump in two commits (the ANN family) leave the NEXT
-        fold's data commit still reading the OLD watermark — picking the
-        last version with wm <= W would capture that half-applied fold,
-        while the first version with wm == W is exactly the state whose
-        content folded source version W (later same-watermark commits
-        are compactions — content-identical — or the next fold's torn
-        half). Once a source version is in the past its resolved state
-        is frozen, so a pinned-source query is bit-stable while
+        W. Every index family commits a fold's rows and its watermark
+        together (operators/cdf_index.py), so the first version with
+        wm == W is exactly the state whose content folded source version
+        W. Later commits can still repeat W — the clustering and bloom
+        declarations after a bootstrap, auto-compactions — and they are
+        content-identical but lay the rows out in different files; the
+        first-occurrence rule keeps the resolved version fixed while
+        they land. Once a source version is in the past its resolved
+        state is frozen, so a pinned-source query is bit-stable while
         maintenance advances. Raises when the index's first watermark
         postdates the requested source version."""
         head = index.version()

@@ -23,6 +23,12 @@ incrementally from the source table's CDF:
   index txlog table, partitioned by bucket so probes keep their
   file-level pruning.
 
+The lifecycle of all three vector indexes here (Hamming, IVF, IVF-PQ) —
+bootstrap, watermark, catch-up, stream, scratch check, commit protocol —
+is shared, in operators/cdf_index.py; this module holds what
+differs: quantize vs. assign vs. assign+encode, model training and the
+IVF drift policy.
+
 Equality contract (asserted by the ``ann_index_incremental`` gate and
 tests/test_ann_index_incremental.py): after ANY commit sequence, the
 incrementally-maintained index content equals a from-scratch
@@ -45,15 +51,25 @@ schedule OPTIMIZE out-of-band to fold accumulated DVs.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..localrel import local_df
-from ..txlog import maybe_compact_index
+from .cdf_index import (
+    IndexFamily,
+    _lay_down,
+    apply,
+    assert_matches_scratch,
+    catchup,
+    stream,
+)
 from .similarity import _prefix_bucket_expr, binary_quantize
 
 _PREFIX_PROP = "ann.prefixDims"
+_WATERMARK = "ann.srcVersion"
 
 #: rows per clustered index file: bounds each file to a tight vec_id
 #: span inside its bucket/cid partition, so a keyed MERGE's key-set
@@ -106,6 +122,149 @@ def _net_changes(changes: DataFrame) -> DataFrame:
     )
 
 
+def _vec_bloom(rows_per_file: int) -> dict:
+    """Point-key skipping for the keyed MERGE on ``vec_id``: every
+    bucket/list partition tiles the full vec_id domain, so min/max spans
+    alone cannot prune scattered-key increments — the per-file bloom
+    proves keys absent where ranges cannot."""
+    return {
+        "cols": ["vec_id"], "bits": _bloom_bits(rows_per_file), "hashes": 7,
+        "auto_size": True,
+    }
+
+
+def _hamming_rows(vecs: DataFrame, dims: list[int]) -> DataFrame:
+    """(vec_id, b_lo, b_hi, bucket): sign-bit codes + prefix bucket."""
+    return (
+        binary_quantize(vecs)
+        .select("vec_id", "b_lo", "b_hi")
+        .withColumn("bucket", _prefix_bucket_expr(dims))
+    )
+
+
+def _dims_prop(dims: list[int]) -> dict:
+    return {_PREFIX_PROP: ",".join(str(d) for d in dims)}
+
+
+def _index_dims(index, prefix_bits: int) -> list[int]:
+    prop = index.properties().get(_PREFIX_PROP)
+    if prop:
+        return [int(x) for x in prop.split(",")]
+    return list(range(prefix_bits))
+
+
+def _net_source(changes: DataFrame, encode) -> DataFrame:
+    """Merge source for one CDF batch of a vector index: one net change
+    per vec_id, inserts turned into index rows by ``encode`` (only the
+    CHANGED vectors), deletes as key-only tombstones — matched by key
+    GLOBALLY, since an updated vector may cross buckets/lists.
+    Materialized ONCE: the merge references its source several times
+    (matched update, no-match anti-join, delete clause), and
+    re-evaluating the encode per reference multiplies the batch cost."""
+    net = _net_changes(changes)
+    ins = net.filter(F.col("_change_type") == "insert").select("vec_id", "embedding")
+    dels = net.filter(F.col("_change_type") == "delete").select("vec_id")
+    return (
+        encode(ins)
+        .withColumn("_tombstone", F.lit(False))
+        .unionByName(dels.withColumn("_tombstone", F.lit(True)), allowMissingColumns=True)
+        .localCheckpoint(eager=True)
+    )
+
+
+def _vector_family(
+    label: str,
+    rows: tuple[str, ...],
+    partition: str,
+    encode,
+    props=lambda index: {},
+    rows_per_file: int = _CLUSTER_ROWS_PER_FILE,
+    **hooks,
+) -> IndexFamily:
+    """What the three vector indexes share: the (vec_id, embedding) feed,
+    the vec_id merge key, vec_id clustering + bloom inside bucket/list
+    partitions and the net-change merge source, where
+    ``encode(index, inserts)`` turns changed vectors into index rows."""
+    return IndexFamily(
+        label=label,
+        watermark=_WATERMARK,
+        columns=("vec_id", "embedding"),
+        rows=rows,
+        key=("vec_id",),
+        cluster_by=("vec_id",),
+        partition_by=(partition,),
+        bloom=_vec_bloom(rows_per_file),
+        rows_per_file=rows_per_file,
+        delta=lambda index, changes: (
+            _net_source(changes, lambda ins: encode(index, ins)), props(index)
+        ),
+        **hooks,
+    )
+
+
+def _retrain(fam: IndexFamily, src, index, name: str) -> int:
+    """Atomic retrain-and-swap: the family's bootstrap trains fresh models
+    on the CURRENT source snapshot and commits them to their tables
+    (probes stay pinned to the old generations), then ONE overwrite
+    swaps in the lists with the new generation pins — probes see
+    entirely-old or entirely-new, never a half-built index or a
+    cross-generation pairing. Returns the new source watermark."""
+    head = src.version()
+    built = fam.bootstrap(src, index, head)
+    if built is None:
+        raise RuntimeError(
+            f"{name}: source {src.path!r} is empty at v{head} — nothing to "
+            "train on; drop the index tables instead"
+        )
+    rows, props = built
+    _lay_down(fam, index, rows, {**props, _WATERMARK: str(head)}, overwrite=True)
+    return head
+
+
+def _hamming(
+    prefix_bits: int = 4,
+    mode: str = "dv",
+    rows_per_file: int = _CLUSTER_ROWS_PER_FILE,
+    auto_bits: bool = False,
+    dims: list[int] | None = None,
+) -> IndexFamily:
+    def bootstrap(src, index, head):
+        # quantize the snapshot STRAIGHT into a partitioned append — the
+        # plan of materialize_binary_codes, so the initial build costs
+        # what a from-scratch build costs
+        snap = src.read(as_of=head).select("vec_id", "embedding")
+        if not snap.take(1):
+            return None
+        if auto_bits:
+            from .similarity import choose_balanced_prefix_dims
+
+            d = choose_balanced_prefix_dims(snap, prefix_bits)
+        else:
+            d = _index_dims(index, prefix_bits)
+        return _hamming_rows(snap, d), _dims_prop(d)
+
+    def layout(index):
+        return dims or _index_dims(index, prefix_bits)
+
+    return _vector_family(
+        "ANN index",
+        ("vec_id", "b_lo", "b_hi", "bucket"),
+        "bucket",
+        lambda index, ins: _hamming_rows(ins, layout(index)),
+        # the probe layout rides the first commit of a stream-first index
+        # (the policy-store contract of materialize_binary_codes)
+        props=lambda index: (
+            {} if _PREFIX_PROP in index.properties() else _dims_prop(layout(index))
+        ),
+        rows_per_file=rows_per_file,
+        bootstrap=bootstrap,
+        scratch=lambda index, src: _hamming_rows(
+            src.read().select("vec_id", "embedding"), layout(index)
+        ),
+        mode=mode,
+    )
+
+
 def ann_index_apply_changes(
     index,
     changes: DataFrame,
@@ -115,72 +274,10 @@ def ann_index_apply_changes(
 ) -> dict:
     """Apply one CDF batch (``_change_type``/``_commit_version`` +
     ``vec_id``/``embedding`` row images) to the bucketed binary-code
-    index table. Returns the merge report (empty dict for an empty
-    batch)."""
-    net = _net_changes(changes)
-    ups = (
-        binary_quantize(net.filter(F.col("_change_type") == "insert"))
-        .select("vec_id", "b_lo", "b_hi")
-        .withColumn("bucket", _prefix_bucket_expr(prefix_dims))
-        .withColumn("_tombstone", F.lit(False))
-    )
-    dels = net.filter(F.col("_change_type") == "delete").select(
-        "vec_id",
-        F.lit(None).cast("bigint").alias("b_lo"),
-        F.lit(None).cast("bigint").alias("b_hi"),
-        F.lit(None).cast("int").alias("bucket"),
-        F.lit(True).alias("_tombstone"),
-    )
-    first_merge = index.version() < 0
-    if first_merge:
-        # bootstrap fast path: an empty index needs no matched/anti-join
-        # machinery — the net inserts ARE the table (deletes of
-        # never-indexed keys are no-ops by definition). One partitioned
-        # append + the layout property, and the bulk load stays a plain
-        # write at any corpus size.
-        rows = ups.drop("_tombstone").localCheckpoint(eager=True)
-        if not rows.take(1):
-            return {}
-        index.append(
-            rows,
-            partition_by=["bucket"],
-            cluster_by=["vec_id"],
-            max_records_per_file=rows_per_file,
-        )
-        index.set_clustering(["vec_id"])
-        # point-key skipping for the keyed MERGE: every bucket partition
-        # tiles the full vec_id domain, so min/max spans alone cannot
-        # prune scattered-key increments — the per-file bloom proves
-        # keys absent where ranges cannot. Declared AFTER the bootstrap
-        # write (Delta's contract: later files carry filters; OPTIMIZE
-        # backfills the bootstrap files)
-        index.set_bloom_index(
-            ["vec_id"], bits=_bloom_bits(rows_per_file), hashes=7,
-            auto_size=True,
-        )
-        # publish the probe layout in the index's own properties — same
-        # policy-store contract as materialize_binary_codes, so
-        # probed_hamming_topk derives query buckets from the index's
-        # actual layout with no side channel
-        index.set_properties(
-            {_PREFIX_PROP: ",".join(str(d) for d in prefix_dims)}
-        )
-        return {"bootstrapped": True}
-    # materialize the net batch ONCE: the merge references its source
-    # several times (matched update, no-match anti-join, delete clause),
-    # and re-evaluating the 64-term quantize expression per reference
-    # triples the batch cost
-    source = ups.unionByName(dels).localCheckpoint(eager=True)
-    if not source.take(1):
-        return {}
-    return index.merge_into(
-        source,
-        on=["vec_id"],
-        delete_when="_tombstone",
-        partition_by=["bucket"],
-        mode=mode,
-        source_materialized=True,
-    )
+    index table (``cdf_index.apply``). Returns the merge report (empty
+    dict when no merge ran)."""
+    fam = _hamming(mode=mode, rows_per_file=rows_per_file, dims=prefix_dims)
+    return apply(fam, index, changes)
 
 
 def catchup_ann_index(
@@ -192,11 +289,11 @@ def catchup_ann_index(
     auto_bits: bool = False,
     rows_per_file: int = _CLUSTER_ROWS_PER_FILE,
 ) -> int:
-    """Batch catch-up: advance the index from its recorded source
-    watermark (``ann.srcVersion`` property) to the source table's head by
-    applying the CDF in ``step``-sized version slices (default: one slice
-    for the whole gap). Returns the new watermark version. Calling it
-    with no new source commits is a no-op.
+    """Batch catch-up (``cdf_index.catchup``): advance the index from its
+    recorded source watermark (``ann.srcVersion`` property) to the source
+    table's head by applying the CDF in ``step``-sized version slices
+    (default: one slice for the whole gap). Returns the new watermark
+    version. Calling it with no new source commits is a no-op.
 
     ``auto_bits`` (bootstrap only): pick the ``prefix_bits`` most
     BALANCED sign-bit dimensions from the initial snapshot instead of
@@ -206,90 +303,8 @@ def catchup_ann_index(
     derives buckets from the SAME dims (layout is a bootstrap-time
     decision; changing it means rebuilding, exactly like re-keying a
     partition spec)."""
-    head = src.version()
-    done = int(index.properties().get("ann.srcVersion", -1))
-    if head <= done:
-        return done
-    if auto_bits and index.version() < 0:
-        from .similarity import choose_balanced_prefix_dims
-
-        prefix_dims = choose_balanced_prefix_dims(
-            src.read(as_of=head).select("vec_id", "embedding"), prefix_bits
-        )
-    else:
-        prefix_dims = _index_dims(index, prefix_bits)
-    v = done
-    if v < 0 and index.version() < 0:
-        # bootstrap (EMPTY index only — an index that has rows but no
-        # watermark was maintained by the streaming path, and a snapshot
-        # append would duplicate every row; the replay loop below handles
-        # that case key-idempotently instead): quantize the snapshot
-        # STRAIGHT into a partitioned append — no CDF rendering, no
-        # net-change window (a snapshot is key-unique by table
-        # contract), no driver-side materialization. Same plan shape as
-        # materialize_binary_codes, so the initial build costs what a
-        # from-scratch build costs; only INCREMENTS pay change-feed
-        # machinery.
-        snap = src.read(as_of=head).select("vec_id", "embedding")
-        if snap.take(1):
-            rows = (
-                binary_quantize(snap)
-                .select("vec_id", "b_lo", "b_hi")
-                .withColumn("bucket", _prefix_bucket_expr(prefix_dims))
-            )
-            # merge-key clustering (SCALING.md round-9): files range-
-            # clustered by vec_id WITHIN bucket partitions carry tight
-            # key spans, so every later increment's keyed MERGE prunes
-            # candidates to the files its keys actually land in —
-            # declared as the table's clustering policy so compact()
-            # restores the layout after increments accumulate
-            index.append(
-                rows,
-                partition_by=["bucket"],
-                cluster_by=["vec_id"],
-                max_records_per_file=rows_per_file,
-            )
-            index.set_clustering(["vec_id"])
-            index.set_bloom_index(
-                ["vec_id"], bits=_bloom_bits(rows_per_file), hashes=7,
-                auto_size=True,
-            )  # see ann_index_apply_changes
-        index.set_properties(
-            {
-                _PREFIX_PROP: ",".join(str(d) for d in prefix_dims),
-                "ann.srcVersion": str(head),
-            }
-        )
-        return head
-    while v < head:
-        hi = head if step is None else min(v + step, head)
-        try:
-            changes = src.read_changes(v, hi)
-        except FileNotFoundError as e:
-            raise RuntimeError(
-                f"ANN index at {index.path!r} is stale beyond the source's "
-                f"CDF retention (watermark v{v}, source vacuumed past it): "
-                "the gap can no longer be replayed. Rebuild: drop the "
-                "index table and catchup_ann_index() from scratch "
-                "(bootstrap reads the current snapshot, no feed needed)."
-            ) from e
-        ann_index_apply_changes(
-            index, changes, prefix_dims, mode=mode, rows_per_file=rows_per_file
-        )
-        index.set_properties({"ann.srcVersion": str(hi)})
-        v = hi
-    # catch-up-time auto-compaction (file-count-relative, metadata-only
-    # check): trickle maintenance fragments the clustered layout; restore
-    # the bootstrap shape once fragments exceed the slack threshold
-    maybe_compact_index(index, rows_per_file)
-    return head
-
-
-def _index_dims(index, prefix_bits: int) -> list[int]:
-    prop = index.properties().get(_PREFIX_PROP)
-    if prop:
-        return [int(x) for x in prop.split(",")]
-    return list(range(prefix_bits))
+    fam = _hamming(prefix_bits, mode, rows_per_file, auto_bits)
+    return catchup(fam, src, index, step)
 
 
 def stream_ann_index_to_tx_table(
@@ -301,82 +316,81 @@ def stream_ann_index_to_tx_table(
     available_now: bool = True,
     mode: str = "dv",
 ):
-    """Streaming maintenance: consume the source table's change feed as a
-    native Structured Streaming source (``readStream.format("txtable")``
-    with ``readChangeFeed``) and fold every micro-batch into the index
-    via the same net-change merge as the batch path. Offsets checkpoint
-    with the stream, so a restart resumes exactly after the last folded
-    commit; a re-delivered batch re-merges the same net rows — a content
-    no-op (the effectively-once contract of keyed merges).
-
-    A FRESH checkpoint over an index that already carries an
-    ``ann.srcVersion`` watermark (batch-bootstrapped or previously
-    stream-maintained) tails the feed from that watermark
-    (``startingVersion``) instead of taking an initial snapshot — a
-    snapshot cannot express deletions that landed between the watermark
-    and the stream start, so replaying one over a pre-populated index
-    would leave ghost rows. A virgin index keeps the snapshot-bootstrap
-    behavior (Hamming quantization needs no training). Each fold advances
-    the watermark, so batch catch-ups after streaming skip the
-    already-folded range instead of key-idempotently replaying history."""
-    from ..streaming.source import register_tx_source
-    from ..txlog import TxTable
-
-    register_tx_source(spark)
-    wm = TxTable(spark, index_dir).properties().get("ann.srcVersion")
-    reader = (
-        spark.readStream.format("txtable").option("readChangeFeed", "true")
+    """Streaming maintenance (``cdf_index.stream``): consume the source
+    table's change feed as a native Structured Streaming source and fold
+    every micro-batch into the index via the same net-change merge as
+    the batch path. Offsets checkpoint with the stream, so a restart
+    resumes after the last folded commit; a fresh checkpoint over a
+    maintained index tails from its ``ann.srcVersion`` watermark, and a
+    virgin index bootstraps from the snapshot images (Hamming
+    quantization needs no training). Buckets derive from the INDEX's own
+    ``ann.prefixDims`` per batch, so an ``auto_bits`` layout is kept."""
+    return stream(
+        spark, src_dir, [(index_dir, lambda s: _hamming(prefix_bits, mode))],
+        checkpoint_dir, available_now,
     )
-    if wm is not None:
-        # only honored by a FRESH checkpoint; resumes ignore it
-        reader = reader.option("startingVersion", str(int(wm) + 1))
-    feed = reader.load(src_dir)
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        index = TxTable(batch.sparkSession, index_dir)
-        # derive the bucket layout from the INDEX's own persisted
-        # property (metadata read, per batch): an index bootstrapped
-        # batch-side with auto_bits carries custom dims, and quantizing
-        # stream increments under the default layout would scatter them
-        # into the wrong buckets
-        dims = _index_dims(index, prefix_bits)
-        batch = batch.select(
-            "vec_id", "embedding", "_change_type", "_commit_version"
-        ).localCheckpoint(eager=True)
-        ann_index_apply_changes(index, batch, dims, mode=mode)
-        hi = batch.agg(F.max("_commit_version")).collect()[0][0]
-        if hi is not None and hi > int(index.properties().get("ann.srcVersion", -1)):
-            index.set_properties({"ann.srcVersion": str(hi)})
-        maybe_compact_index(index, _CLUSTER_ROWS_PER_FILE)
-
-    writer = (
-        feed.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def assert_index_matches_scratch(index, src) -> None:
     """The equality proof: incrementally-maintained index content ==
-    from-scratch quantization of the source head. Raises on divergence
-    (symmetric exceptAll — order- and partition-insensitive)."""
-    dims = _index_dims(index, 4)
-    scratch = (
-        binary_quantize(src.read().select("vec_id", "embedding"))
-        .select("vec_id", "b_lo", "b_hi")
-        .withColumn("bucket", _prefix_bucket_expr(dims))
+    from-scratch quantization of the source head. Raises on divergence."""
+    assert_matches_scratch(_hamming(), index, src)
+
+
+def _drift_policy(
+    src, index, prefix: str, probe, rebuild, models: str, rebuild_call: str
+) -> int:
+    """Post-catch-up drift check shared by IVF (``prefix="ann.ivf"``) and
+    IVF-PQ (``"ann.ivfpq"``): with ``<prefix>.maxDrift`` set, a drift
+    ratio past it raises an actionable error (default) or triggers the
+    atomic retrain-and-swap (``<prefix>.onDrift=rebuild``).
+    ``<prefix>.driftSampleMod`` = s makes the probe a deterministic ~1/s
+    key sample — a policy CHECK must be o(corpus) at billion scale.
+    Returns the index's source watermark."""
+    props = index.properties()
+    head = int(props.get(_WATERMARK, -1))
+    max_drift = props.get(f"{prefix}.maxDrift")
+    if not max_drift:
+        return head
+    mod = props.get(f"{prefix}.driftSampleMod")
+    d = probe(int(mod) if mod else None)
+    if mod and d["mean_d2"] is None:
+        # sample_mod larger than the corpus can leave the key sample
+        # empty (avg over zero rows = NULL); treating that as no-drift
+        # would silently disable the retrain guard forever — fall back
+        # to the exact probe (cheap by definition at that size)
+        d = probe(None)
+    ratio = d["drift_ratio"]
+    if ratio is None or ratio <= float(max_drift):
+        return head
+    if props.get(f"{prefix}.onDrift", "error") == "rebuild":
+        return rebuild()
+    raise RuntimeError(
+        f"{models} drifted {ratio:.2f}x past the bootstrap geometry "
+        f"({prefix}.maxDrift={max_drift}): probe recall is degrading. "
+        f"Either {rebuild_call} for an atomic retrain-and-swap, or set "
+        f"the {prefix}.onDrift=rebuild property to do it automatically "
+        "at catch-up time."
     )
-    got = index.read().select("vec_id", "b_lo", "b_hi", "bucket")
-    extra = got.exceptAll(scratch).count()
-    missing = scratch.exceptAll(got).count()
-    if extra or missing:
-        raise RuntimeError(
-            f"incremental ANN index diverged from scratch build: "
-            f"{extra} extra row(s), {missing} missing row(s)"
-        )
+
+
+def _key_sample(df: DataFrame, sample_mod: int | None) -> DataFrame:
+    """The deterministic ``xxhash64(vec_id) % s == 0`` ~1/s key sample
+    (stable across catch-ups, no RNG state)."""
+    if sample_mod is None or sample_mod <= 1:
+        return df
+    return df.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(int(sample_mod))) == 0)
+
+
+def _drift_report(cur, boot) -> dict:
+    boot_f = float(boot) if boot is not None else None
+    return {
+        "mean_d2": float(cur) if cur is not None else None,
+        "bootstrap_mean_d2": boot_f,
+        "drift_ratio": (
+            float(cur) / boot_f if cur is not None and boot_f else None
+        ),
+    }
 
 
 # -- IVF variant: frozen coarse quantizer + CDF-maintained lists -------------
@@ -398,6 +412,78 @@ def _pinned_cents(index, cents, as_of: int | None = None) -> DataFrame:
     return cents.read()
 
 
+def _train_ivf(src, cents, head: int, n_lists: int, n_iter: int):
+    """Train the coarse quantizer on the source snapshot at ``head``,
+    commit it to ``cents`` and assign the snapshot under it: the list
+    rows plus the properties that pin this generation. ``None`` when the
+    snapshot is empty — k-means on zero rows would freeze an EMPTY
+    centroid table, and every later increment's assign_clusters would
+    inner-join against zero centroids, dropping inserts forever."""
+    from .clustering import assign_clusters, kmeans
+
+    snap = src.read(as_of=head).select("vec_id", "embedding")
+    if not snap.take(1):
+        return None
+    centroids, _ = kmeans(snap, k=n_lists, n_iter=n_iter)
+    cents.overwrite(centroids.select("cid", "c_vec"))
+    cv = cents.version()
+    # assign under the FINAL (frozen) centroids — kmeans() returns
+    # assignments made against the pre-update centroids of its last
+    # round, but every later increment and the scratch check assign
+    # against the frozen table, so the bootstrap must too
+    assigned = assign_clusters(snap, cents.read(as_of=cv)).localCheckpoint(
+        eager=True
+    )
+    boot_d2 = assigned.agg(F.avg("d2")).collect()[0][0]
+    return assigned.select("vec_id", "embedding", "cid"), {
+        "ann.ivf.nLists": str(n_lists),
+        # generation pin: consumers time-travel the centroid table to
+        # THIS snapshot (see _pinned_cents)
+        "ann.ivf.centsVersion": str(cv),
+        # drift baseline: ivf_index_drift compares the current mean
+        # squared assignment distance against it
+        "ann.ivf.bootMeanD2": repr(float(boot_d2)),
+    }
+
+
+def _ivf(cents, n_lists: int = 8, n_iter: int = 2, mode: str = "dv") -> IndexFamily:
+    from .clustering import assign_clusters
+
+    # the pinned generation, read once per catch-up
+    pinned = functools.cache(
+        lambda index: _pinned_cents(index, cents).localCheckpoint(eager=True)
+    )
+
+    def after(src, index):
+        n = int(index.properties().get("ann.ivf.nLists", 8))
+        return _drift_policy(
+            src, index, "ann.ivf",
+            lambda mod: ivf_index_drift(index, cents, sample_mod=mod),
+            lambda: rebuild_ivf_index(src, index, cents, n_lists=n, n_iter=n_iter),
+            f"IVF quantizer at {cents.path!r}",
+            "rebuild_ivf_index(src, index, cents)",
+        )
+
+    return _vector_family(
+        "IVF index",
+        ("vec_id", "embedding", "cid"),
+        "cid",
+        # only the CHANGED vectors are assigned to their nearest frozen
+        # centroid (broadcast join, no corpus shuffle)
+        lambda index, ins: assign_clusters(ins, pinned(index)).select(
+            "vec_id", "embedding", "cid"
+        ),
+        bootstrap=lambda src, index, head: _train_ivf(
+            src, cents, head, n_lists, n_iter
+        ),
+        scratch=lambda index, src: assign_clusters(
+            src.read().select("vec_id", "embedding"), _pinned_cents(index, cents)
+        ),
+        mode=mode,
+        after=after,
+    )
+
+
 def rebuild_ivf_index(
     src,
     index,
@@ -405,45 +491,13 @@ def rebuild_ivf_index(
     n_lists: int = 8,
     n_iter: int = 2,
 ) -> int:
-    """Atomic retrain-and-swap for a drifted quantizer: train fresh
-    centroids on the CURRENT source snapshot, commit them to the
-    centroid table (probes stay pinned to the old generation), then
-    overwrite the list table with the re-assignment AND the new
-    generation pin in ONE commit — probes see entirely-old or
-    entirely-new, never a half-built index. The old centroid snapshot
-    stays time-travel-readable until the centroid table's vacuum
-    retention passes it (vacuum the cents table only after every index
-    pinning that generation has moved on). Returns the new source
-    watermark."""
-    from .clustering import assign_clusters, kmeans
-
-    head = src.version()
-    snap = src.read(as_of=head).select("vec_id", "embedding")
-    if not snap.take(1):
-        raise RuntimeError(
-            f"rebuild_ivf_index: source {src.path!r} is empty at v{head} — "
-            "nothing to train a quantizer on; drop the index tables instead"
-        )
-    centroids, _ = kmeans(snap, k=n_lists, n_iter=n_iter)
-    cents.overwrite(centroids.select("cid", "c_vec"))
-    cv = cents.version()
-    assigned = assign_clusters(snap, cents.read(as_of=cv)).localCheckpoint(
-        eager=True
-    )
-    boot_d2 = assigned.agg(F.avg("d2")).collect()[0][0]
-    index.overwrite(
-        assigned.select("vec_id", "embedding", "cid"),
-        partition_by=["cid"],
-        cluster_by=["vec_id"],
-        max_records_per_file=_CLUSTER_ROWS_PER_FILE,
-        props={
-            "ann.srcVersion": str(head),
-            "ann.ivf.nLists": str(n_lists),
-            "ann.ivf.bootMeanD2": repr(float(boot_d2)),
-            "ann.ivf.centsVersion": str(cv),
-        },
-    )
-    return head
+    """Atomic retrain-and-swap for a drifted quantizer (``_retrain``):
+    fresh centroids from the CURRENT source snapshot, swapped in with the
+    re-assigned lists in ONE commit. The old centroid snapshot stays
+    time-travel-readable until the cents table's vacuum retention passes
+    it (vacuum it only after every index pinning that generation has
+    moved on). Returns the new source watermark."""
+    return _retrain(_ivf(cents, n_lists, n_iter), src, index, "rebuild_ivf_index")
 
 
 def catchup_ivf_index(
@@ -456,168 +510,23 @@ def catchup_ivf_index(
     mode: str = "dv",
 ) -> int:
     """Incrementally-maintained IVF index — the float-ANN twin of
-    ``catchup_ann_index``. Bootstrap trains the coarse quantizer
-    (Lloyd's k-means, operators/clustering.py) on the initial snapshot
-    and FREEZES it: the centroid table (``cents``) becomes the index's
-    layout contract, exactly like ``ann.prefixDims`` for the Hamming
-    index. Increments assign only the CHANGED vectors to their nearest
-    frozen centroid (broadcast join, no corpus shuffle) and fold them
-    into the cid-partitioned list table with the same net-change keyed
-    merge. Probes (``ivf_index_topk``) equi-join probed list ids and
-    prune FILES via the partition predicate.
+    ``catchup_ann_index`` (``cdf_index.catchup``). Bootstrap trains the
+    coarse quantizer (Lloyd's k-means, operators/clustering.py) on the
+    initial snapshot and FREEZES it: the centroid table (``cents``)
+    becomes the index's layout contract, exactly like ``ann.prefixDims``
+    for the Hamming index. Increments assign only the CHANGED vectors to
+    their nearest frozen centroid and fold them into the cid-partitioned
+    list table with the same net-change keyed merge. Probes
+    (``ivf_index_topk``) equi-join probed list ids and prune FILES via
+    the partition predicate.
 
     Freezing is the honest contract: re-training per increment would
     re-assign the whole corpus (O(corpus) — a rebuild in disguise) and
     silently change every probe's geometry. When corpus drift degrades
-    recall, the DRIFT POLICY takes over: set the ``ann.ivf.maxDrift``
-    index property (e.g. "1.5") and every catch-up evaluates
-    ``ivf_index_drift`` after folding changes — past the threshold it
-    raises an actionable error (default) or, with
-    ``ann.ivf.onDrift=rebuild``, runs ``rebuild_ivf_index``'s atomic
-    retrain-and-swap (probes never see a half-built index; the
-    generation pin flips with the lists in one commit)."""
-    from .clustering import assign_clusters, kmeans
-
-    head = src.version()
-    done = int(index.properties().get("ann.srcVersion", -1))
-    if head <= done:
-        # no new commits — but a drifted-and-then-quiet corpus must
-        # still trip the policy (the drift accrued on PAST catch-ups);
-        # the check is free unless ann.ivf.maxDrift is set
-        if index.properties().get("ann.ivf.maxDrift"):
-            return _ivf_drift_policy(src, index, cents, n_iter)
-        return done
-    if index.version() < 0:
-        snap = src.read(as_of=head).select("vec_id", "embedding")
-        if not snap.take(1):
-            # Empty bootstrap snapshot: k-means on zero rows would freeze
-            # an EMPTY centroid table, and advancing the watermark past it
-            # would make every later increment's assign_clusters inner-join
-            # against zero centroids — inserts silently dropped forever
-            # (ADVICE r8). Defer: leave the watermark unset so the first
-            # NON-empty catch-up performs the real bootstrap.
-            return done
-        centroids, _ = kmeans(snap, k=n_lists, n_iter=n_iter)
-        cents.overwrite(centroids.select("cid", "c_vec"))
-        cents_version = cents.version()
-        # assign under the FINAL (frozen) centroids — kmeans() returns
-        # assignments made against the pre-update centroids of its last
-        # round, but the frozen-quantizer contract is the final table:
-        # every later increment and the scratch-equality check assign
-        # against it, so the bootstrap must too
-        assigned = assign_clusters(
-            snap, cents.read(as_of=cents_version)
-        ).localCheckpoint(eager=True)
-        boot_d2 = None
-        if assigned.take(1):
-            index.append(
-                assigned.select("vec_id", "embedding", "cid"),
-                partition_by=["cid"],
-                cluster_by=["vec_id"],
-                max_records_per_file=_CLUSTER_ROWS_PER_FILE,
-            )
-            index.set_clustering(["vec_id"])
-            index.set_bloom_index(
-                ["vec_id"], bits=_bloom_bits(_CLUSTER_ROWS_PER_FILE), hashes=7,
-                auto_size=True,
-            )  # see ann_index_apply_changes
-            boot_d2 = assigned.agg(F.avg("d2")).collect()[0][0]
-        props = {
-            "ann.srcVersion": str(head),
-            "ann.ivf.nLists": str(n_lists),
-            # generation pin: consumers time-travel the centroid table
-            # to THIS snapshot (see _pinned_cents)
-            "ann.ivf.centsVersion": str(cents_version),
-        }
-        if boot_d2 is not None:
-            # drift baseline: mean squared assignment distance at
-            # bootstrap — ivf_index_drift compares the current value
-            # against it to signal when the frozen quantizer needs a
-            # retrain/rebuild
-            props["ann.ivf.bootMeanD2"] = repr(float(boot_d2))
-        index.set_properties(props)
-        return _ivf_drift_policy(src, index, cents, n_iter)
-    centroids = _pinned_cents(index, cents).localCheckpoint(eager=True)
-    v = done
-    while v < head:
-        hi = head if step is None else min(v + step, head)
-        try:
-            changes = src.read_changes(v, hi)
-        except FileNotFoundError as e:
-            raise RuntimeError(
-                f"IVF index at {index.path!r} is stale beyond the source's "
-                f"CDF retention (watermark v{v}): rebuild — drop the index "
-                "and centroid tables and catchup_ivf_index() from scratch."
-            ) from e
-        net = _net_changes(changes)
-        ups = (
-            assign_clusters(
-                net.filter(F.col("_change_type") == "insert").select(
-                    "vec_id", "embedding"
-                ),
-                centroids,
-            )
-            .select("vec_id", "embedding", "cid")
-            .withColumn("_tombstone", F.lit(False))
-        )
-        dels = net.filter(F.col("_change_type") == "delete").select(
-            "vec_id",
-            F.col("embedding"),
-            F.lit(None).cast("int").alias("cid"),
-            F.lit(True).alias("_tombstone"),
-        )
-        source = ups.unionByName(dels).localCheckpoint(eager=True)
-        if source.take(1):
-            index.merge_into(
-                source,
-                on=["vec_id"],
-                delete_when="_tombstone",
-                partition_by=["cid"],
-                mode=mode,
-                source_materialized=True,
-            )
-        index.set_properties({"ann.srcVersion": str(hi)})
-        v = hi
-    maybe_compact_index(index, _CLUSTER_ROWS_PER_FILE)
-    return _ivf_drift_policy(src, index, cents, n_iter)
-
-
-def _ivf_drift_policy(src, index, cents, n_iter: int) -> int:
-    """Post-catch-up drift check (VERDICT r8 item 4): with
-    ``ann.ivf.maxDrift`` set, a drift ratio past it either raises an
-    actionable error (default policy) or triggers the atomic
-    retrain-and-swap (``ann.ivf.onDrift=rebuild``). Returns the index's
-    current source watermark either way."""
-    props = index.properties()
-    head = int(props.get("ann.srcVersion", -1))
-    max_drift = props.get("ann.ivf.maxDrift")
-    if not max_drift:
-        return head
-    mod = props.get("ann.ivf.driftSampleMod")
-    d = ivf_index_drift(index, cents, sample_mod=int(mod) if mod else None)
-    if mod and d["mean_d2"] is None:
-        # sample_mod larger than the corpus can leave the key sample
-        # empty (avg over zero rows = NULL); treating that as no-drift
-        # would silently disable the retrain guard forever — fall back
-        # to the exact probe (an empty-sample corpus is small enough
-        # that the exact probe is cheap by definition)
-        d = ivf_index_drift(index, cents)
-    ratio = d["drift_ratio"]
-    if ratio is None or ratio <= float(max_drift):
-        return head
-    if props.get("ann.ivf.onDrift", "error") == "rebuild":
-        n_lists = int(props.get("ann.ivf.nLists", 8))
-        return rebuild_ivf_index(
-            src, index, cents, n_lists=n_lists, n_iter=n_iter
-        )
-    raise RuntimeError(
-        f"IVF quantizer at {cents.path!r} has drifted {ratio:.2f}x past "
-        f"its bootstrap geometry (ann.ivf.maxDrift={max_drift}): probe "
-        "recall is degrading. Either rebuild_ivf_index(src, index, "
-        "cents) for an atomic retrain-and-swap, or set the "
-        "ann.ivf.onDrift=rebuild property to do it automatically at "
-        "catch-up time."
-    )
+    recall, the drift policy (``ann.ivf.maxDrift``/``ann.ivf.onDrift``,
+    see ``_drift_policy``) raises or runs ``rebuild_ivf_index`` after
+    each catch-up."""
+    return catchup(_ivf(cents, n_lists, n_iter, mode), src, index, step)
 
 
 def ivf_index_topk(
@@ -680,19 +589,7 @@ def assert_ivf_index_matches_scratch(index, cents, src) -> None:
     """Equality proof for the IVF variant: the incrementally-maintained
     list table equals a from-scratch assignment of the source head under
     the SAME frozen centroids. Raises on divergence."""
-    from .clustering import assign_clusters
-
-    scratch = assign_clusters(
-        src.read().select("vec_id", "embedding"), _pinned_cents(index, cents)
-    ).select("vec_id", "embedding", "cid")
-    got = index.read().select("vec_id", "embedding", "cid")
-    extra = got.exceptAll(scratch).count()
-    missing = scratch.exceptAll(got).count()
-    if extra or missing:
-        raise RuntimeError(
-            f"incremental IVF index diverged from scratch assignment: "
-            f"{extra} extra row(s), {missing} missing row(s)"
-        )
+    assert_matches_scratch(_ivf(cents), index, src)
 
 
 def ivf_index_drift(index, cents, sample_mod: int | None = None) -> dict:
@@ -708,17 +605,12 @@ def ivf_index_drift(index, cents, sample_mod: int | None = None) -> dict:
     = s restricts the probe to the deterministic ``xxhash64(vec_id) %
     s == 0`` key sample (the IVF-PQ twin's o(corpus) policy shape —
     the list table is corpus-sized too)."""
-    lists = index.read()
-    if sample_mod is not None and sample_mod > 1:
-        lists = lists.filter(
-            F.pmod(F.xxhash64(F.col("vec_id")), F.lit(int(sample_mod))) == 0
-        )
+    lists = _key_sample(index.read(), sample_mod)
     # the pinned centroids are model-sized: collect once so the drift
     # aggregate knows the dimension driver-side and the corpus-sized d2
     # runs through the codegen'd _sq_dist_expr twin (bit-identical fold;
     # the HOF form's interpreted lambdas cost ~1.5 s / 512k evals) over
     # a JVM local relation instead of a re-read of the cents table
-    from ..localrel import local_df
     from .clustering import _sq_dist_expr
 
     cent_rows = [
@@ -737,15 +629,7 @@ def ivf_index_drift(index, cents, sample_mod: int | None = None) -> dict:
         )
         .collect()[0]["m"]
     )
-    boot = index.properties().get("ann.ivf.bootMeanD2")
-    boot_f = float(boot) if boot is not None else None
-    return {
-        "mean_d2": float(cur) if cur is not None else None,
-        "bootstrap_mean_d2": boot_f,
-        "drift_ratio": (
-            float(cur) / boot_f if cur is not None and boot_f else None
-        ),
-    }
+    return _drift_report(cur, index.properties().get("ann.ivf.bootMeanD2"))
 
 
 # -- IVF-PQ variant: compressed lists, CDF-maintained ------------------------
@@ -770,27 +654,18 @@ def _unit_vecs(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return unit_vectors(df, vec_col)
 
 
-def _residual_vecs(vecs: DataFrame, cents_df: DataFrame) -> DataFrame:
-    """(vec_id, cid, embedding=residual): assign each (unit) vector to
-    its coarse centroid and subtract it — canonical IVFADC encodes the
-    RESIDUAL (vector − assigned centroid), not the raw vector (Jégou
-    et al. §IV-A): residuals concentrate around the origin regardless of
-    which list the vector sits in, so the shared per-subspace codebooks
-    spend their 4 bits on a far smaller dynamic range and the same
-    8-byte code buys a finer ADC shortlist. Assignment ties break to the
-    lowest cid (assign_clusters), identical to the list-placement
-    assignment — code and cid always agree."""
-    from .clustering import assign_clusters
-
-    return _residuals_from_assigned(assign_clusters(vecs, cents_df), cents_df)
-
-
 def _residuals_from_assigned(
     assigned: DataFrame, cents_df: DataFrame, keep_d2: bool = False
 ) -> DataFrame:
-    """Residuals from an ALREADY-assigned frame (vec_id, embedding, cid)
-    — callers that just paid the assignment pass (bootstrap, rebuild)
-    reuse it instead of assigning twice. ``keep_d2`` carries the
+    """(vec_id, cid, embedding=residual) from an assigned frame (vec_id,
+    embedding, cid): canonical IVFADC encodes the RESIDUAL (vector −
+    assigned centroid), not the raw vector (Jégou et al. §IV-A) —
+    residuals concentrate around the origin whichever list the vector
+    sits in, so the shared per-subspace codebooks spend their 4 bits on
+    a far smaller dynamic range and the same 8-byte code buys a finer
+    ADC shortlist. Assignment ties break to the lowest cid
+    (assign_clusters), as in list placement, so code and cid always
+    agree. ``keep_d2`` carries the
     assignment distance through so the bootstrap can take its drift
     baseline off THIS relation's one materialization instead of
     checkpointing the assignment separately (one corpus-sized
@@ -804,6 +679,17 @@ def _residuals_from_assigned(
             "embedding"
         ),
         *(["d2"] if keep_d2 else []),
+    )
+
+
+def _encode_residuals(res: DataFrame, model) -> DataFrame:
+    """(vec_id, cid, pq_code) from residual rows (vec_id, cid, embedding)."""
+    from .pq import pq_encode_arrow
+
+    return (
+        pq_encode_arrow(res.select("vec_id", "embedding"), model)
+        .join(res.select("vec_id", "cid"), "vec_id")
+        .select("vec_id", "cid", "pq_code")
     )
 
 
@@ -866,22 +752,154 @@ def _books_rows(spark, model: list[list[list[float]]]) -> DataFrame:
     return local_df(spark, rows, "j int, cid int, c_vec array<double>")
 
 
-def _load_books(books, as_of: int | None = None) -> list[list[list[float]]]:
-    """Driver-side codebook model from the books table (m·k·(d/m)
-    floats — a few KB, the same boundedness class as the centroid
-    table)."""
+def _pinned_books(index, books, as_of: int | None = None) -> list[list[list[float]]]:
+    """Driver-side codebook model of the generation the index pins (m·k·(d/m)
+    floats — a few KB, the same boundedness class as the centroid table)."""
+    pin = index.properties(as_of=as_of).get("ann.ivfpq.booksVersion")
     rows = {
         (r.j, r.cid): list(r.c_vec)
-        for r in books.read(as_of=as_of).collect()
+        for r in books.read(as_of=int(pin) if pin is not None else None).collect()
     }
     m = 1 + max(j for j, _ in rows)
     kq = 1 + max(c for _, c in rows)
     return [[rows[(j, c)] for c in range(kq)] for j in range(m)]
 
 
-def _pinned_books(index, books, as_of: int | None = None) -> list[list[list[float]]]:
-    pin = index.properties(as_of=as_of).get("ann.ivfpq.booksVersion")
-    return _load_books(books, as_of=int(pin) if pin is not None else None)
+def _train_ivfpq(
+    src, index, cents, books, head: int, n_lists: int, m: int, kq: int,
+    n_iter: int, sample: int,
+):
+    """Train and freeze both IVF-PQ models on the source snapshot at
+    ``head`` (coarse centroids -> ``cents``, per-subspace codebooks ->
+    ``books``) and encode the snapshot under them: the list rows plus
+    the properties pinning both generations. ``None`` when the snapshot
+    is empty (nothing to train on)."""
+    from .clustering import assign_clusters, kmeans
+    from .pq import train_pq_codebooks
+
+    snap = _unit_vecs(
+        src.read(as_of=head).select("vec_id", "embedding")
+    ).localCheckpoint(eager=True)
+    if not snap.take(1):
+        return None
+    centroids, _ = kmeans(snap, k=n_lists, n_iter=n_iter)
+    cents.overwrite(centroids.select("cid", "c_vec"))
+    cv = cents.version()
+    # RESIDUAL encoding (canonical IVFADC, see _residuals_from_assigned):
+    # the training input and every later encode derive from the SAME
+    # pinned cents generation, so codes never mix encodings across a
+    # retrain. ONE corpus-sized materialization: the residual checkpoint
+    # carries d2 so the drift baseline reads off it.
+    res = _residuals_from_assigned(
+        assign_clusters(snap, cents.read(as_of=cv)),
+        cents.read(as_of=cv),
+        keep_d2=True,
+    ).localCheckpoint(eager=True)
+    boot_d2 = res.agg(F.avg("d2")).collect()[0][0]
+    model = train_pq_codebooks(res, m=m, k=kq, n_iter=n_iter, sample=sample)
+    books.overwrite(_books_rows(index.spark, model))
+    bv = books.version()
+    rows = _encode_residuals(res, model).localCheckpoint(eager=True)
+    return rows, {
+        "ann.ivf.nLists": str(n_lists),
+        "ann.ivf.centsVersion": str(cv),
+        "ann.ivfpq.booksVersion": str(bv),
+        "ann.ivfpq.m": str(m),
+        "ann.ivfpq.k": str(kq),
+        # encoding is LAYOUT, frozen at bootstrap: every later
+        # encode/read derives it from here ("raw" = pre-residual
+        # indexes, which keep working unchanged)
+        "ann.ivfpq.encoding": "residual",
+        # drift baseline in the NORMALIZED space (the index's metric
+        # space): ivfpq_index_drift compares the current source
+        # snapshot's assignment distance against it
+        "ann.ivfpq.bootMeanD2": repr(float(boot_d2)),
+    }
+
+
+def _ivfpq_encode(index, ins: DataFrame, centroids: DataFrame, model) -> DataFrame:
+    """(vec_id, cid, pq_code) for the changed vectors under the PINNED
+    generations, in the index's frozen encoding."""
+    from .clustering import assign_clusters
+    from .pq import pq_encode_arrow
+
+    ins = _unit_vecs(ins)
+    if index.properties().get("ann.ivfpq.encoding") == "residual":
+        # encode (vector − assigned centroid) under the SAME pinned
+        # generation the bootstrap trained on. Assign+residual+encode is
+        # ONE Arrow pass landing directly in the merge-source checkpoint —
+        # the former shape paid two extra checkpoints and a join.
+        return _assign_encode_residual(ins, centroids, model)
+    ins = ins.localCheckpoint(eager=True)  # feeds encode AND assign
+    return (
+        pq_encode_arrow(ins, model)
+        .join(assign_clusters(ins, centroids).select("vec_id", "cid"), "vec_id")
+        .select("vec_id", "cid", "pq_code")
+    )
+
+
+def _ivfpq_scratch(index, cents, books, src) -> DataFrame:
+    """From-scratch assign+encode of the source head under the index's
+    pinned generations — the unfused shape, so the scratch check also
+    proves the fold's fused Arrow pass bit-identical to it."""
+    from .clustering import assign_clusters
+    from .pq import pq_encode_arrow
+
+    snap = _unit_vecs(src.read().select("vec_id", "embedding"))
+    model = _pinned_books(index, books)
+    cents_df = _pinned_cents(index, cents)
+    assigned = assign_clusters(snap, cents_df)
+    if index.properties().get("ann.ivfpq.encoding") == "residual":
+        res = _residuals_from_assigned(assigned, cents_df)
+        return _encode_residuals(res.localCheckpoint(eager=True), model)
+    return pq_encode_arrow(snap, model).join(
+        assigned.select("vec_id", "cid"), "vec_id"
+    )
+
+
+def _ivfpq(
+    cents,
+    books,
+    n_lists: int = 8,
+    m: int = 16,
+    kq: int = 16,
+    n_iter: int = 2,
+    sample: int = 4096,
+    mode: str = "dv",
+    models: tuple | None = None,
+) -> IndexFamily:
+    # the pinned generations (centroids, codebooks), read once per catch-up
+    pinned = functools.cache(
+        lambda index: models
+        or (
+            _pinned_cents(index, cents).localCheckpoint(eager=True),
+            _pinned_books(index, books),
+        )
+    )
+
+    def after(src, index):
+        return _drift_policy(
+            src, index, "ann.ivfpq",
+            lambda mod: ivfpq_index_drift(src, index, cents, sample_mod=mod),
+            lambda: rebuild_ivfpq_index(
+                src, index, cents, books, n_iter=n_iter, sample=sample
+            ),
+            f"IVF-PQ models at {cents.path!r}/{books.path!r}",
+            "rebuild_ivfpq_index(src, index, cents, books)",
+        )
+
+    return _vector_family(
+        "IVF-PQ index",
+        ("vec_id", "cid", "pq_code"),
+        "cid",
+        lambda index, ins: _ivfpq_encode(index, ins, *pinned(index)),
+        bootstrap=lambda src, index, head: _train_ivfpq(
+            src, index, cents, books, head, n_lists, m, kq, n_iter, sample
+        ),
+        scratch=lambda index, src: _ivfpq_scratch(index, cents, books, src),
+        mode=mode,
+        after=after,
+    )
 
 
 def catchup_ivfpq_index(
@@ -897,108 +915,16 @@ def catchup_ivfpq_index(
     step: int | None = None,
     mode: str = "dv",
 ) -> int:
-    """Incrementally-maintained IVF-PQ index: bootstrap trains and
-    FREEZES both models (coarse centroids -> ``cents``, per-subspace
-    codebooks -> ``books``), the list table stores (vec_id, cid,
-    pq_code) — 8 bytes of payload per vector — and every increment
-    assigns + encodes only the CHANGED vectors under the pinned
-    generations before the same net-change keyed merge as the raw-IVF
-    twin. Same deferred-empty-bootstrap and CDF-retention contracts."""
-    from .clustering import assign_clusters, kmeans
-    from .pq import pq_encode_arrow, train_pq_codebooks
-
-    head = src.version()
-    done = int(index.properties().get("ann.srcVersion", -1))
-    if head <= done:
-        # no new commits — but a drifted-and-then-quiet corpus must
-        # still trip the policy (see the raw-IVF twin); the check is
-        # free unless ann.ivfpq.maxDrift is set
-        if index.properties().get("ann.ivfpq.maxDrift"):
-            return _ivfpq_drift_policy(src, index, cents, books, n_iter, sample)
-        return done
-    if index.version() < 0:
-        snap = _unit_vecs(
-            src.read(as_of=head).select("vec_id", "embedding")
-        ).localCheckpoint(eager=True)
-        if not snap.take(1):
-            return done  # defer: first non-empty catch-up bootstraps
-        centroids, _ = kmeans(snap, k=n_lists, n_iter=n_iter)
-        cents.overwrite(centroids.select("cid", "c_vec"))
-        cv = cents.version()
-        # RESIDUAL encoding (canonical IVFADC): codebooks train on and
-        # codes quantize (vector − assigned centroid) — see
-        # _residual_vecs. Both the training input and every later encode
-        # derive from the SAME pinned cents generation, so codes never
-        # mix encodings across a retrain (generation pins gate reads).
-        # ONE corpus-sized materialization: the residual checkpoint
-        # carries d2 so the drift baseline reads off it (the former
-        # shape checkpointed the assignment AND the residuals).
-        res = _residuals_from_assigned(
-            assign_clusters(snap, cents.read(as_of=cv)),
-            cents.read(as_of=cv),
-            keep_d2=True,
-        ).localCheckpoint(eager=True)
-        boot_d2 = res.agg(F.avg("d2")).collect()[0][0]
-        model = train_pq_codebooks(
-            res, m=m, k=kq, n_iter=n_iter, sample=sample
-        )
-        books.overwrite(_books_rows(index.spark, model))
-        bv = books.version()
-        rows = (
-            pq_encode_arrow(res.select("vec_id", "embedding"), model)
-            .join(res.select("vec_id", "cid"), "vec_id")
-            .select("vec_id", "cid", "pq_code")
-            .localCheckpoint(eager=True)
-        )
-        index.append(
-            rows,
-            partition_by=["cid"],
-            cluster_by=["vec_id"],
-            max_records_per_file=_CLUSTER_ROWS_PER_FILE,
-        )
-        index.set_clustering(["vec_id"])
-        index.set_bloom_index(
-            ["vec_id"], bits=_bloom_bits(_CLUSTER_ROWS_PER_FILE), hashes=7,
-            auto_size=True,
-        )
-        props = {
-            "ann.srcVersion": str(head),
-            "ann.ivf.nLists": str(n_lists),
-            "ann.ivf.centsVersion": str(cv),
-            "ann.ivfpq.booksVersion": str(bv),
-            "ann.ivfpq.m": str(m),
-            "ann.ivfpq.k": str(kq),
-            # encoding is LAYOUT, frozen at bootstrap: every later
-            # encode/read derives it from here ("raw" = pre-residual
-            # indexes, which keep working unchanged)
-            "ann.ivfpq.encoding": "residual",
-        }
-        if boot_d2 is not None:
-            # drift baseline in the NORMALIZED space (the index's metric
-            # space): ivfpq_index_drift compares the current source
-            # snapshot's assignment distance against it
-            props["ann.ivfpq.bootMeanD2"] = repr(float(boot_d2))
-        index.set_properties(props)
-        return _ivfpq_drift_policy(src, index, cents, books, n_iter, sample)
-    centroids = _pinned_cents(index, cents).localCheckpoint(eager=True)
-    model = _pinned_books(index, books)
-    v = done
-    while v < head:
-        hi = head if step is None else min(v + step, head)
-        try:
-            changes = src.read_changes(v, hi)
-        except FileNotFoundError as e:
-            raise RuntimeError(
-                f"IVF-PQ index at {index.path!r} is stale beyond the "
-                f"source's CDF retention (watermark v{v}): rebuild — drop "
-                "the index/centroid/codebook tables and "
-                "catchup_ivfpq_index() from scratch."
-            ) from e
-        ivfpq_apply_changes(index, changes, centroids, model, mode=mode)
-        index.set_properties({"ann.srcVersion": str(hi)})
-        v = hi
-    maybe_compact_index(index, _CLUSTER_ROWS_PER_FILE)
-    return _ivfpq_drift_policy(src, index, cents, books, n_iter, sample)
+    """Incrementally-maintained IVF-PQ index (``cdf_index.catchup``):
+    bootstrap trains and FREEZES both models (coarse centroids ->
+    ``cents``, per-subspace codebooks -> ``books``), the list table
+    stores (vec_id, cid, pq_code) — 8 bytes of payload per vector — and
+    every increment assigns + encodes only the CHANGED vectors under the
+    pinned generations before the same net-change keyed merge as the
+    raw-IVF twin. Same deferred-empty-bootstrap, CDF-retention and drift
+    policy contracts (``ann.ivfpq.*``)."""
+    fam = _ivfpq(cents, books, n_lists, m, kq, n_iter, sample, mode)
+    return catchup(fam, src, index, step)
 
 
 def ivfpq_index_drift(src, index, cents, sample_mod: int | None = None) -> dict:
@@ -1023,25 +949,13 @@ def ivfpq_index_drift(src, index, cents, sample_mod: int | None = None) -> dict:
     own full assignment pass for free."""
     from .clustering import assign_clusters
 
-    head = _unit_vecs(src.read().select("vec_id", "embedding"))
-    if sample_mod is not None and sample_mod > 1:
-        head = head.filter(
-            F.pmod(F.xxhash64(F.col("vec_id")), F.lit(int(sample_mod))) == 0
-        )
+    head = _key_sample(_unit_vecs(src.read().select("vec_id", "embedding")), sample_mod)
     cur = (
         assign_clusters(head, _pinned_cents(index, cents))
         .agg(F.avg("d2").alias("m"))
         .collect()[0]["m"]
     )
-    boot = index.properties().get("ann.ivfpq.bootMeanD2")
-    boot_f = float(boot) if boot is not None else None
-    return {
-        "mean_d2": float(cur) if cur is not None else None,
-        "bootstrap_mean_d2": boot_f,
-        "drift_ratio": (
-            float(cur) / boot_f if cur is not None and boot_f else None
-        ),
-    }
+    return _drift_report(cur, index.properties().get("ann.ivfpq.bootMeanD2"))
 
 
 def rebuild_ivfpq_index(
@@ -1055,109 +969,18 @@ def rebuild_ivfpq_index(
     n_iter: int = 2,
     sample: int = 4096,
 ) -> int:
-    """Atomic retrain-and-swap for drifted IVF-PQ models: train a fresh
-    coarse quantizer AND fresh codebooks on the CURRENT source snapshot,
-    commit them to their tables (probes stay pinned to the old
-    generations), then overwrite the list table with the re-encode AND
-    both new generation pins in ONE commit — probes see entirely-old or
-    entirely-new, never a half-built index or a cross-generation
-    quantizer/codebook pairing. Geometry parameters default to the
-    index's own recorded values. Returns the new source watermark."""
-    from .clustering import assign_clusters, kmeans
-    from .pq import pq_encode_arrow, train_pq_codebooks
-
+    """Atomic retrain-and-swap for drifted IVF-PQ models (``_retrain``):
+    fresh coarse quantizer AND codebooks from the CURRENT source
+    snapshot, swapped in with the re-encoded lists in ONE commit. Retrain
+    always lands the residual encoding, so a raw-era index upgrades in
+    that commit. Geometry defaults to the index's recorded values.
+    Returns the new source watermark."""
     props = index.properties()
     n_lists = n_lists or int(props.get("ann.ivf.nLists", 8))
     m = m or int(props.get("ann.ivfpq.m", 16))
     kq = kq or int(props.get("ann.ivfpq.k", 16))
-    head = src.version()
-    snap = _unit_vecs(
-        src.read(as_of=head).select("vec_id", "embedding")
-    ).localCheckpoint(eager=True)
-    if not snap.take(1):
-        raise RuntimeError(
-            f"rebuild_ivfpq_index: source {src.path!r} is empty at "
-            f"v{head} — nothing to train on; drop the index tables instead"
-        )
-    centroids, _ = kmeans(snap, k=n_lists, n_iter=n_iter)
-    cents.overwrite(centroids.select("cid", "c_vec"))
-    cv = cents.version()
-    # retrain always lands the residual encoding (see the bootstrap);
-    # the atomic pin swap below is what lets a raw-era index upgrade
-    # in one commit — probes read old cents+books+codes+encoding or new,
-    # never a mix. One corpus-sized materialization (d2 rides the
-    # residual checkpoint), same as the bootstrap.
-    res = _residuals_from_assigned(
-        assign_clusters(snap, cents.read(as_of=cv)),
-        cents.read(as_of=cv),
-        keep_d2=True,
-    ).localCheckpoint(eager=True)
-    boot_d2 = res.agg(F.avg("d2")).collect()[0][0]
-    model = train_pq_codebooks(res, m=m, k=kq, n_iter=n_iter, sample=sample)
-    books.overwrite(_books_rows(index.spark, model))
-    bv = books.version()
-    rows = (
-        pq_encode_arrow(res.select("vec_id", "embedding"), model)
-        .join(res.select("vec_id", "cid"), "vec_id")
-        .select("vec_id", "cid", "pq_code")
-        .localCheckpoint(eager=True)
-    )
-    index.overwrite(
-        rows,
-        partition_by=["cid"],
-        cluster_by=["vec_id"],
-        max_records_per_file=_CLUSTER_ROWS_PER_FILE,
-        props={
-            "ann.srcVersion": str(head),
-            "ann.ivf.nLists": str(n_lists),
-            "ann.ivf.centsVersion": str(cv),
-            "ann.ivfpq.booksVersion": str(bv),
-            "ann.ivfpq.m": str(m),
-            "ann.ivfpq.k": str(kq),
-            "ann.ivfpq.encoding": "residual",
-            "ann.ivfpq.bootMeanD2": repr(float(boot_d2)),
-        },
-    )
-    return head
-
-
-def _ivfpq_drift_policy(src, index, cents, books, n_iter: int, sample: int) -> int:
-    """Post-catch-up drift check, IVF-PQ twin of ``_ivf_drift_policy``:
-    with ``ann.ivfpq.maxDrift`` set, a drift ratio past it raises an
-    actionable error (default) or triggers the atomic retrain-and-swap
-    (``ann.ivfpq.onDrift=rebuild``). ``ann.ivfpq.driftSampleMod`` = s
-    makes every policy probe a deterministic ~1/s key sample instead of
-    a full-corpus assignment — a policy CHECK must be o(corpus) at
-    billion scale (the ADVICE-r9 finding); unset keeps the exact probe
-    (small tables, certification gates)."""
-    props = index.properties()
-    head = int(props.get("ann.srcVersion", -1))
-    max_drift = props.get("ann.ivfpq.maxDrift")
-    if not max_drift:
-        return head
-    mod = props.get("ann.ivfpq.driftSampleMod")
-    d = ivfpq_index_drift(
-        src, index, cents, sample_mod=int(mod) if mod else None
-    )
-    if mod and d["mean_d2"] is None:
-        # empty hash sample (sample_mod > corpus): NULL mean must not
-        # pass the policy as no-drift — fall back to the exact probe
-        d = ivfpq_index_drift(src, index, cents)
-    ratio = d["drift_ratio"]
-    if ratio is None or ratio <= float(max_drift):
-        return head
-    if props.get("ann.ivfpq.onDrift", "error") == "rebuild":
-        return rebuild_ivfpq_index(
-            src, index, cents, books, n_iter=n_iter, sample=sample
-        )
-    raise RuntimeError(
-        f"IVF-PQ models at {cents.path!r}/{books.path!r} have drifted "
-        f"{ratio:.2f}x past their bootstrap geometry "
-        f"(ann.ivfpq.maxDrift={max_drift}): ADC recall is degrading. "
-        "Either rebuild_ivfpq_index(src, index, cents, books) for an "
-        "atomic retrain-and-swap, or set the ann.ivfpq.onDrift=rebuild "
-        "property to do it automatically at catch-up time."
-    )
+    fam = _ivfpq(cents, books, n_lists, m, kq, n_iter, sample)
+    return _retrain(fam, src, index, "rebuild_ivfpq_index")
 
 
 def ivfpq_apply_changes(
@@ -1168,52 +991,10 @@ def ivfpq_apply_changes(
     mode: str = "dv",
 ) -> None:
     """Fold one change-image batch into the IVF-PQ list table under the
-    PINNED generations: net-change reduce, encode + assign only the
-    changed vectors, one keyed merge. Shared by the batch catch-up loop
-    and the streaming twin — a re-delivered batch re-merges the same net
-    rows (content no-op; the effectively-once contract of keyed merges).
-    """
-    from .clustering import assign_clusters
-    from .pq import pq_encode_arrow
-
-    net = _net_changes(changes)
-    ins = _unit_vecs(
-        net.filter(F.col("_change_type") == "insert").select(
-            "vec_id", "embedding"
-        )
-    )
-    if index.properties().get("ann.ivfpq.encoding") == "residual":
-        # encode (vector − assigned centroid) under the SAME pinned
-        # generation the bootstrap trained on — the encoding property is
-        # layout, read from the index so batch and streaming folds agree.
-        # Assign+residual+encode is ONE Arrow pass (_assign_encode_residual)
-        # landing directly in the ``source`` checkpoint below — the former
-        # shape paid two extra checkpoints and a join for the same rows.
-        enc = _assign_encode_residual(ins, centroids, model)
-    else:
-        ins = ins.localCheckpoint(eager=True)  # feeds encode AND assign
-        enc = pq_encode_arrow(ins, model).join(
-            assign_clusters(ins, centroids).select("vec_id", "cid"), "vec_id"
-        )
-    ups = enc.select("vec_id", "cid", "pq_code").withColumn(
-        "_tombstone", F.lit(False)
-    )
-    dels = net.filter(F.col("_change_type") == "delete").select(
-        "vec_id",
-        F.lit(None).cast("int").alias("cid"),
-        F.lit(None).cast("bigint").alias("pq_code"),
-        F.lit(True).alias("_tombstone"),
-    )
-    source = ups.unionByName(dels).localCheckpoint(eager=True)
-    if source.take(1):
-        index.merge_into(
-            source,
-            on=["vec_id"],
-            delete_when="_tombstone",
-            partition_by=["cid"],
-            mode=mode,
-            source_materialized=True,
-        )
+    given (pinned) generations: net-change reduce, encode + assign only
+    the changed vectors, one keyed merge (``cdf_index.apply``). A
+    re-delivered batch re-merges the same net rows (content no-op)."""
+    apply(_ivfpq(None, None, mode=mode, models=(centroids, model)), index, changes)
 
 
 def stream_ivfpq_index_to_tx_table(
@@ -1226,68 +1007,36 @@ def stream_ivfpq_index_to_tx_table(
     available_now: bool = True,
     mode: str = "dv",
 ):
-    """Streaming maintenance for the IVF-PQ index: the source's change
-    feed as a native Structured Streaming source, each micro-batch folded
-    through :func:`ivfpq_apply_changes` under the index's pinned
-    quantizer/codebook generations. Offsets checkpoint with the stream,
-    so restarts resume after the last folded commit.
+    """Streaming maintenance for the IVF-PQ index (``cdf_index.stream``):
+    the source's change feed as a native Structured Streaming source,
+    each micro-batch folded under the index's pinned quantizer/codebook
+    generations, tailing from the index's ``ann.srcVersion`` watermark.
 
     Unlike the Hamming twin (quantization needs no training, so its
     stream can bootstrap from the snapshot images), the IVF-PQ models
     must be TRAINED on a corpus snapshot — bootstrap with
     :func:`catchup_ivfpq_index` first; an untrained index refuses the
     stream with an actionable error instead of silently encoding under a
-    missing codebook. A FRESH checkpoint tails the feed from the index's
-    own ``ann.srcVersion`` watermark (``startingVersion``) instead of an
-    initial snapshot: a snapshot cannot express deletions that landed
-    between the batch bootstrap and the stream start, so replaying one
-    over a pre-populated index would leave ghost rows. Each fold advances
-    the watermark, keeping batch catch-ups and checkpoint restarts
-    mutually consistent."""
-    from ..streaming.source import register_tx_source
+    missing codebook."""
     from ..txlog import TxTable
 
-    register_tx_source(spark)
-    props = TxTable(spark, index_dir).properties()
-    if props.get("ann.ivfpq.booksVersion") is None:
+    if TxTable(spark, index_dir).properties().get("ann.ivfpq.booksVersion") is None:
         raise RuntimeError(
             f"IVF-PQ index at {index_dir!r} has no trained codebooks: "
             "bootstrap with catchup_ivfpq_index() before starting "
             "streaming maintenance (model training needs a corpus "
             "snapshot; a stream micro-batch is not one)."
         )
-    feed = (
-        spark.readStream.format("txtable")
-        .option("readChangeFeed", "true")
-        # only honored by a FRESH checkpoint; resumes ignore it
-        .option("startingVersion", str(int(props["ann.srcVersion"]) + 1))
-        .load(src_dir)
+    return stream(
+        spark,
+        src_dir,
+        [(
+            index_dir,
+            lambda s: _ivfpq(TxTable(s, cents_dir), TxTable(s, books_dir), mode=mode),
+        )],
+        checkpoint_dir,
+        available_now,
     )
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        index = TxTable(s, index_dir)
-        cents = TxTable(s, cents_dir)
-        books = TxTable(s, books_dir)
-        centroids = _pinned_cents(index, cents).localCheckpoint(eager=True)
-        model = _pinned_books(index, books)
-        batch = batch.select(
-            "vec_id", "embedding", "_change_type", "_commit_version"
-        ).localCheckpoint(eager=True)
-        ivfpq_apply_changes(index, batch, centroids, model, mode=mode)
-        hi = batch.agg(F.max("_commit_version")).collect()[0][0]
-        if hi is not None and hi > int(index.properties().get("ann.srcVersion", -1)):
-            index.set_properties({"ann.srcVersion": str(hi)})
-        maybe_compact_index(index, _CLUSTER_ROWS_PER_FILE)
-
-    writer = (
-        feed.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def ivfpq_index_topk(
@@ -1343,8 +1092,6 @@ def ivfpq_index_topk(
     # both the per-query cut (broadcast below) and the cid union for
     # FILE pruning (the former shape paid a checkpoint job plus a
     # distinct-collect job for the same rows).
-    from ..localrel import local_df
-
     qid_t = dict(
         (f.name, f.dataType.simpleString()) for f in qn.schema.fields
     )["query_id"]
@@ -1359,6 +1106,13 @@ def ivfpq_index_topk(
         index.spark, probe_rows, f"query_id {qid_t}, cid int"
     )
     probe_ids = sorted({c for _, c in probe_rows})  # bounded by n_lists
+    lists = index.read(
+        predicates=[("cid", "in", probe_ids)], as_of=as_of
+    ).select("vec_id", "cid", "pq_code")
+    if allowed is not None:
+        # filtered search: scope candidates BEFORE the ADC ranking
+        # (distributed semi-join — the probed_hamming_topk convention)
+        lists = lists.join(allowed.select("vec_id").distinct(), "vec_id", "semi")
     if index.properties(as_of=as_of).get("ann.ivfpq.encoding") == "residual":
         # residual ADC (IVFADC proper): codes quantize (x − c_list), so
         # the LUT must be built from the SHIFTED query (q − c_list) — one
@@ -1380,26 +1134,10 @@ def ivfpq_index_topk(
             )
         )
         lut = _pq_lut(shifted, model, passthrough={"cid": "int"})
-        lists = index.read(
-            predicates=[("cid", "in", probe_ids)], as_of=as_of
-        ).select("vec_id", "cid", "pq_code")
-        if allowed is not None:
-            # filtered search: scope candidates BEFORE the ADC ranking
-            # (distributed semi-join — the probed_hamming_topk convention)
-            lists = lists.join(
-                allowed.select("vec_id").distinct(), "vec_id", "semi"
-            )
         adc = lists.join(F.broadcast(lut.drop("embedding")), "cid").select(
             "query_id", "vec_id", _adc_dist(len(model)).alias("adc_dist")
         )
     else:
-        lists = index.read(
-            predicates=[("cid", "in", probe_ids)], as_of=as_of
-        ).select("vec_id", "cid", "pq_code")
-        if allowed is not None:
-            lists = lists.join(
-                allowed.select("vec_id").distinct(), "vec_id", "semi"
-            )
         lut = _pq_lut(qn, model)
         # the probes join is the same per-query cut: a list row joins
         # only the queries that probed ITS cid (the file predicate above
@@ -1486,36 +1224,4 @@ def assert_ivfpq_index_matches_scratch(index, cents, books, src) -> None:
     """Equality proof: the incrementally-maintained (vec_id, cid,
     pq_code) table equals a from-scratch assign+encode of the source
     head under the SAME pinned generations."""
-    from .clustering import assign_clusters
-    from .pq import pq_encode_arrow
-
-    snap = _unit_vecs(src.read().select("vec_id", "embedding"))
-    model = _pinned_books(index, books)
-    if index.properties().get("ann.ivfpq.encoding") == "residual":
-        res = _residual_vecs(snap, _pinned_cents(index, cents)).localCheckpoint(
-            eager=True
-        )
-        scratch = (
-            pq_encode_arrow(res.select("vec_id", "embedding"), model)
-            .join(res.select("vec_id", "cid"), "vec_id")
-            .select("vec_id", "cid", "pq_code")
-        )
-    else:
-        scratch = (
-            pq_encode_arrow(snap, model)
-            .join(
-                assign_clusters(snap, _pinned_cents(index, cents)).select(
-                    "vec_id", "cid"
-                ),
-                "vec_id",
-            )
-            .select("vec_id", "cid", "pq_code")
-        )
-    got = index.read().select("vec_id", "cid", "pq_code")
-    extra = got.exceptAll(scratch).count()
-    missing = scratch.exceptAll(got).count()
-    if extra or missing:
-        raise RuntimeError(
-            f"incremental IVF-PQ index diverged from scratch build: "
-            f"{extra} extra row(s), {missing} missing row(s)"
-        )
+    assert_matches_scratch(_ivfpq(cents, books), index, src)

@@ -2,11 +2,14 @@
 table, fed by the table's own change feed — the production shape of the
 retrieval suite (operators/retrieval.py): query cost is O(postings of
 the query terms) via token-predicate file skipping instead of O(corpus)
-re-tokenization, and maintenance is O(changed
-docs' postings) via token-span-pruned keyed merges. Follows the same watermark / net-change / deferred-empty-
-bootstrap conventions as operators/ann_index.py. BM25 per Robertson &
-Zaragoza 2009; inverted-file maintenance shape per the published
-Lucene/ES segment model re-expressed on the lakehouse table layout.
+re-tokenization, and maintenance is O(changed docs' postings) via
+token-span-pruned keyed merges. The lifecycle (bootstrap, watermark,
+catch-up, stream, scratch check, commit protocol) is shared, in
+operators/cdf_index.py; this module holds what is BM25's own:
+tokenization, the exact scalar deltas and the top-k read. BM25 per
+Robertson & Zaragoza 2009; inverted-file maintenance shape per the
+published Lucene/ES segment model re-expressed on the lakehouse table
+layout.
 
 Index layout: ONE postings table, rows ``(doc_id, token, tf, dl)``
 with the doc length denormalized onto every posting (an update rewrites
@@ -24,10 +27,10 @@ layout prunes the same update to the handful of files its tokens land
 in. Corpus scalars (``bm25.nDocs``, ``bm25.totalDl``) are exact
 integers maintained in table properties by delta arithmetic — never
 recomputed by scanning — and every maintenance step commits scalars,
-postings, and the ``bm25.srcVersion`` watermark ATOMICALLY (``props``
-on the merge/append commit): delta arithmetic is only exactly-once if
-a crash cannot separate an applied delta from the watermark that marks
-it applied.
+postings, and the ``bm25.srcVersion`` watermark ATOMICALLY (the commit
+protocol of operators/cdf_index.py): delta arithmetic is only
+exactly-once if a crash cannot separate an applied delta from the
+watermark that marks it applied.
 
 Change-image semantics: an update renders as delete(pre-image) +
 insert(post-image) on the feed, so the index never needs to READ itself
@@ -40,12 +43,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from ..localrel import local_df
 from ..txlog import maybe_compact_index
+from .cdf_index import IndexFamily, apply, assert_matches_scratch, catchup, stream
 from .retrieval import BM25_B, BM25_K1, bm25_rank, bm25_score_from_stats
-from .textops import tokens
 
 ROWS_PER_FILE = 65536
 
@@ -54,32 +56,17 @@ ROWS_PER_FILE = 65536
 #: from this module, so the dependency cannot point the other way)
 PROBE_KEY_CAP = 100_000
 
-def _tf_rows(docs: DataFrame) -> DataFrame:
-    """(doc_id, token, tf, dl) for every doc with >=1 token."""
-    toks = tokens(docs)
-    tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    return tf.join(dl, "doc_id").select("doc_id", "token", "tf", "dl")
-
-
-def _tf_rows_tagged(docs: DataFrame) -> DataFrame:
-    """``_tf_rows`` keyed additionally by an old/new image tag ``_new`` —
-    one tokenize+aggregate pass covers BOTH sides of a change batch
-    (the per-side groupings are independent because ``_new`` is in every
-    key, so per-side tf/dl values are identical to two ``_tf_rows``
-    passes over the split inputs)."""
+def _tf_rows(docs: DataFrame, keys: tuple[str, ...] = ("doc_id",)) -> DataFrame:
+    """(doc_id, token, tf, dl) for every doc with >=1 token. Extra
+    ``keys`` (the old/new image tag ``_new``) group independently, so one
+    tokenize+aggregate pass covers both sides of a change batch with the
+    per-side values of two separate passes."""
     toks = docs.select(
-        "doc_id",
-        "_new",
-        F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token"),
+        *keys, F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token")
     ).filter(F.col("token") != "")
-    tf = toks.groupBy("doc_id", "_new", "token").agg(
-        F.count(F.lit(1)).alias("tf")
-    )
-    dl = toks.groupBy("doc_id", "_new").agg(F.count(F.lit(1)).alias("dl"))
-    return tf.join(dl, ["doc_id", "_new"]).select(
-        "doc_id", "_new", "token", "tf", "dl"
-    )
+    tf = toks.groupBy(*keys, "token").agg(F.count(F.lit(1)).alias("tf"))
+    dl = toks.groupBy(*keys).agg(F.count(F.lit(1)).alias("dl"))
+    return tf.join(dl, list(keys)).select(*keys, "token", "tf", "dl")
 
 
 def _doc_net_images(changes: DataFrame, text_col: str) -> DataFrame:
@@ -129,131 +116,127 @@ def _doc_net_images(changes: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def bm25_apply_changes(
-    index, changes: DataFrame, text_col: str, mode: str,
-    watermark: int | None = None,
-) -> None:
-    """Fold one change-image batch: tokenize the per-doc pre/post images,
-    full-outer them on (doc_id, token) — post-image postings upsert,
-    pre-image-only postings tombstone — and keyed-merge into the
-    token-clustered files. Corpus scalars adjust by exact integer deltas
-    computed from the same two relations, and land IN THE SAME commit as
-    the postings merge together with the ``bm25.srcVersion`` watermark
-    (``props`` on ``TxTable.merge_into``): the postings merge is
-    replay-idempotent but the scalar delta is NOT blindly re-addable, so
-    scalars and watermark must advance atomically with the rows — a crash
-    can never leave applied deltas without the watermark (which a restart
-    catch-up would re-apply, permanently skewing every idf/avgdl). A
-    batch with no posting change still advances the watermark (single
-    metadata commit; deltas are provably zero then — ``ups`` carries
-    EVERY post-image posting, so an empty source means no doc changed)."""
-    # ONE tokenize+aggregate pass over both image sides (side-tagged),
-    # pinned once — the former three eager checkpoints (net images, old
-    # postings, new postings) cost three full materialization jobs per
-    # batch for relations that are cheap filters of this single one
-    net = _doc_net_images(changes, text_col)
-    tagged = (
-        net.select(
+def _tagged_images(changes: DataFrame, text_col: str) -> DataFrame:
+    """(doc_id, _new, text): both sides of ``_doc_net_images`` as rows
+    tagged old (False) / new (True), so one pass over them serves both."""
+    return (
+        _doc_net_images(changes, text_col)
+        .select(
             "doc_id",
             F.explode(
                 F.array(
-                    F.struct(
-                        F.lit(False).alias("_new"),
-                        F.col("old_text").alias("text"),
-                    ),
-                    F.struct(
-                        F.lit(True).alias("_new"),
-                        F.col("new_text").alias("text"),
-                    ),
+                    F.struct(F.lit(False).alias("_new"), F.col("old_text").alias("text")),
+                    F.struct(F.lit(True).alias("_new"), F.col("new_text").alias("text")),
                 )
             ).alias("e"),
         )
         .filter(F.col("e.text").isNotNull())
-        .select("doc_id", F.col("e._new").alias("_new"), F.col("e.text").alias("text"))
+        .select("doc_id", "e._new", "e.text")
     )
-    posts = _tf_rows_tagged(tagged).localCheckpoint(eager=True)
-    old_post = posts.filter(~F.col("_new")).drop("_new")
-    new_post = posts.filter(F.col("_new")).drop("_new")
-    ups = new_post.withColumn("_tombstone", F.lit(False))
-    dels = (
-        old_post.select("doc_id", "token")
-        .join(new_post.select("doc_id", "token"), ["doc_id", "token"], "left_anti")
-        .select(
-            "doc_id",
-            "token",
-            F.lit(None).cast("long").alias("tf"),
-            F.lit(None).cast("long").alias("dl"),
-            F.lit(True).alias("_tombstone"),
+
+
+def _image_source(rows: DataFrame, key: list[str]) -> DataFrame:
+    """Merge source from ``_new``-tagged index rows of both image sides:
+    post-image rows upsert, keys only the pre-image holds tombstone."""
+    old = rows.filter(~F.col("_new")).drop("_new")
+    new = rows.filter(F.col("_new")).drop("_new")
+    dels = old.select(*key).join(new.select(*key), key, "left_anti")
+    return new.withColumn("_tombstone", F.lit(False)).unionByName(
+        dels.withColumn("_tombstone", F.lit(True)), allowMissingColumns=True
+    )
+
+
+def _scalars(posts: DataFrame, keys: tuple[str, ...] = ()) -> list:
+    """Exact corpus scalars per ``keys`` group of postings: ``n`` docs
+    with >=1 token and ``t`` total token mass."""
+    return (
+        posts.groupBy(*keys, "doc_id")
+        .agg(F.first("dl").alias("dl"))
+        .groupBy(*keys)
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum("dl"), F.lit(0)).alias("t"),
         )
+        .collect()
     )
+
+
+def _delta(index, changes: DataFrame, text_col: str):
+    """Merge source for one change-image batch — post-image postings
+    upsert, pre-image-only postings tombstone — plus the corpus scalars
+    adjusted by exact integer deltas from the same two relations. The
+    postings merge is replay-idempotent but a scalar delta is NOT blindly
+    re-addable, which is why ``cdf_index.apply`` commits the scalars with
+    the rows and the watermark. A batch with no posting change has provably zero
+    deltas (the source carries EVERY post-image posting)."""
+    # ONE tokenize+aggregate pass over both image sides, pinned once —
+    # the former three eager checkpoints (net images, old postings, new
+    # postings) cost three materialization jobs for cheap filters of it
+    posts = _tf_rows(_tagged_images(changes, text_col), ("doc_id", "_new"))
+    posts = posts.localCheckpoint(eager=True)
+    source = _image_source(posts, ["doc_id", "token"])
     # the source materialization and the scalar-delta aggregate are
-    # independent jobs over the SAME pinned side-tagged postings — run
-    # them concurrently (guide §2.6) so the pre-merge phase pays
-    # max(ckpt, deltas) instead of their sum.
-    # exact scalar deltas: docs-with-tokens and token mass, old vs new —
-    # computed BEFORE the merge so the merge commit can carry them.
-    # ONE job over the pinned side-tagged postings covers both sides
-    # (a missing side simply has no group row -> 0/0, the same totals
-    # the former per-side global aggregates returned)
+    # independent jobs over the SAME pinned postings — run them
+    # concurrently (guide §2.6) so the pre-merge phase pays
+    # max(ckpt, deltas) instead of their sum (a side missing from the
+    # batch has no group row -> 0/0)
     from concurrent.futures import ThreadPoolExecutor
 
-    def _deltas():
-        return (
-            posts.groupBy("_new", "doc_id")
-            .agg(F.first("dl").alias("dl"))
-            .groupBy("_new")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.sum("dl"), F.lit(0)).alias("t"),
-            )
-            .collect()
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_src = _pool.submit(
-            lambda: ups.unionByName(dels).localCheckpoint(eager=True)
-        )
-        _f_deltas = _pool.submit(_deltas)
-        source = _f_src.result()
-        side_rows = {r["_new"]: r for r in _f_deltas.result()}
-    _zero = {"n": 0, "t": 0}
-    o = side_rows.get(False, _zero)
-    n = side_rows.get(True, _zero)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_src = pool.submit(lambda: source.localCheckpoint(eager=True))
+        f_deltas = pool.submit(_scalars, posts, ("_new",))
+        source = f_src.result()
+        side = {r["_new"]: r for r in f_deltas.result()}
+    o, n = (side.get(k, {"n": 0, "t": 0}) for k in (False, True))
     cur = index.properties()
-    props = {
+    return source, {
         "bm25.nDocs": str(int(cur.get("bm25.nDocs", 0)) + n["n"] - o["n"]),
         "bm25.totalDl": str(int(cur.get("bm25.totalDl", 0)) + n["t"] - o["t"]),
     }
-    if watermark is not None:
-        props["bm25.srcVersion"] = str(watermark)
-    if index.snapshot()[2] is None and new_post.take(1):
-        # virgin index, stream-first: lay the bootstrap layout down with
-        # the FIRST data commit — (token, doc_id)-clustered files, then
-        # declared clustering + token blooms — exactly like
-        # catchup_bm25_index's bootstrap, or probe IN-predicates prune
-        # nothing and compact_layout has no clustering to restore (blooms
-        # only cover writes AFTER declaration, so the append itself must
-        # be clustered). Tombstones target rows the virgin table never
-        # held — provable no-ops, dropped.
-        index.append(
-            new_post,
-            cluster_by=["token", "doc_id"],
-            max_records_per_file=ROWS_PER_FILE,
-            props=props,
-        )
-        index.set_clustering(["token", "doc_id"])
-        index.set_bloom_index(["token"], auto_size=True)
-    elif source.take(1):
-        index.merge_into(
-            source,
-            on=["token", "doc_id"],
-            delete_when="_tombstone",
-            mode=mode,
-            props=props,
-            source_materialized=True,
-        )
-    else:
-        index.set_properties(props)
+
+
+def _bootstrap(src, head: int, text_col: str):
+    """Tokenize the snapshot straight into postings, with the exact
+    corpus scalars that ride the bootstrap commit."""
+    rows = _tf_rows(src.read(as_of=head).select("doc_id", text_col)).localCheckpoint(
+        eager=True
+    )
+    if not rows.take(1):
+        return None
+    stats = _scalars(rows)[0]
+    return rows, {"bm25.nDocs": str(stats["n"]), "bm25.totalDl": str(stats["t"])}
+
+
+def _family(text_col: str = "text", mode: str = "dv") -> IndexFamily:
+    return IndexFamily(
+        label="BM25 index",
+        watermark="bm25.srcVersion",
+        columns=("doc_id", text_col),
+        rows=("doc_id", "token", "tf", "dl"),
+        key=("token", "doc_id"),
+        cluster_by=("token", "doc_id"),
+        bloom={"cols": ["token"], "auto_size": True},
+        rows_per_file=ROWS_PER_FILE,
+        bootstrap=lambda src, index, head: _bootstrap(src, head, text_col),
+        delta=lambda index, changes: _delta(index, changes, text_col),
+        scratch=lambda index, src: _tf_rows(src.read().select("doc_id", text_col)),
+        mode=mode,
+        # module-level names, looked up per call (see IndexFamily)
+        fold=lambda index, changes, hi: bm25_apply_changes(
+            index, changes, text_col, mode, watermark=hi
+        ),
+        compact=lambda index, rows_per_file: maybe_compact_index(index, rows_per_file),
+    )
+
+
+def bm25_apply_changes(
+    index, changes: DataFrame, text_col: str, mode: str,
+    watermark: int | None = None,
+) -> None:
+    """Fold one change-image batch into the postings (``_delta``): the
+    postings merge, the corpus scalars and the ``bm25.srcVersion``
+    watermark land in one commit (``cdf_index.apply``)."""
+    apply(_family(text_col, mode), index, changes, watermark)
 
 
 def catchup_bm25_index(
@@ -264,62 +247,10 @@ def catchup_bm25_index(
     mode: str = "dv",
 ) -> int:
     """Advance the postings table from its ``bm25.srcVersion`` watermark
-    to the source head. Bootstrap tokenizes the snapshot straight into a
-    token-clustered, token-bloomed append; increments
-    pay change-feed machinery only."""
-    head = src.version()
-    done = int(index.properties().get("bm25.srcVersion", -1))
-    if head <= done:
-        return done
-    if index.version() < 0:
-        snap = src.read(as_of=head).select("doc_id", text_col)
-        rows = _tf_rows(snap).localCheckpoint(eager=True)
-        if not rows.take(1):
-            return done  # defer: first non-empty catch-up bootstraps
-        stats = (
-            rows.groupBy("doc_id")
-            .agg(F.first("dl").alias("dl"))
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("t"))
-            .collect()[0]
-        )
-        # scalars + watermark ride the bootstrap append itself: a crash
-        # can never leave committed postings without their exact corpus
-        # scalars (the clustering/bloom declarations after are layout
-        # policy only — losing them to a crash degrades pruning, not
-        # correctness, and the next compact restores them)
-        index.append(
-            rows,
-            cluster_by=["token", "doc_id"],
-            max_records_per_file=ROWS_PER_FILE,
-            props={
-                "bm25.srcVersion": str(head),
-                "bm25.nDocs": str(stats["n"]),
-                "bm25.totalDl": str(stats["t"]),
-            },
-        )
-        index.set_clustering(["token", "doc_id"])
-        index.set_bloom_index(["token"], auto_size=True)
-        return head
-    v = done
-    while v < head:
-        hi = head if step is None else min(v + step, head)
-        try:
-            changes = src.read_changes(v, hi)
-        except FileNotFoundError as e:
-            raise RuntimeError(
-                f"BM25 index at {index.path!r} is stale beyond the source's "
-                f"CDF retention (watermark v{v}): rebuild — drop the "
-                "postings table and catchup_bm25_index() from scratch."
-            ) from e
-        # scalars AND the advanced watermark land in the merge commit
-        # itself (atomic — see bm25_apply_changes)
-        bm25_apply_changes(index, changes, text_col, mode, watermark=hi)
-        v = hi
-    # catch-up-time auto-compaction: restore the (token, doc_id)
-    # clustered layout once trickle fragments exceed the relative
-    # threshold (metadata-only check; no-op at gate scale)
-    maybe_compact_index(index, ROWS_PER_FILE)
-    return head
+    to the source head (``cdf_index.catchup``). Bootstrap tokenizes the
+    snapshot straight into a token-clustered, token-bloomed append;
+    increments pay change-feed machinery only."""
+    return catchup(_family(text_col, mode), src, index, step)
 
 
 def bm25_index_topk(
@@ -393,21 +324,9 @@ def assert_bm25_index_matches_scratch(index, src, text_col: str = "text") -> Non
     """Equality proof: incrementally-maintained postings == a from-scratch
     tokenization of the source head, INCLUDING the denormalized dl and
     the exact corpus scalars."""
-    scratch = _tf_rows(src.read().select("doc_id", text_col))
-    got = index.read().select("doc_id", "token", "tf", "dl")
-    extra = got.exceptAll(scratch).count()
-    missing = scratch.exceptAll(got).count()
-    if extra or missing:
-        raise RuntimeError(
-            f"incremental BM25 index diverged from scratch tokenization: "
-            f"{extra} extra posting(s), {missing} missing posting(s)"
-        )
-    stats = (
-        scratch.groupBy("doc_id")
-        .agg(F.first("dl").alias("dl"))
-        .agg(F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("dl"), F.lit(0)).alias("t"))
-        .collect()[0]
-    )
+    fam = _family(text_col)
+    assert_matches_scratch(fam, index, src)
+    stats = _scalars(fam.scratch(index, src))[0]
     props = index.properties()
     if int(props["bm25.nDocs"]) != stats["n"] or int(props["bm25.totalDl"]) != (
         stats["t"]
@@ -428,47 +347,13 @@ def stream_bm25_index_to_tx_table(
     available_now: bool = True,
     mode: str = "dv",
 ):
-    """Streaming maintenance twin: tail the documents table's CDF and
-    fold micro-batches through ``bm25_apply_changes``. A fresh checkpoint
-    over an already-maintained index tails from the ``bm25.srcVersion``
-    watermark (a snapshot replay cannot express interim deletions AND
-    would double-count the scalar deltas); a virgin index bootstraps from
-    the snapshot images (tokenization needs no training). Folds advance
-    the watermark and skip batches at or below it, so scalar deltas are
-    exactly-once under replays."""
-    from ..streaming.source import register_tx_source
-    from ..txlog import TxTable
-
-    register_tx_source(spark)
-    wm = TxTable(spark, index_dir).properties().get("bm25.srcVersion")
-    reader = (
-        spark.readStream.format("txtable").option("readChangeFeed", "true")
+    """Streaming maintenance twin (``cdf_index.stream``): tail the
+    documents table's CDF from the ``bm25.srcVersion`` watermark (a
+    virgin index bootstraps from the snapshot images — tokenization
+    needs no training) and fold micro-batches through
+    ``bm25_apply_changes``; batches at or below the watermark are
+    skipped, so scalar deltas are exactly-once under replays."""
+    return stream(
+        spark, src_dir, [(index_dir, lambda s: _family(text_col, mode))],
+        checkpoint_dir, available_now,
     )
-    if wm is not None:
-        reader = reader.option("startingVersion", str(int(wm) + 1))
-    feed = reader.load(src_dir)
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        index = TxTable(batch.sparkSession, index_dir)
-        batch = batch.select(
-            "doc_id", text_col, "_change_type", "_commit_version"
-        ).localCheckpoint(eager=True)
-        done = int(index.properties().get("bm25.srcVersion", -1))
-        batch = batch.filter(F.col("_commit_version") > done)
-        if not batch.take(1):
-            return  # replayed at-or-below the watermark: exactly-once no-op
-        hi = batch.agg(F.max("_commit_version")).collect()[0][0]
-        # scalar deltas + watermark commit WITH the postings merge — a
-        # crash mid-fold leaves watermark un-advanced and deltas
-        # un-applied together, so the replayed batch is exactly-once
-        bm25_apply_changes(index, batch, text_col, mode, watermark=hi)
-        maybe_compact_index(index, ROWS_PER_FILE)
-
-    writer = (
-        feed.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

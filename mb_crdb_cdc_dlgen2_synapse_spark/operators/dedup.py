@@ -228,6 +228,13 @@ def lsh_candidates(
             )
         ).alias("band"),
     ).select("doc_id", "band.band_id", "band.band_key")
+    return _band_pairs(band_entries, max_bucket)
+
+
+def _band_pairs(band_entries: DataFrame, max_bucket: int | None) -> DataFrame:
+    """(doc_a, doc_b, n_shared_bands), doc_a < doc_b, from (doc_id,
+    band_id, band_key) entries: the hot-bucket guard of ``lsh_candidates``
+    then the (band_id, band_key) self-equi-join."""
     if max_bucket is not None:
         hot = (
             band_entries.groupBy("band_id", "band_key")

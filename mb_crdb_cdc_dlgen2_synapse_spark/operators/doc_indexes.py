@@ -1,9 +1,9 @@
 """Multiplexed document-side index maintenance: ONE read of the
 documents table's change feed fanning into BOTH document indexes — the
-BM25 inverted postings and the MinHash-LSH bands — inside a single
-``foreachBatch`` fold (VERDICT r11 item 1).
+BM25 inverted postings and the MinHash-LSH bands — through the shared
+fold driver (operators/cdf_index.py ``stream`` with two targets).
 
-Why one fold instead of the two independent streaming twins
+Why one fold instead of the two single-index streams
 (``bm25_index.stream_bm25_index_to_tx_table`` +
 ``lsh_index.stream_lsh_index_to_tx_table``, which remain available for
 single-index deployments):
@@ -11,36 +11,24 @@ single-index deployments):
 - **The CDF is read once.** Both document indexes consume the SAME
   change feed of the silver documents table (the reference pipeline's
   lake zone, /root/reference/README.md:173-192). Two streams read and
-  net-reduce every changed document twice; at 100 TB of corpus churn
-  that doubles the scan cost of index catch-up for no information gain.
-  The multiplexed fold materializes each micro-batch once
-  (``localCheckpoint``) and folds it into both indexes.
+  net-reduce every changed document twice; the multiplexed fold
+  materializes each micro-batch once and folds it into both indexes.
 - **The hybrid pair is aligned BY CONSTRUCTION.** Each fold advances
   both indexes to the batch's high commit version, so after every
-  micro-batch ``bm25.srcVersion == lsh.srcVersion`` — the two
-  document indexes can never sit at different source watermarks
-  mid-catch-up (with separate streams, alignment was scheduling luck;
-  the prefix-consistency race gate proved per-answer safety but not
-  pairwise coherence).
+  micro-batch ``bm25.srcVersion == lsh.srcVersion``.
 
-Exactly-once stays PER INDEX: each index filters the batch by its own
-watermark and commits its advanced watermark atomically with its merge
-(the ``bm25_apply_changes``/``lsh_apply_changes`` contract), so a crash
-between the two merges replays the batch with the already-folded index
-skipping (provable no-op) and the lagging index catching up. A
-staggered start (one index pre-built, one virgin) works the same way:
-the stream tails from the OLDEST watermark and the ahead index skips
-the prefix it already folded.
+Exactly-once stays PER INDEX (each index filters the batch by its own
+watermark, which commits with its merge), and a staggered start (one
+index maintained, one virgin) batch-catches the virgin one up first —
+see ``cdf_index.stream``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
-from ..txlog import maybe_compact_index
-from .bm25_index import ROWS_PER_FILE as _BM25_ROWS, bm25_apply_changes
-from .lsh_index import ROWS_PER_FILE as _LSH_ROWS, lsh_apply_changes
+from . import bm25_index, lsh_index
+from .cdf_index import stream
 
 
 def stream_document_indexes_to_tx_tables(
@@ -54,87 +42,14 @@ def stream_document_indexes_to_tx_tables(
     mode: str = "dv",
 ):
     """One CDF-tailing stream maintaining BOTH document indexes (see
-    module docstring).
-
-    Start-position resolution: an un-positioned txtable stream delivers
-    the CURRENT SNAPSHOT as its first batch — right for a virgin index
-    (the stream-first bootstrap of the single-index twins), but a
-    snapshot replay over an ALREADY-maintained index cannot express
-    interim deletions and would double-count BM25's scalar deltas. One
-    stream cannot serve both needs, so a MIXED start (one index virgin
-    or lagging, the other ahead) is pre-aligned with a synchronous
-    batch catch-up of the laggard to the source head before the stream
-    starts; the stream then tails both from the shared watermark + 1.
-    Only when BOTH indexes are virgin does the stream itself bootstrap
-    from the snapshot (clustered + bloomed first data commit, exactly
-    like the twins)."""
-    from ..streaming.source import register_tx_source
-    from ..txlog import TxTable
-    from .bm25_index import catchup_bm25_index
-    from .lsh_index import catchup_lsh_index
-
-    register_tx_source(spark)
-    src = TxTable(spark, src_dir)
-    sides = [
-        (TxTable(spark, bm25_dir), "bm25.srcVersion", catchup_bm25_index),
-        (TxTable(spark, lsh_dir), "lsh.srcVersion", catchup_lsh_index),
-    ]
-    wms = [t.properties().get(key) for t, key, _ in sides]
-    if any(w is None for w in wms) and any(w is not None for w in wms):
-        # MIXED start only (one index virgin, the other maintained):
-        # batch-bootstrap the virgin side to the head so one stream can
-        # serve both. Aligned or merely LAGGING pairs need no batch work
-        # — the stream tail (checkpoint offset, or startingVersion
-        # below) plus each index's own watermark filter handles them;
-        # batch-aligning those too would pay every fold twice (the
-        # catch-up AND the stream's redelivered no-op)
-        wms = [
-            str(catchup(src, t, text_col=text_col, mode=mode))
-            if w is None
-            else w
-            for (t, key, catchup), w in zip(sides, wms)
-        ]
-    reader = (
-        spark.readStream.format("txtable").option("readChangeFeed", "true")
+    module docstring)."""
+    return stream(
+        spark,
+        src_dir,
+        [
+            (bm25_dir, lambda s: bm25_index._family(text_col, mode)),
+            (lsh_dir, lambda s: lsh_index._family(text_col, mode)),
+        ],
+        checkpoint_dir,
+        available_now,
     )
-    if all(w is not None for w in wms):
-        reader = reader.option(
-            "startingVersion", str(min(int(w) for w in wms) + 1)
-        )
-    feed = reader.load(src_dir)
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        # materialized ONCE, consumed by both index merges — the whole
-        # point of the multiplexed fold
-        batch = batch.select(
-            "doc_id", text_col, "_change_type", "_commit_version"
-        ).localCheckpoint(eager=True)
-        if not batch.take(1):
-            return
-        for table_dir, key, apply_fn, rows_per_file in (
-            (bm25_dir, "bm25.srcVersion", bm25_apply_changes, _BM25_ROWS),
-            (lsh_dir, "lsh.srcVersion", lsh_apply_changes, _LSH_ROWS),
-        ):
-            index = TxTable(s, table_dir)
-            done = int(index.properties().get(key, -1))
-            part = batch.filter(F.col("_commit_version") > done)
-            if not part.take(1):
-                # this index already folded the whole batch (replay after
-                # a crash between the two merges, or a staggered start's
-                # ahead index): exactly-once no-op
-                continue
-            hi = part.agg(F.max("_commit_version")).collect()[0][0]
-            # each index's watermark + (scalars, for BM25) land IN the
-            # merge commit itself — the single-index twins' atomicity
-            apply_fn(index, part, text_col, mode, watermark=hi)
-            maybe_compact_index(index, rows_per_file)
-
-    writer = (
-        feed.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

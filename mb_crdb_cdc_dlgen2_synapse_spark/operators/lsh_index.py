@@ -3,9 +3,10 @@ documents table, fed by the table's own change feed — the dedup-family
 member of the CDF-maintained index quartet (Hamming ANN, IVF, IVF-PQ,
 BM25): near-dup candidate generation becomes a join against PRECOMPUTED
 band entries instead of re-shingling and re-signing the corpus per run,
-and maintenance is O(changed docs' bands) via keyed merges. Follows the
-same watermark / change-image / deferred-empty-bootstrap / atomic-props
-conventions as operators/bm25_index.py (the md5-based MinHash family is
+and maintenance is O(changed docs' bands) via keyed merges. The
+lifecycle (bootstrap, watermark, catch-up, stream, scratch check, commit
+protocol) is shared, in operators/cdf_index.py; this module
+holds the banding and the probes (the md5-based MinHash family is
 operators/dedup.py's — engine-portable, DuckDB-mirrorable bit-for-bit).
 
 Index layout: ONE bands table, rows ``(band_key, doc_id, band_id)`` —
@@ -27,16 +28,99 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..txlog import maybe_compact_index
-from .bm25_index import _doc_net_images
-from .dedup import _band_entries
+from .bm25_index import _image_source, _tagged_images
+from .cdf_index import IndexFamily, apply, assert_matches_scratch, catchup, stream
+from .dedup import _band_entries, _band_pairs
 
 ROWS_PER_FILE = 65536
+
+#: merge key = the FULL band row (see module docstring)
+_KEY = ("band_key", "doc_id", "band_id")
+
+#: signature geometry properties and their defaults — layout, frozen at
+#: bootstrap like ann.prefixDims
+_GEOMETRY = (("lsh.nHashes", 16), ("lsh.bands", 4), ("lsh.shingleK", 3))
 
 
 def _entries(docs: DataFrame, n_hashes: int, bands: int, shingle_k: int) -> DataFrame:
     return _band_entries(docs, n_hashes, bands, shingle_k).select(
         "band_key", "doc_id", "band_id"
+    )
+
+
+def _geometry(props: dict) -> tuple[int, int, int]:
+    """(nHashes, bands, shingleK) frozen in the index's properties."""
+    return tuple(int(props.get(k, d)) for k, d in _GEOMETRY)
+
+
+def _geometry_props(geom: tuple[int, int, int]) -> dict:
+    return {k: str(v) for (k, _d), v in zip(_GEOMETRY, geom)}
+
+
+def _delta(index, changes: DataFrame, text_col: str):
+    """Merge source for one change-image batch: band the per-doc pre/post
+    images, anti-join pre-only rows into tombstones, upsert post rows."""
+    props = index.properties()
+    geom = _geometry(props)
+    # ONE banding pass over both image sides: the doc key becomes a
+    # (id, _new) struct — every stage of the MinHash pipeline treats
+    # doc_id as an opaque grouping key, so per-side band entries are
+    # identical to two separate passes, and one eager checkpoint
+    # replaces the former three (net + old entries + new entries)
+    tagged = _tagged_images(changes, text_col).select(
+        F.struct(F.col("doc_id").alias("id"), "_new").alias("doc_id"), "text"
+    )
+    ent = (
+        _entries(tagged, *geom)
+        .select(
+            "band_key",
+            F.col("doc_id._new").alias("_new"),
+            F.col("doc_id.id").alias("doc_id"),
+            "band_id",
+        )
+        .localCheckpoint(eager=True)
+    )
+    source = _image_source(ent, list(_KEY)).localCheckpoint(eager=True)
+    # a virgin index maintained stream-first has no geometry recorded
+    # yet: persist the defaults WITH the first fold's commit, so every
+    # later fold/probe/scratch-check derives the same layout (geometry
+    # is a bootstrap-time contract, like ann.prefixDims)
+    return source, {} if "lsh.nHashes" in props else _geometry_props(geom)
+
+
+def _family(
+    text_col: str = "text",
+    mode: str = "dv",
+    geometry: tuple[int, int, int] = (16, 4, 3),
+) -> IndexFamily:
+    def bootstrap(src, index, head):
+        rows = _entries(
+            src.read(as_of=head).select("doc_id", text_col).withColumnRenamed(
+                text_col, "text"
+            ),
+            *geometry,
+        ).localCheckpoint(eager=True)
+        return (rows, _geometry_props(geometry)) if rows.take(1) else None
+
+    def scratch(index, src):
+        return _entries(
+            src.read().select("doc_id", text_col).withColumnRenamed(text_col, "text"),
+            *_geometry(index.properties()),
+        )
+
+    return IndexFamily(
+        label="LSH bands index",
+        watermark="lsh.srcVersion",
+        columns=("doc_id", text_col),
+        rows=_KEY,
+        key=_KEY,
+        cluster_by=_KEY[:2],
+        bloom={"cols": ["band_key"], "auto_size": True},
+        rows_per_file=ROWS_PER_FILE,
+        bootstrap=bootstrap,
+        delta=lambda index, changes: _delta(index, changes, text_col),
+        scratch=scratch,
+        mode=mode,
     )
 
 
@@ -47,106 +131,10 @@ def lsh_apply_changes(
     mode: str,
     watermark: int | None = None,
 ) -> None:
-    """Fold one change-image batch: band the per-doc pre/post images,
-    anti-join pre-only rows into tombstones, upsert post rows, one keyed
-    merge carrying the advanced ``lsh.srcVersion`` watermark in the SAME
-    commit (``props`` — the bm25_apply_changes atomicity contract; here
-    the index has no scalar counters, but a watermark split from its
-    merge would still replay a fold after a crash, a content no-op that
-    wastes a full merge). A batch with no band change advances the
-    watermark in a single metadata commit."""
-    props = index.properties()
-    n_hashes = int(props.get("lsh.nHashes", 16))
-    bands = int(props.get("lsh.bands", 4))
-    shingle_k = int(props.get("lsh.shingleK", 3))
-    # a virgin index maintained stream-first has no geometry recorded
-    # yet: persist the defaults WITH the first fold's commit, so every
-    # later fold/probe/scratch-check derives the same layout (geometry
-    # is a bootstrap-time contract, like ann.prefixDims)
-    geom = (
-        {}
-        if "lsh.nHashes" in props
-        else {
-            "lsh.nHashes": str(n_hashes),
-            "lsh.bands": str(bands),
-            "lsh.shingleK": str(shingle_k),
-        }
-    )
-    # ONE banding pass over both image sides: the doc key becomes a
-    # (id, _new) struct — every stage of the MinHash pipeline treats
-    # doc_id as an opaque grouping key, so per-side band entries are
-    # identical to two separate passes, and one eager checkpoint
-    # replaces the former three (net + old entries + new entries)
-    net = _doc_net_images(changes, text_col)
-    tagged = (
-        net.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit(False).alias("_new"),
-                        F.col("old_text").alias("text"),
-                    ),
-                    F.struct(
-                        F.lit(True).alias("_new"),
-                        F.col("new_text").alias("text"),
-                    ),
-                )
-            ).alias("e"),
-        )
-        .filter(F.col("e.text").isNotNull())
-        .select(
-            F.struct(
-                F.col("doc_id").alias("id"), F.col("e._new").alias("_new")
-            ).alias("doc_id"),
-            F.col("e.text").alias("text"),
-        )
-    )
-    ent = (
-        _entries(tagged, n_hashes, bands, shingle_k)
-        .select(
-            "band_key",
-            F.col("doc_id._new").alias("_new"),
-            F.col("doc_id.id").alias("doc_id"),
-            "band_id",
-        )
-        .localCheckpoint(eager=True)
-    )
-    old_e = ent.filter(~F.col("_new")).drop("_new")
-    new_e = ent.filter(F.col("_new")).drop("_new")
-    keys = ["band_key", "doc_id", "band_id"]
-    ups = new_e.withColumn("_tombstone", F.lit(False))
-    dels = old_e.join(new_e, keys, "left_anti").withColumn(
-        "_tombstone", F.lit(True)
-    )
-    source = ups.unionByName(dels).localCheckpoint(eager=True)
-    wm = dict(geom)
-    if watermark is not None:
-        wm["lsh.srcVersion"] = str(watermark)
-    if index.snapshot()[2] is None and new_e.take(1):
-        # virgin index, stream-first: the FIRST data commit must lay the
-        # same layout down as catchup's bootstrap — (band_key, doc_id)-
-        # clustered files, then declared clustering + band_key blooms —
-        # or every later probe's IN-predicate prunes nothing and
-        # compact_layout has no clustering to restore (blooms only apply
-        # to writes AFTER declaration, so the append must be clustered
-        # itself and the declarations follow it). Tombstones target rows
-        # the virgin table never held — provable no-ops, dropped.
-        index.append(
-            new_e,
-            cluster_by=keys[:2],
-            max_records_per_file=ROWS_PER_FILE,
-            props=wm or None,
-        )
-        index.set_clustering(keys[:2])
-        index.set_bloom_index(["band_key"], auto_size=True)
-    elif source.take(1):
-        index.merge_into(
-            source, on=keys, delete_when="_tombstone", mode=mode,
-            props=wm or None, source_materialized=True,
-        )
-    elif wm:
-        index.set_properties(wm)
+    """Fold one change-image batch (``_delta``): one keyed merge carrying
+    the advanced ``lsh.srcVersion`` watermark in the same commit
+    (``cdf_index.apply``)."""
+    apply(_family(text_col, mode), index, changes, watermark)
 
 
 def catchup_lsh_index(
@@ -160,53 +148,14 @@ def catchup_lsh_index(
     mode: str = "dv",
 ) -> int:
     """Advance the bands table from its ``lsh.srcVersion`` watermark to
-    the source head. Bootstrap bands the snapshot straight into a
-    (band_key, doc_id)-clustered, band_key-bloomed append; increments
-    pay change-feed machinery only. The signature geometry (nHashes /
-    bands / shingleK) freezes at bootstrap as table properties — it is
-    layout, like ann.prefixDims: changing it means rebuilding."""
-    head = src.version()
-    done = int(index.properties().get("lsh.srcVersion", -1))
-    if head <= done:
-        return done
-    if index.version() < 0:
-        rows = _entries(
-            src.read(as_of=head).select("doc_id", text_col).withColumnRenamed(
-                text_col, "text"
-            ),
-            n_hashes, bands, shingle_k,
-        ).localCheckpoint(eager=True)
-        if not rows.take(1):
-            return done  # defer: first non-empty catch-up bootstraps
-        index.append(
-            rows,
-            cluster_by=["band_key", "doc_id"],
-            max_records_per_file=ROWS_PER_FILE,
-            props={
-                "lsh.srcVersion": str(head),
-                "lsh.nHashes": str(n_hashes),
-                "lsh.bands": str(bands),
-                "lsh.shingleK": str(shingle_k),
-            },
-        )
-        index.set_clustering(["band_key", "doc_id"])
-        index.set_bloom_index(["band_key"], auto_size=True)
-        return head
-    v = done
-    while v < head:
-        hi = head if step is None else min(v + step, head)
-        try:
-            changes = src.read_changes(v, hi)
-        except FileNotFoundError as e:
-            raise RuntimeError(
-                f"LSH bands index at {index.path!r} is stale beyond the "
-                f"source's CDF retention (watermark v{v}): rebuild — drop "
-                "the bands table and catchup_lsh_index() from scratch."
-            ) from e
-        lsh_apply_changes(index, changes, text_col, mode, watermark=hi)
-        v = hi
-    maybe_compact_index(index, ROWS_PER_FILE)
-    return head
+    the source head (``cdf_index.catchup``). Bootstrap bands the snapshot
+    straight into a (band_key, doc_id)-clustered, band_key-bloomed
+    append; increments pay change-feed machinery only. The signature
+    geometry (nHashes / bands / shingleK) freezes at bootstrap as table
+    properties — it is layout, like ann.prefixDims: changing it means
+    rebuilding."""
+    fam = _family(text_col, mode, (n_hashes, bands, shingle_k))
+    return catchup(fam, src, index, step)
 
 
 def lsh_index_pairs(index, max_bucket: int | None = 4096) -> DataFrame:
@@ -218,28 +167,8 @@ def lsh_index_pairs(index, max_bucket: int | None = 4096) -> DataFrame:
     anti-joined out — mass-identical docs stay caught by exact dedup).
     Returns (doc_a, doc_b, n_shared_bands), doc_a < doc_b — identical
     to ``lsh_candidates`` over the same corpus by construction."""
-    entries = index.read().select("doc_id", "band_id", "band_key")
-    if max_bucket is not None:
-        hot = (
-            entries.groupBy("band_id", "band_key")
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .filter(F.col("__bsz") > max_bucket)
-            .select("band_id", "band_key")
-        )
-        entries = entries.join(
-            F.broadcast(hot), ["band_id", "band_key"], "left_anti"
-        )
-    a = entries.alias("a")
-    b = entries.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
+    return _band_pairs(
+        index.read().select("doc_id", "band_id", "band_key"), max_bucket
     )
 
 
@@ -272,9 +201,7 @@ def lsh_index_probe(
     props = index.properties(as_of=as_of)
     qe = _entries(
         batch.select("doc_id", text_col).withColumnRenamed(text_col, "text"),
-        int(props.get("lsh.nHashes", 16)),
-        int(props.get("lsh.bands", 4)),
-        int(props.get("lsh.shingleK", 3)),
+        *_geometry(props),
     ).localCheckpoint(eager=True)
     keys = sorted(
         r.band_key
@@ -303,21 +230,7 @@ def lsh_index_probe(
 def assert_lsh_index_matches_scratch(index, src, text_col: str = "text") -> None:
     """Equality proof: incrementally-maintained band entries == a
     from-scratch banding of the source head."""
-    props = index.properties()
-    scratch = _entries(
-        src.read().select("doc_id", text_col).withColumnRenamed(text_col, "text"),
-        int(props.get("lsh.nHashes", 16)),
-        int(props.get("lsh.bands", 4)),
-        int(props.get("lsh.shingleK", 3)),
-    )
-    got = index.read().select("band_key", "doc_id", "band_id")
-    extra = got.exceptAll(scratch).count()
-    missing = scratch.exceptAll(got).count()
-    if extra or missing:
-        raise RuntimeError(
-            f"incremental LSH bands index diverged from scratch banding: "
-            f"{extra} extra row(s), {missing} missing row(s)"
-        )
+    assert_matches_scratch(_family(text_col), index, src)
 
 
 def stream_lsh_index_to_tx_table(
@@ -329,43 +242,12 @@ def stream_lsh_index_to_tx_table(
     available_now: bool = True,
     mode: str = "dv",
 ):
-    """Streaming maintenance twin: tail the documents table's CDF and
-    fold micro-batches through ``lsh_apply_changes``. A fresh checkpoint
-    over an already-maintained index tails from the ``lsh.srcVersion``
-    watermark (a snapshot replay cannot express interim deletions); a
-    virgin index bootstraps from the snapshot images (banding needs no
-    training). Folds advance the watermark in the merge commit and skip
-    batches at or below it — exactly-once under replays."""
-    from ..streaming.source import register_tx_source
-    from ..txlog import TxTable
-
-    register_tx_source(spark)
-    wm = TxTable(spark, index_dir).properties().get("lsh.srcVersion")
-    reader = (
-        spark.readStream.format("txtable").option("readChangeFeed", "true")
+    """Streaming maintenance twin (``cdf_index.stream``): tail the
+    documents table's CDF from the ``lsh.srcVersion`` watermark (a
+    virgin index bootstraps from the snapshot images — banding needs no
+    training) and fold micro-batches with the batch path's merge,
+    exactly-once under replays."""
+    return stream(
+        spark, src_dir, [(index_dir, lambda s: _family(text_col, mode))],
+        checkpoint_dir, available_now,
     )
-    if wm is not None:
-        reader = reader.option("startingVersion", str(int(wm) + 1))
-    feed = reader.load(src_dir)
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        index = TxTable(batch.sparkSession, index_dir)
-        batch = batch.select(
-            "doc_id", text_col, "_change_type", "_commit_version"
-        ).localCheckpoint(eager=True)
-        done = int(index.properties().get("lsh.srcVersion", -1))
-        batch = batch.filter(F.col("_commit_version") > done)
-        if not batch.take(1):
-            return  # replayed at-or-below the watermark: exactly-once no-op
-        hi = batch.agg(F.max("_commit_version")).collect()[0][0]
-        lsh_apply_changes(index, batch, text_col, mode, watermark=hi)
-        maybe_compact_index(index, ROWS_PER_FILE)
-
-    writer = (
-        feed.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -254,6 +254,11 @@ def lsh_table_keys(
     import pyarrow as pa
 
     if seeds is None:
+        if n_tables is None:
+            raise ValueError(
+                "lsh_table_keys needs n_tables or seeds: pass n_tables to "
+                "derive one seed per table, or seeds to name them"
+            )
         seeds = [f"{seed_prefix}{t}" for t in range(n_tables)]
     n_tables = len(seeds)
     # W[d, t*n_planes + i] = plane i of table t, coefficient d

@@ -43,7 +43,9 @@ def read_raw_lines(spark: SparkSession, paths: str | Sequence[str]) -> DataFrame
     """
     if isinstance(paths, str):
         paths = [paths]
-    return spark.read.text(*paths).withColumnRenamed("value", "line")
+    # one list argument: ``text(*paths)`` would bind a second path to
+    # ``wholetext``
+    return spark.read.text(list(paths)).withColumnRenamed("value", "line")
 
 
 def read_typed_envelopes(
@@ -58,7 +60,9 @@ def read_typed_envelopes(
     """
     if isinstance(paths, str):
         paths = [paths]
-    df = spark.read.schema(cdc_envelope_schema(after_schema)).json(*paths)
+    # one list argument: ``json(*paths)`` would bind a second path to
+    # ``schema``
+    df = spark.read.schema(cdc_envelope_schema(after_schema)).json(list(paths))
     return df.withColumn(
         "updated_ts",
         F.timestamp_micros(

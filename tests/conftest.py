@@ -46,7 +46,8 @@ def pytest_addoption(parser):
 
 
 def pytest_collection_modifyitems(config, items):
-    if config.getoption("--run-slow") or os.environ.get("RUN_SLOW"):
+    run_slow = os.environ.get("RUN_SLOW", "").strip().lower()
+    if config.getoption("--run-slow") or run_slow in ("1", "true", "yes"):
         return
     slow = _slow_nodeids()
     if not slow:

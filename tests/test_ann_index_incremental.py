@@ -425,32 +425,161 @@ def test_ivf_drift_metric_signals_corpus_shift(spark, tmp_path):
     assert d1["drift_ratio"] > 1.5  # retrain-threshold territory
 
 
-def test_ivf_bootstrap_on_empty_snapshot_defers(spark, tmp_path):
-    """Bootstrap over an EMPTY snapshot must neither freeze an empty
-    centroid table nor advance the watermark (ADVICE r8: doing both made
-    every later increment inner-join against zero centroids, silently
-    dropping inserts forever). The first non-empty catch-up performs the
-    real bootstrap."""
-    from mb_crdb_cdc_dlgen2_synapse_spark.operators.ann_index import (
-        assert_ivf_index_matches_scratch,
-        catchup_ivf_index,
+def _docs(spark, lo: int, hi: int):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("doc_id"),
+        F.concat(
+            F.lit("a document about lakes and vectors number "),
+            F.col("id").cast("string"),
+            F.lit(" topic "),
+            (F.col("id") % 7).cast("string"),
+        ).alias("text"),
     )
 
+
+def _vecs(spark, lo: int, hi: int):
+    return synthetic_embeddings(spark, hi).filter(F.col("vec_id") >= lo)
+
+
+def _families():
+    """The five CDF-maintained index families, one lifecycle shape each:
+    name -> (source rows, catch-up, scratch check, watermark property,
+    declared clustering, bloom column). ``aux`` holds the model tables
+    (IVF centroids, IVF-PQ codebooks)."""
+    from mb_crdb_cdc_dlgen2_synapse_spark.operators import ann_index as ai
+    from mb_crdb_cdc_dlgen2_synapse_spark.operators import bm25_index as bi
+    from mb_crdb_cdc_dlgen2_synapse_spark.operators import lsh_index as li
+
+    return {
+        "bm25": (
+            _docs,
+            lambda src, idx, aux: bi.catchup_bm25_index(src, idx),
+            lambda idx, src, aux: bi.assert_bm25_index_matches_scratch(idx, src),
+            "bm25.srcVersion", ["token", "doc_id"], "token",
+        ),
+        "lsh": (
+            _docs,
+            lambda src, idx, aux: li.catchup_lsh_index(src, idx),
+            lambda idx, src, aux: li.assert_lsh_index_matches_scratch(idx, src),
+            "lsh.srcVersion", ["band_key", "doc_id"], "band_key",
+        ),
+        "ann": (
+            _vecs,
+            lambda src, idx, aux: ai.catchup_ann_index(src, idx, prefix_bits=4),
+            lambda idx, src, aux: ai.assert_index_matches_scratch(idx, src),
+            "ann.srcVersion", ["vec_id"], "vec_id",
+        ),
+        "ivf": (
+            _vecs,
+            lambda src, idx, aux: ai.catchup_ivf_index(
+                src, idx, aux["cents"], n_lists=4
+            ),
+            lambda idx, src, aux: ai.assert_ivf_index_matches_scratch(
+                idx, aux["cents"], src
+            ),
+            "ann.srcVersion", ["vec_id"], "vec_id",
+        ),
+        "ivfpq": (
+            _vecs,
+            lambda src, idx, aux: ai.catchup_ivfpq_index(
+                src, idx, aux["cents"], aux["books"], n_lists=4, m=8
+            ),
+            lambda idx, src, aux: ai.assert_ivfpq_index_matches_scratch(
+                idx, aux["cents"], aux["books"], src
+            ),
+            "ann.srcVersion", ["vec_id"], "vec_id",
+        ),
+    }
+
+
+def _aux(spark, tmp_path):
+    return {n: TxTable(spark, str(tmp_path / n)) for n in ("cents", "books")}
+
+
+@pytest.mark.parametrize("family", ["bm25", "lsh", "ann", "ivf", "ivfpq"])
+def test_empty_bootstrap_defers_then_lays_layout_down(spark, tmp_path, family):
+    """Bootstrap over an EMPTY snapshot commits nothing — no watermark,
+    no frozen model (k-means on zero rows would freeze an empty centroid
+    table and drop every later insert), no schema-only index — so the
+    first NON-empty catch-up performs the real bootstrap, with the same
+    layout a non-empty bootstrap declares and its properties in the
+    first data commit. (The Hamming index used to commit its properties
+    over the empty snapshot and then grow without clustering or blooms.)"""
+    rows, catch, check, wm, clustering, bloom = _families()[family]
+    aux = _aux(spark, tmp_path)
     src = TxTable(spark, str(tmp_path / "src"))
-    src.append(synthetic_embeddings(spark, 20))
+    src.append(rows(spark, 0, 20))
+    key = src.read().columns[0]
     gone = src.read().withColumn("_g", F.lit(True))
-    src.merge_into(gone, on=["vec_id"], delete_when="_g", mode="dv")
+    src.merge_into(gone, on=[key], delete_when="_g", mode="dv")
     index = TxTable(spark, str(tmp_path / "idx"))
-    cents = TxTable(spark, str(tmp_path / "cents"))
-    catchup_ivf_index(src, index, cents, n_lists=4)
+    catch(src, index, aux)
     assert index.version() < 0  # nothing committed, watermark unset
-    assert cents.version() < 0  # no empty centroid table frozen
-    # first NON-empty catch-up bootstraps for real; inserts are indexed
-    src.append(synthetic_embeddings(spark, 120).filter(F.col("vec_id") >= 20))
-    catchup_ivf_index(src, index, cents, n_lists=4)
-    assert cents.read().count() == 4
-    assert index.read().count() == 100
-    assert_ivf_index_matches_scratch(index, cents, src)
+    assert all(t.version() < 0 for t in aux.values())  # no model frozen
+    src.append(rows(spark, 20, 120))
+    catch(src, index, aux)
+    # the real bootstrap: a non-empty model, and every insert indexed
+    # (the scratch check alone would also pass over an empty model)
+    assert index.read().select(key).distinct().count() == 100
+    if family in ("ivf", "ivfpq"):
+        assert aux["cents"].read().count() == 4
+    if family == "ivfpq":
+        assert aux["books"].read().count() > 0
+    check(index, src, aux)
+    assert index.clustering() == clustering
+    assert set(index.bloom_index()) == {bloom}
+    first = index.history()[0]
+    assert first["op"] == "append"
+    assert first["props"][wm] == str(src.version())
+
+
+@pytest.mark.parametrize("family", ["bm25", "lsh", "ann", "ivf", "ivfpq"])
+def test_fold_is_one_commit_carrying_the_watermark(spark, tmp_path, family):
+    """The commit protocol every family shares: a (non-compacting)
+    catch-up fold adds exactly ONE index commit and that commit carries
+    the advanced watermark — a crash can never leave folded rows behind
+    an old watermark. A source commit that changes no row folds as one
+    metadata commit."""
+    rows, catch, check, wm, _clustering, _bloom = _families()[family]
+    aux = _aux(spark, tmp_path)
+    src = TxTable(spark, str(tmp_path / "src"))
+    src.append(rows(spark, 0, 120))
+    index = TxTable(spark, str(tmp_path / "idx"))
+    catch(src, index, aux)
+    # a compaction is its own (content-identical) commit by design; keep
+    # it out of the count
+    index.set_properties({"autoCompact.index": "false"})
+    # three source commits (updates, deletes, inserts), one fold
+    key = src.read().columns[0]
+    upd = rows(spark, 0, 120).filter(F.col(key) % 5 == 0).join(
+        src.read().select(key), key
+    )
+    upd = upd.select(
+        key,
+        *[
+            F.transform(c, lambda x: -x).alias(c) if c == "embedding"
+            else F.concat(F.col(c), F.lit(" revised")).alias(c)
+            for c in upd.columns if c != key
+        ],
+    )
+    src.merge_into(upd, on=[key], mode="dv")
+    gone = src.read().filter(F.col(key) % 9 == 4).withColumn("_g", F.lit(True))
+    src.merge_into(gone, on=[key], delete_when="_g", mode="dv")
+    src.append(rows(spark, 120, 150))
+    v0 = index.version()
+    catch(src, index, aux)
+    assert index.version() == v0 + 1
+    last = index.history()[-1]
+    assert last["op"] not in ("compact", "set_properties")
+    assert last["props"][wm] == str(src.version())
+    check(index, src, aux)
+    # a source commit that changes no row: one metadata commit
+    src.set_properties({"owner": "ingest"})
+    v0 = index.version()
+    catch(src, index, aux)
+    assert index.version() == v0 + 1
+    assert index.history()[-1]["op"] == "set_properties"
+    assert index.properties()[wm] == str(src.version())
 
 
 def test_source_vacuum_within_retention_does_not_break_catchup(spark, tmp_path):
@@ -1032,9 +1161,8 @@ def test_autocompact_restores_layout_after_trickle_fragmentation(
             "vec_id", F.transform("embedding", lambda x: -x).alias("embedding")
         )
         src.merge_into(upd, on=["vec_id"], mode="dv")
-        v0 = index.version()
         catchup_ann_index(src, index, rows_per_file=64)
-        if index.version() - v0 > 2:  # fold + watermark + compact commits
+        if index.history()[-1]["op"] == "compact":  # the fold's compaction
             fired = True
     files = index.snapshot()[1]
     # the cadence actually FIRED and kept the count bounded

@@ -248,9 +248,23 @@ def test_stream_to_lake_preserves_rows_and_partitions(spark, fixture, tmp_path):
 def test_flagship_rawline_equals_merged_state_revenue(spark, fixture):
     """The reference's query over raw lines counts every version of a row;
     over the merged state it matches the golden totals exactly."""
-    lines = read_raw_lines(spark, [f + "" for f in [fixture.landing_dir + "/*/*.ndjson"]])
+    lines = read_raw_lines(spark, [fixture.landing_dir + "/*/*.ndjson"])
     raw_totals = revenue_by_city_from_lines(lines)
     assert raw_totals.count() == 9  # all 9 movr cities present
+    # a list of two or more date dirs reads every one of them (each path
+    # must be a path, not the reader's next positional option)
+    date_dirs = [
+        os.path.join(fixture.landing_dir, d)
+        for d in sorted(os.listdir(fixture.landing_dir))
+    ]
+    assert len(date_dirs) >= 2
+    per_dir = [read_raw_lines(spark, d + "/*.ndjson").count() for d in date_dirs]
+    assert read_raw_lines(spark, date_dirs[:2]).count() == sum(per_dir[:2])
+    assert read_raw_lines(spark, date_dirs).count() == lines.count()
+    assert (
+        read_typed_envelopes(spark, date_dirs, AFTER_SCHEMA).count()
+        == lines.count()
+    )
     exp_by_city = {}
     for r in fixture.expected_state:
         exp_by_city[r["city"]] = exp_by_city.get(r["city"], 0.0) + r["revenue"]

@@ -488,3 +488,13 @@ def test_lsh_key_kernels_bit_identical_to_expression_form(spark):
     assert sig.columns == ["vec_id", "embedding", "bucket"]
     got1 = {r.vec_id: r.bucket for r in sig.collect()}
     assert want1 == got1
+
+
+def test_lsh_table_keys_requires_tables_or_seeds(spark):
+    """Neither ``n_tables`` nor ``seeds``: a ValueError naming both
+    arguments, raised before any Spark work (not ``range(None)``)."""
+    emb = spark.createDataFrame([(1, [1.0, -1.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="n_tables.*seeds"):
+        similarity.lsh_table_keys(emb, "vec_id", 2, 2, n_tables=None, seeds=None)
+    got = similarity.lsh_table_keys(emb, "vec_id", 2, 2, seeds=["a", "b"])
+    assert sorted(r.tbl for r in got.collect()) == [0, 1]
