@@ -362,31 +362,6 @@ def _cleanup_scratch() -> None:
     shutil.rmtree(_SCRATCH_ROOT, ignore_errors=True)
 
 
-def _parallel_lifecycles(*thunks):
-    """Run INDEPENDENT index-lifecycle builders as concurrent driver
-    threads (guide §2.6: Spark happily runs several jobs at once inside
-    one application; the two lifecycles of a hybrid query were only
-    sequential because the builder called them sequentially). Each
-    lifecycle owns its own scratch dir and tx tables, so the only shared
-    state is the SparkSession itself (py4j is thread-safe; FIFO
-    scheduling back-fills the tail of one lifecycle's small jobs with
-    the other's). Results return in thunk order; the first failure
-    re-raises after every thunk has settled."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futs = [pool.submit(t) for t in thunks]
-        results, first_err = [], None
-        for f in futs:
-            try:
-                results.append(f.result())
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                first_err = first_err or e
-        if first_err is not None:
-            raise first_err
-        return results
-
-
 _CITY_LIST_SQL = "[" + ", ".join(f"'{c}'" for c in CITIES) + "]"
 
 
@@ -10152,7 +10127,7 @@ def hybrid_ivfpq_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .engine import Engine
     from .operators.ann_index import catchup_ivfpq_index, ivfpq_index_topk
     from .operators.bm25_index import catchup_bm25_index
-    from .txlog import TxTable
+    from .txlog import TxTable, _concurrently
 
     tmp = _scratch("hybrid_ivfpq")
 
@@ -10175,9 +10150,7 @@ def hybrid_ivfpq_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         return src_e, index, cents, books
 
     # independent document/embedding legs overlapped per guide §2.6
-    bm25, (src_e, index, cents, books) = _parallel_lifecycles(
-        _doc_leg, _vec_leg
-    )
+    bm25, (src_e, index, cents, books) = _concurrently(_doc_leg, _vec_leg)
     q_terms = local_df(spark, _BM25_QUERIES, "query_id int, term string")
     q_vecs = src_e.read().filter(F.col("vec_id").isin(1, 2, 3)).select(
         F.col("vec_id").cast("int").alias("query_id"), "embedding"
@@ -10478,12 +10451,13 @@ def hybrid_index_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly like re-ranking the mutated corpora from scratch, with no
     corpus scan anywhere on the engine side."""
     from .engine import Engine
+    from .txlog import _concurrently
 
     # the two lifecycles mutate DIFFERENT source tables (documents vs
     # embeddings) into DIFFERENT index tables — fully independent job
     # chains, overlapped per guide §2.6 (results identical, the answer
     # still composes both finished indexes)
-    (_src_d, bm25), (_src_e, ann) = _parallel_lifecycles(
+    (_src_d, bm25), (_src_e, ann) = _concurrently(
         lambda: _bm25_index_lifecycle(spark, sf_dir),
         lambda: _ann_incr_lifecycle(spark, sf_dir),
     )

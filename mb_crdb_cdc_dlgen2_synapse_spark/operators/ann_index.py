@@ -61,7 +61,6 @@ from ..localrel import local_df
 from .cdf_index import (
     IndexFamily,
     _lay_down,
-    apply,
     assert_matches_scratch,
     catchup,
     stream,
@@ -263,21 +262,6 @@ def _hamming(
         ),
         mode=mode,
     )
-
-
-def ann_index_apply_changes(
-    index,
-    changes: DataFrame,
-    prefix_dims: list[int],
-    mode: str = "dv",
-    rows_per_file: int = _CLUSTER_ROWS_PER_FILE,
-) -> dict:
-    """Apply one CDF batch (``_change_type``/``_commit_version`` +
-    ``vec_id``/``embedding`` row images) to the bucketed binary-code
-    index table (``cdf_index.apply``). Returns the merge report (empty
-    dict when no merge ran)."""
-    fam = _hamming(mode=mode, rows_per_file=rows_per_file, dims=prefix_dims)
-    return apply(fam, index, changes)
 
 
 def catchup_ann_index(
@@ -981,20 +965,6 @@ def rebuild_ivfpq_index(
     kq = kq or int(props.get("ann.ivfpq.k", 16))
     fam = _ivfpq(cents, books, n_lists, m, kq, n_iter, sample)
     return _retrain(fam, src, index, "rebuild_ivfpq_index")
-
-
-def ivfpq_apply_changes(
-    index,
-    changes: DataFrame,
-    centroids: DataFrame,
-    model: list[list[list[float]]],
-    mode: str = "dv",
-) -> None:
-    """Fold one change-image batch into the IVF-PQ list table under the
-    given (pinned) generations: net-change reduce, encode + assign only
-    the changed vectors, one keyed merge (``cdf_index.apply``). A
-    re-delivered batch re-merges the same net rows (content no-op)."""
-    apply(_ivfpq(None, None, mode=mode, models=(centroids, model)), index, changes)
 
 
 def stream_ivfpq_index_to_tx_table(

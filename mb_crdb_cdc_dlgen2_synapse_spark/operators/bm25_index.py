@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..localrel import local_df
-from ..txlog import maybe_compact_index
+from ..txlog import _concurrently, maybe_compact_index
 from .cdf_index import IndexFamily, apply, assert_matches_scratch, catchup, stream
 from .retrieval import BM25_B, BM25_K1, bm25_rank, bm25_score_from_stats
 
@@ -180,13 +180,11 @@ def _delta(index, changes: DataFrame, text_col: str):
     # concurrently (guide §2.6) so the pre-merge phase pays
     # max(ckpt, deltas) instead of their sum (a side missing from the
     # batch has no group row -> 0/0)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_src = pool.submit(lambda: source.localCheckpoint(eager=True))
-        f_deltas = pool.submit(_scalars, posts, ("_new",))
-        source = f_src.result()
-        side = {r["_new"]: r for r in f_deltas.result()}
+    source, deltas = _concurrently(
+        lambda: source.localCheckpoint(eager=True),
+        lambda: _scalars(posts, ("_new",)),
+    )
+    side = {r["_new"]: r for r in deltas}
     o, n = (side.get(k, {"n": 0, "t": 0}) for k in (False, True))
     cur = index.properties()
     return source, {

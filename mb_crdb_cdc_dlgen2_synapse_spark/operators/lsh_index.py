@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .bm25_index import _image_source, _tagged_images
-from .cdf_index import IndexFamily, apply, assert_matches_scratch, catchup, stream
+from .cdf_index import IndexFamily, assert_matches_scratch, catchup, stream
 from .dedup import _band_entries, _band_pairs
 
 ROWS_PER_FILE = 65536
@@ -122,19 +122,6 @@ def _family(
         scratch=scratch,
         mode=mode,
     )
-
-
-def lsh_apply_changes(
-    index,
-    changes: DataFrame,
-    text_col: str,
-    mode: str,
-    watermark: int | None = None,
-) -> None:
-    """Fold one change-image batch (``_delta``): one keyed merge carrying
-    the advanced ``lsh.srcVersion`` watermark in the same commit
-    (``cdf_index.apply``)."""
-    apply(_family(text_col, mode), index, changes, watermark)
 
 
 def catchup_lsh_index(

@@ -265,25 +265,6 @@ def lineitems_shipped_within(orders: DataFrame, lineitem: DataFrame, days: int =
     )
 
 
-def events_in_order_window(orders: DataFrame, events: DataFrame) -> DataFrame:
-    """J6: equi+range (theta) join — events within 30 days after an order by
-    the same key. Catalyst executes the equi part as a hash join and the
-    range as a post-join filter, so this stays a single shuffle."""
-    return (
-        events.join(
-            orders,
-            (events.user_id == orders.o_custkey)
-            & (events.ts >= orders.o_orderdate)
-            & (events.ts < F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS")),
-        )
-        .groupBy("o_custkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            exact_sum("value").alias("sum_value"),
-        )
-    )
-
-
 # --------------------------------------------------------------------------
 # Windows (W1-W4)
 # --------------------------------------------------------------------------

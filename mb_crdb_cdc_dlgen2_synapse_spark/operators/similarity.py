@@ -85,7 +85,8 @@ def unit_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
                 # the HOF form raises DIVIDE_BY_ZERO under ANSI (Spark 4
                 # default) — keep zero-norm inputs loud, not inf/nan
                 raise ArithmeticError(
-                    "zero-norm vector cannot be unit-normalized"
+                    "unit_vectors: zero-norm vector divides by zero (ANSI "
+                    "DIVIDE_BY_ZERO, matching the JVM expression form)"
                 )
             unit = vecs / np.sqrt(acc)[:, None]
             out = {c: pdf[c] for c in other}

@@ -665,6 +665,36 @@ def _part_range_proves(pv: str, op: str, value) -> bool:
         return False
 
 
+def _concurrently(*thunks):
+    """Run INDEPENDENT driver-side thunks as concurrent threads — Spark
+    runs several jobs at once inside one application. Each thread is a
+    ``pyspark.InheritableThread``: it starts with the caller's Spark
+    local properties, so every job it submits keeps the caller's job
+    group, description and scheduler pool. Results return in thunk
+    order; the first failure re-raises after every thunk has settled,
+    so a caller's cleanup never races a still-running leg."""
+    from pyspark import InheritableThread
+
+    results: list = [None] * len(thunks)
+    errors: list = [None] * len(thunks)
+
+    def run(i: int) -> None:
+        try:
+            results[i] = thunks[i]()
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors[i] = e
+
+    threads = [InheritableThread(target=run, args=(i,)) for i in range(len(thunks))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results
+
+
 def _file_may_match(stats: dict | None, parts: dict[str, str], predicates) -> bool:
     """False only when the file's stats PROVE no row satisfies every
     predicate (conjunction). Missing stats for a column -> may match.
@@ -2575,11 +2605,7 @@ class TxTable:
         for name, expr in checks.items():
             n_bad = df.filter(~F.expr(expr).cast("boolean")).limit(1).count()
             if n_bad:
-                for f in added:
-                    try:
-                        os.remove(os.path.join(self.path, f))
-                    except OSError:
-                        pass
+                self._unlink(added)
                 raise ValueError(
                     f"CHECK constraint {name!r} violated by incoming rows ({expr})"
                 )
@@ -2667,23 +2693,39 @@ class TxTable:
             writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(stage)
         moved: list[str] = []
         stats: dict[str, dict] = {}
-        for dirpath, _dirnames, filenames in os.walk(stage):
-            for name in filenames:
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(dirpath, name)
-                rel = os.path.relpath(src, stage)
-                stats[rel] = _footer_stats(src)
-                dst = os.path.join(self.path, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(src, dst)
-                moved.append(rel)
-        shutil.rmtree(stage, ignore_errors=True)
-        self._bloom_for_staged(moved, stats, colmap)
+        try:
+            writer.parquet(stage)
+            for dirpath, _dirnames, filenames in os.walk(stage):
+                for name in filenames:
+                    if not name.endswith(".parquet"):
+                        continue
+                    src = os.path.join(dirpath, name)
+                    rel = os.path.relpath(src, stage)
+                    stats[rel] = _footer_stats(src)
+                    dst = os.path.join(self.path, rel)
+                    os.makedirs(os.path.dirname(dst), exist_ok=True)
+                    os.rename(src, dst)
+                    moved.append(rel)
+            self._bloom_for_staged(moved, stats, colmap)
+        except BaseException:
+            # a failed stage leaves nothing behind: not its staging dir,
+            # not the files already moved under the root
+            self._unlink(moved)
+            raise
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
         return moved, stats
+
+    def _unlink(self, rels) -> None:
+        """Remove uncommitted table-relative files (un-staging), ignoring
+        any already gone."""
+        for r in rels:
+            try:
+                os.remove(os.path.join(self.path, r))
+            except OSError:
+                pass
 
     def _commit(
         self,
@@ -3048,10 +3090,6 @@ class TxTable:
         """{logical name: physical name} for columns whose names diverged
         (renames, retired-name collisions). Identity entries are omitted."""
         return dict(self._state()["colmap"])
-
-    @staticmethod
-    def _phys(colmap: dict[str, str], name: str) -> str:
-        return colmap.get(name, name)
 
     @staticmethod
     def _inv(colmap: dict[str, str]) -> dict[str, str]:
@@ -3564,21 +3602,13 @@ class TxTable:
         if curve not in ("z", "hilbert", "linear"):
             raise ValueError(f"curve must be z|hilbert|linear, got {curve!r}")
         keyfn = _hilbert_value if curve == "hilbert" else _zvalue
+        scope = self._candidate_files(predicates) if predicates else None
         if target_mb is not None:
             stats0 = self.file_stats()
-            st_pr = self._state()
-            cm0 = st_pr["colmap"]
-            scope0 = self.snapshot()[1]
-            if predicates:
-                pr0 = predicates + self._derived_predicates(st_pr, predicates)
-                scope0 = [
-                    f
-                    for f in scope0
-                    if _file_may_match(
-                        stats0.get(f), self._parts(f, cm0), pr0
-                    )
-                ]
-            total = sum((stats0.get(f) or {}).get("bytes") or 0 for f in scope0)
+            total = sum(
+                (stats0.get(f) or {}).get("bytes") or 0
+                for f in (self.snapshot()[1] if scope is None else scope)
+            )
             target_files = max(1, -(-total // (target_mb * 1024 * 1024)))
 
         def relayout(df: DataFrame) -> DataFrame:
@@ -3598,22 +3628,12 @@ class TxTable:
                 )
             return df.coalesce(target_files)
 
-        if predicates:
+        if scope is not None:
             # OPTIMIZE ... WHERE: rewrite only files the predicates may touch
             # (file-granular — a matched file's non-matching rows carry over
             # unchanged). _rewrite_files conforms the schema and keeps the
             # hive partition layout (one file per rewritten partition dir);
             # conflicts with concurrent commits abort.
-            _v, active, _s = self.snapshot()
-            stats0 = self.file_stats()
-            st_pr = self._state()
-            cm0 = st_pr["colmap"]
-            pr0 = predicates + self._derived_predicates(st_pr, predicates)
-            scope = [
-                f
-                for f in active
-                if _file_may_match(stats0.get(f), self._parts(f, cm0), pr0)
-            ]
             res = self._rewrite_files(scope, relayout, op="compact")
             return res["version"]
         v0 = self.version()  # scan snapshot — DV commits after it conflict
@@ -3924,7 +3944,7 @@ class TxTable:
             out = out.select(*[to_logical(c) for c in out.columns])
         return out
 
-    def _delete_dv(self, predicates: list[tuple]) -> dict:
+    def _delete_dv(self, cands: list[str], cond) -> dict | None:
         """Merge-on-read DELETE: instead of rewriting candidate files (CoW),
         record the matching rows' (file, position) pairs as a deletion
         vector; readers anti-join them out. At 100 TB a small delete
@@ -3933,75 +3953,133 @@ class TxTable:
         Only VISIBLE rows are marked (existing DVs apply first), so
         overlapping deletes never double-count. A later ``compact()``
         physically drops the rows and retires the DVs."""
-        from pyspark.sql import functions as F
-
-        _v, active, _s = self.snapshot()
-        stats = self.file_stats()
-        state_pr = self._state()
-        cm = state_pr["colmap"]
-        # derived (generated-column) predicates are implication-sound for
-        # candidate EXCLUSION: a file provably empty under the derived
-        # triple holds no row matching the original predicate either
-        prune_preds = predicates + self._derived_predicates(state_pr, predicates)
-        cands = [
-            f
-            for f in active
-            if _file_may_match(stats.get(f), self._parts(f, cm), prune_preds)
-        ]
         if not cands:
             return {"dv_rows": 0, "version": self.version()}
-        df = self._scan_files(
-            cands, self._active_dvs(), keep_pos=True, schema_json=_s
+        scan = self._scan_files(
+            cands, self._active_dvs(), keep_pos=True,
+            schema_json=self._state()["schema"],
         )
-        marked = (
-            df.filter(self._predicate_column(predicates))
-            .select(
-                F.col("__rf").alias("rel_file"), F.col("__ri").alias("row_index")
-            )
-            .localCheckpoint(eager=True)
+        return self._commit_dv(cands, scan.filter(cond), None, "delete_dv")
+
+    def _commit_dv(
+        self,
+        cands: list[str],
+        marked: DataFrame,
+        new_rows: DataFrame | None,
+        op: str,
+        props: dict[str, str | None] | None = None,
+    ) -> dict | None:
+        """The ONE merge-on-read commit behind DELETE, UPDATE and MERGE
+        ``mode="dv"``. ``marked`` carries the (``__rf``, ``__ri``) file /
+        position of every target row the statement retires; ``new_rows``
+        (update copies and merge inserts, conformed to the table; ``None``
+        for a delete) are appended in the same commit.
+
+        The vector write and the new-row stage are INDEPENDENT Spark jobs,
+        so they run concurrently (the statement pays max(dv, stage), not
+        the sum). Per-file counts are harvested from the written vector
+        driver-side — no eager checkpoint or ``groupBy().collect()`` of
+        data this commit writes out anyway. A vector marking more than
+        ``DV_MAX_ROWS`` rows un-stages BOTH legs and returns ``None``: the
+        caller runs its copy-on-write form instead. A failure in either
+        leg un-stages both before re-raising, so nothing uncommitted is
+        left under the table root. Vector, new files and merged ``props``
+        land in ONE commit; a statement that changed nothing commits
+        nothing (or just ``props``)."""
+        from pyspark.sql import functions as F
+
+        positions = marked.select(
+            F.col("__rf").alias("rel_file"), F.col("__ri").alias("row_index")
         )
-        counts = {
-            r["rel_file"]: r["n"]
-            for r in marked.groupBy("rel_file")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n_rows = sum(counts.values())
-        if n_rows == 0:
-            return {"dv_rows": 0, "version": self.version()}
-        if n_rows > self.DV_MAX_ROWS:
-            # guardrail: a delete this large is cheaper (and read-optimal)
-            # as a partition-parallel CoW rewrite of the candidate files
-            cond = self._predicate_column(predicates)
-            return self._rewrite_files(cands, lambda d: d.filter(~cond))
-        stage = os.path.join(self.path, _STAGING, uuid.uuid4().hex)
-        marked.coalesce(1).write.mode("overwrite").parquet(stage)
+        dv_stage = os.path.join(self.path, _STAGING, uuid.uuid4().hex)
+        staged: list[str] = []
+
+        def dv_leg() -> tuple[dict[str, int], list[str]]:
+            import pyarrow.parquet as _pq
+
+            positions.coalesce(1).write.mode("overwrite").parquet(dv_stage)
+            counts: dict[str, int] = {}
+            written: list[str] = []
+            for name in sorted(os.listdir(dv_stage)):
+                if not name.endswith(".parquet"):
+                    continue
+                fp = os.path.join(dv_stage, name)
+                tbl = _pq.read_table(fp, columns=["rel_file"])
+                if tbl.num_rows == 0:
+                    continue
+                written.append(fp)
+                for s in tbl.column("rel_file").combine_chunks().value_counts():
+                    rel = s["values"].as_py()
+                    counts[rel] = counts.get(rel, 0) + s["counts"].as_py()
+            return counts, written
+
+        def rows_leg() -> dict[str, dict]:
+            if new_rows is None:
+                return {}
+            # logical partition keys (self._parts translates physical path
+            # keys through the column mapping — _partition_values would
+            # return the physical names and stage unpartitioned on renamed
+            # tables)
+            layout = [k for k in self._parts(cands[0]) if k in new_rows.columns]
+            added, add_stats = self._stage(new_rows, layout or None)
+            staged.extend(added)
+            # zero-row part files (nothing to update/insert in a task) are
+            # dropped via their own footer row counts — no count() job
+            empty = [r for r in added if not (add_stats.get(r) or {}).get("rows")]
+            self._unlink(empty)
+            for r in empty:
+                add_stats.pop(r)
+            return add_stats
+
+        def unstage() -> None:
+            shutil.rmtree(dv_stage, ignore_errors=True)
+            self._unlink(staged)
+
+        try:
+            (counts, written), add_stats = _concurrently(dv_leg, rows_leg)
+        except BaseException:
+            unstage()
+            raise
+        if sum(counts.values()) > self.DV_MAX_ROWS:
+            unstage()
+            return None
         dv_rel: list[str] = []
-        dv_dir = os.path.join(self.path, _DV_DIR)
-        os.makedirs(dv_dir, exist_ok=True)
-        for name in os.listdir(stage):
-            if name.endswith(".parquet"):
+        if counts:
+            os.makedirs(os.path.join(self.path, _DV_DIR), exist_ok=True)
+            for fp in written:
                 rel = os.path.join(_DV_DIR, f"{uuid.uuid4().hex}.parquet")
-                os.rename(os.path.join(stage, name), os.path.join(self.path, rel))
+                os.rename(fp, os.path.join(self.path, rel))
                 dv_rel.append(rel)
-        shutil.rmtree(stage, ignore_errors=True)
+        shutil.rmtree(dv_stage, ignore_errors=True)
+        if not add_stats and not dv_rel:
+            if props is not None:
+                return {"dv_rows": 0, "version": self.set_properties(props)}
+            return {"dv_rows": 0, "version": self.version()}
+        st = self._state()
+        extra = {
+            "dv_added": dv_rel,
+            "dv_counts": counts,
+            # per-DV blast radius for fsck: each vector written by this
+            # commit covers exactly these data files (coalesce(1) means
+            # one vector; a multi-file write maps each to the union,
+            # still tighter than a cross-commit scan)
+            "dv_covers": {rel: sorted(counts) for rel in dv_rel},
+        }
+        base = None
+        if props is not None:
+            extra["props"] = self._merged_props(st, props)
+            base = (st["version"], st["schema"])
         version = self._commit(
-            [],
+            list(add_stats),
             self._dv_commit_removed_fn(set(counts)),
-            self.snapshot()[2],
+            st["schema"],
             None,
-            "delete_dv",
-            extra={
-                "dv_added": dv_rel,
-                "dv_counts": counts,
-                # per-DV blast radius for fsck: each vector written by this
-                # commit covers exactly these data files (coalesce(1) means
-                # one vector; a multi-file write maps each to the union,
-                # still tighter than a cross-commit scan)
-                "dv_covers": {rel: sorted(counts) for rel in dv_rel},
-            },
+            op,
+            add_stats,
+            extra=extra,
+            base=base,
         )
-        return {"dv_rows": n_rows, "version": version}
+        return {"dv_rows": sum(counts.values()), "version": version}
 
     def file_stats(self, as_of: int | None = None) -> dict[str, dict]:
         """Per-active-file footer stats with LOGICAL column keys
@@ -4102,6 +4180,29 @@ class TxTable:
             "__row_id",
             F.coalesce(F.col("__row_id"), F.col("___base") + F.col("__ri")),
         ).drop("___rel", "___base")
+
+    def _candidate_files(
+        self, predicates: list[tuple], state: dict | None = None
+    ) -> list[str]:
+        """Active files of ``state`` (default: head) whose logged stats,
+        blooms and partition values may hold a row matching every
+        predicate — the one log-level file-pruning step behind reads,
+        DML, merge, scoped compaction and ``count_rows``. Metadata only.
+        Derived (generated-column) predicates join the test: they are
+        implication-sound for candidate EXCLUSION (a file provably empty
+        under the derived triple holds no row matching the original
+        predicate either); row filtering stays the caller's originals."""
+        if state is None:
+            state = self._state()
+        active = state["active"]
+        if not active:
+            return []
+        stats = self.file_stats(state["version"])
+        cm = state["colmap"]
+        prune = predicates + self._derived_predicates(state, predicates)
+        return [
+            f for f in active if _file_may_match(stats.get(f), self._parts(f, cm), prune)
+        ]
 
     def _derived_predicates(
         self, state: dict, predicates: list[tuple]
@@ -4209,13 +4310,7 @@ class TxTable:
         if cached is not None:
             return cached
         if active and predicates:
-            stats = self.file_stats(as_of)
-            prune_preds = predicates + self._derived_predicates(state, predicates)
-            active = [
-                f
-                for f in active
-                if _file_may_match(stats.get(f), self._parts(f, colmap), prune_preds)
-            ]
+            active = self._candidate_files(predicates, state)
         if row_ids and not state["rowtrack"].get("enabled"):
             raise ValueError(
                 "row_ids=True requires enable_row_tracking() on this table"
@@ -4292,14 +4387,8 @@ class TxTable:
         if need_ids and not row_ids:
             df = df.drop("_row_id")
 
-        ops = {"==": "__eq__", ">=": "__ge__", ">": "__gt__", "<=": "__le__", "<": "__lt__"}
-        for col, op, value in predicates:
-            if op == "in":
-                df = df.filter(F.col(col).isin(list(value)))
-            elif op == "contains":
-                df = df.filter(F.col(col).contains(F.lit(value)))
-            else:
-                df = df.filter(getattr(F.col(col), ops[op])(F.lit(value)))
+        if predicates:
+            df = df.filter(self._predicate_column(predicates))
         self._read_cache[cache_key] = df
         while len(self._read_cache) > self.READ_PLAN_CACHE_MAX:
             # FIFO bound (insertion-ordered dict): drop the oldest plan
@@ -4362,30 +4451,7 @@ class TxTable:
         )
         if track:
             df = self._attach_row_ids(df, state0).drop("__rf", "__ri")
-        # conform to the table's logged schema (nullable-relaxed): hive
-        # partition columns come back TYPE-INFERRED from the path strings
-        # (bucket=0 -> int, not the long the table logged), and committing
-        # that drift would make later strict appends fail the schema check
-        if schema_json:
-            logged = T.StructType.fromJson(json.loads(schema_json))
-            relaxed = T.StructType(
-                [T.StructField(f.name, f.dataType, True) for f in logged.fields]
-            )
-            # post-evolution candidates: files older than an add_column lack
-            # the field (project typed NULLs), files older than a
-            # drop_column carry an extra one (the select drops it)
-            for f in relaxed.fields:
-                if f.name not in df.columns:
-                    df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-            names = [f.name for f in relaxed.fields]
-            to_schema = relaxed
-            if track:
-                names = names + ["__row_id"]
-                to_schema = T.StructType(
-                    relaxed.fields + [T.StructField("__row_id", T.LongType(), True)]
-                )
-            df = df.select(*names).to(to_schema)
-        out = transform(df)
+        out = transform(self._conform(df, schema_json))
         part_cols = [
             k for k in self._parts(cands[0]) if k in out.columns
         ]
@@ -4476,19 +4542,7 @@ class TxTable:
                 f"replace_where: incoming rows fall outside the replaced "
                 f"region {predicates!r} (Delta's replaceWhere constraint)"
             )
-        _v, active, _s = self.snapshot()
-        stats = self.file_stats()
-        state_pr = self._state()
-        cm = state_pr["colmap"]
-        # derived (generated-column) predicates are implication-sound for
-        # candidate EXCLUSION: a file provably empty under the derived
-        # triple holds no row matching the original predicate either
-        prune_preds = predicates + self._derived_predicates(state_pr, predicates)
-        cands = [
-            f
-            for f in active
-            if _file_may_match(stats.get(f), self._parts(f, cm), prune_preds)
-        ]
+        cands = self._candidate_files(predicates)
         if not cands:
             version = self.append(df, partition_by=partition_by, txn=txn)
             return {"files_rewritten": 0, "version": version}
@@ -4514,25 +4568,17 @@ class TxTable:
         small delete against a huge table writes kilobytes, readers
         anti-join the (file, position) pairs, and the next ``compact()``
         makes it physical — the Delta DV / Iceberg positional-delete trade.
+        ``DV_MAX_ROWS`` is judged on the staged vector: one marking more
+        rows is discarded unlogged and the delete runs copy-on-write.
         A predicate wholly outside the table's range is a commit-free no-op
         in both modes."""
         self._refuse_if_append_only("DELETE")
-        if mode == "dv":
-            return self._delete_dv(predicates)
-        _v, active, _s = self.snapshot()
-        stats = self.file_stats()
-        state_pr = self._state()
-        cm = state_pr["colmap"]
-        # derived (generated-column) predicates are implication-sound for
-        # candidate EXCLUSION: a file provably empty under the derived
-        # triple holds no row matching the original predicate either
-        prune_preds = predicates + self._derived_predicates(state_pr, predicates)
-        cands = [
-            f
-            for f in active
-            if _file_may_match(stats.get(f), self._parts(f, cm), prune_preds)
-        ]
+        cands = self._candidate_files(predicates)
         cond = self._predicate_column(predicates)
+        if mode == "dv":
+            res = self._delete_dv(cands, cond)
+            if res is not None:
+                return res
         return self._rewrite_files(cands, lambda df: df.filter(~cond))
 
     def update_where(
@@ -4546,7 +4592,9 @@ class TxTable:
         positions land in a deletion vector and only the UPDATED copies are
         appended, both in ONE atomic commit — a small update against a huge
         table writes the changed rows plus kilobytes of vector (the
-        Delta-with-DV UPDATE shape)."""
+        Delta-with-DV UPDATE shape). ``DV_MAX_ROWS`` is judged on the
+        staged vector: one marking more rows is discarded unlogged, with
+        its staged copies, and the update runs copy-on-write."""
         from pyspark.sql import Column
         from pyspark.sql import functions as F
 
@@ -4558,142 +4606,70 @@ class TxTable:
                     f"column {col!r} is GENERATED ALWAYS AS IDENTITY: "
                     "UPDATE may not assign it"
                 )
-        if mode == "dv":
-            return self._update_dv(predicates, assignments)
-        _v, active, _s = self.snapshot()
-        stats = self.file_stats()
-        state_pr = self._state()
-        cm = state_pr["colmap"]
-        # derived (generated-column) predicates are implication-sound for
-        # candidate EXCLUSION: a file provably empty under the derived
-        # triple holds no row matching the original predicate either
-        prune_preds = predicates + self._derived_predicates(state_pr, predicates)
-        cands = [
-            f
-            for f in active
-            if _file_may_match(stats.get(f), self._parts(f, cm), prune_preds)
-        ]
+        cands = self._candidate_files(predicates)
         cond = self._predicate_column(predicates)
+        news = {
+            col: expr if isinstance(expr, Column) else F.expr(expr)
+            for col, expr in assignments.items()
+        }
+        if mode == "dv":
+            res = self._update_dv(cands, cond, news)
+            if res is not None:
+                return res
 
         def apply(df):
-            for col, expr in assignments.items():
-                new = expr if isinstance(expr, Column) else F.expr(expr)
+            for col, new in news.items():
                 df = df.withColumn(col, F.when(cond, new).otherwise(F.col(col)))
             return df
 
         return self._rewrite_files(cands, apply)
 
-    def _update_dv(self, predicates: list[tuple], assignments: dict) -> dict:
-        """Merge-on-read UPDATE core: mark old positions, append new copies,
-        one commit (``dv_added`` + ``added`` together are atomic)."""
-        from pyspark.sql import Column
-        from pyspark.sql import functions as F
-
-        _v, active, schema_json = self.snapshot()
-        stats = self.file_stats()
-        state_pr = self._state()
-        cm = state_pr["colmap"]
-        # derived (generated-column) predicates are implication-sound for
-        # candidate EXCLUSION: a file provably empty under the derived
-        # triple holds no row matching the original predicate either
-        prune_preds = predicates + self._derived_predicates(state_pr, predicates)
-        cands = [
-            f
-            for f in active
-            if _file_may_match(stats.get(f), self._parts(f, cm), prune_preds)
-        ]
+    def _update_dv(self, cands: list[str], cond, news: dict) -> dict | None:
+        """Merge-on-read UPDATE: the matched rows' old positions are the
+        vector, their updated copies the new rows of one ``_commit_dv``.
+        With row tracking on, each copy carries its row's identity
+        materialized (the old position is DV-hidden)."""
         if not cands:
             return {"dv_rows": 0, "version": self.version()}
-        track = bool(self._state()["rowtrack"].get("enabled"))
-        df = self._scan_files(
-            cands, self._active_dvs(), keep_pos=True, schema_json=schema_json,
-            rowid_col=track,
-        )
-        matched = df.filter(self._predicate_column(predicates)).localCheckpoint(
-            eager=True
-        )
-        marked = matched.select(
-            F.col("__rf").alias("rel_file"), F.col("__ri").alias("row_index")
-        )
-        counts = {
-            r["rel_file"]: r["n"]
-            for r in marked.groupBy("rel_file")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        if not counts:
-            return {"dv_rows": 0, "version": self.version()}
-        if sum(counts.values()) > self.DV_MAX_ROWS:
-            # guardrail: an update this large routes to the CoW rewrite
-            # (same trade as _delete_dv — see DV_MAX_ROWS)
-            cond = self._predicate_column(predicates)
-
-            def apply(d):
-                from pyspark.sql import Column as _C
-
-                for col, expr in assignments.items():
-                    new = expr if isinstance(expr, _C) else F.expr(expr)
-                    d = d.withColumn(col, F.when(cond, new).otherwise(F.col(col)))
-                return d
-
-            return self._rewrite_files(cands, apply)
-        if track:
-            # a merge-on-read UPDATE recreates the row in a new file; its
-            # identity rides along materialized (the old position is DV-hidden)
-            matched = self._attach_row_ids(matched, self._state())
-        updated = matched.drop("__rf", "__ri")
-        for col, expr in assignments.items():
-            new = expr if isinstance(expr, Column) else F.expr(expr)
+        state = self._state()
+        track = bool(state["rowtrack"].get("enabled"))
+        matched = self._scan_files(
+            cands, self._active_dvs(), keep_pos=True,
+            schema_json=state["schema"], rowid_col=track,
+        ).filter(cond)
+        updated = self._attach_row_ids(matched, state) if track else matched
+        updated = updated.drop("__rf", "__ri")
+        for col, new in news.items():
             updated = updated.withColumn(col, new)
-        if schema_json:
-            logged = T.StructType.fromJson(json.loads(schema_json))
-            relaxed = T.StructType(
-                [T.StructField(f.name, f.dataType, True) for f in logged.fields]
-            )
-            for f in relaxed.fields:
-                if f.name not in updated.columns:
-                    updated = updated.withColumn(f.name, F.lit(None).cast(f.dataType))
-            names = [f.name for f in relaxed.fields]
-            to_schema = relaxed
-            if track:
-                names = names + ["__row_id"]
-                to_schema = T.StructType(
-                    relaxed.fields + [T.StructField("__row_id", T.LongType(), True)]
-                )
-            updated = updated.select(*names).to(to_schema)
-        # logical partition keys (self._parts translates physical path keys
-        # through the column mapping — _partition_values would return the
-        # physical names and silently stage unpartitioned on renamed tables)
-        part_cols = [k for k in self._parts(cands[0]) if k in updated.columns]
-        added, add_stats = self._stage(updated, part_cols or None)
-        stage = os.path.join(self.path, _STAGING, uuid.uuid4().hex)
-        marked.coalesce(1).write.mode("overwrite").parquet(stage)
-        dv_rel: list[str] = []
-        os.makedirs(os.path.join(self.path, _DV_DIR), exist_ok=True)
-        for name in os.listdir(stage):
-            if name.endswith(".parquet"):
-                rel = os.path.join(_DV_DIR, f"{uuid.uuid4().hex}.parquet")
-                os.rename(os.path.join(stage, name), os.path.join(self.path, rel))
-                dv_rel.append(rel)
-        shutil.rmtree(stage, ignore_errors=True)
-        version = self._commit(
-            added,
-            self._dv_commit_removed_fn(set(counts)),
-            schema_json,
-            None,
-            "update_dv",
-            add_stats,
-            extra={
-                "dv_added": dv_rel,
-                "dv_counts": counts,
-                # per-DV blast radius for fsck: each vector written by this
-                # commit covers exactly these data files (coalesce(1) means
-                # one vector; a multi-file write maps each to the union,
-                # still tighter than a cross-commit scan)
-                "dv_covers": {rel: sorted(counts) for rel in dv_rel},
-            },
+        return self._commit_dv(
+            cands, matched, self._conform(updated, state["schema"]), "update_dv"
         )
-        return {"dv_rows": sum(counts.values()), "version": version}
+
+    def _conform(self, df: DataFrame, schema_json: str | None) -> DataFrame:
+        """``df`` in the logged schema's column order and types with
+        nullability relaxed (join/when outputs are nullable and ``.to()``
+        refuses to tighten; a nullable-flag difference only costs readers
+        a footer mergeSchema). Hive partition columns come back
+        TYPE-INFERRED from path strings (bucket=0 -> int, not the logged
+        long); committing that drift would fail later strict appends.
+        Logged columns ``df`` lacks (files older than an add_column)
+        project as typed NULLs; extra ones (older than a drop_column)
+        drop. A materialized ``__row_id`` rides along last. Without a
+        logged schema ``df`` is returned as is."""
+        if not schema_json:
+            return df
+        from pyspark.sql import functions as F
+
+        fields = [
+            T.StructField(f.name, f.dataType, True)
+            for f in T.StructType.fromJson(json.loads(schema_json)).fields
+        ]
+        for f in fields:
+            if f.name not in df.columns:
+                df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
+        if "__row_id" in df.columns:
+            fields.append(T.StructField("__row_id", T.LongType(), True))
+        return df.select(*[f.name for f in fields]).to(T.StructType(fields))
 
     def merge_into(
         self,
@@ -4829,15 +4805,7 @@ class TxTable:
                 preds.append((k, ">=", lo))
             if hi is not None:
                 preds.append((k, "<=", hi))
-        stats = self.file_stats()
-        state_pr = self._state()
-        cm = state_pr["colmap"]
-        preds_pr = preds + self._derived_predicates(state_pr, preds)
-        cands = [
-            f
-            for f in active
-            if _file_may_match(stats.get(f), self._parts(f, cm), preds_pr)
-        ]
+        cands = self._candidate_files(preds)
         # KEY-SET refinement: the span test keeps every file the batch's
         # GLOBAL [min,max] overlaps — on a merge-key-clustered table a
         # small batch of scattered keys still spans the whole domain and
@@ -4887,6 +4855,9 @@ class TxTable:
                             return False  # this key maybe present
                     return True  # every key provably absent
 
+                stats = self.file_stats()
+                cm = self._state()["colmap"]
+
                 def _holds_a_key(f: str) -> bool:
                     st = stats.get(f) or {}
                     parts_f = self._parts(f, cm)
@@ -4918,41 +4889,15 @@ class TxTable:
 
                 cands = [f for f in cands if _holds_a_key(f)]
 
-        # column order + types conform to the table; nullability is relaxed
-        # (join/when outputs are nullable and .to() refuses to tighten) — a
-        # nullable-flag difference only costs readers a footer mergeSchema
-        target_schema = (
-            T.StructType(
-                [
-                    T.StructField(f.name, f.dataType, True)
-                    for f in T.StructType.fromJson(json.loads(_schema)).fields
-                ]
-            )
-            if _schema
-            else None
-        )
         # target columns come from the LOGGED schema — constructing a full
         # table scan just to ask for .columns costs a multi-group plan
         # build per merge (profiled as a fixed driver-side tax on every
-        # keyed merge); the log is authoritative for both (Delta model)
+        # keyed merge); the log is authoritative (Delta model)
         target_cols = (
-            [f.name for f in target_schema.fields]
-            if target_schema is not None
+            T.StructType.fromJson(json.loads(_schema)).fieldNames()
+            if _schema
             else self.read().columns
         )
-
-        def conform(df: DataFrame) -> DataFrame:
-            extra = ["__row_id"] if "__row_id" in df.columns else []
-            df = df.select(*target_cols, *extra)
-            if target_schema is None:
-                return df
-            to_schema = target_schema
-            if extra:
-                to_schema = T.StructType(
-                    target_schema.fields
-                    + [T.StructField("__row_id", T.LongType(), True)]
-                )
-            return df.to(to_schema)
 
         if not cands:
             # pruning PROVES no target file holds a source key: every
@@ -4964,7 +4909,9 @@ class TxTable:
                         "files_rewritten": 0, "version": self.set_properties(props)
                     }
                 return {"files_rewritten": 0, "version": version}
-            out = conform(src.filter(~F.col("__s_del")))
+            out = self._conform(
+                src.filter(~F.col("__s_del")).select(*target_cols), _schema
+            )
             layout = [
                 k for k in _partition_values(active[0]) if k in target_cols
             ]
@@ -5012,12 +4959,11 @@ class TxTable:
                         "__row_id", F.lit(None).cast("long")
                     )
                 result = result.unionByName(new_rows)
-            return conform(result)
+            return self._conform(result, _schema)
 
         if mode == "dv":
             res = self._merge_dv(
-                src, on, cands, target_cols, conform, update, insert,
-                props=props,
+                src, on, cands, target_cols, update, insert, props=props
             )
             if res is not None:
                 res["candidates"] = len(cands)
@@ -5029,26 +4975,26 @@ class TxTable:
         return out
 
     def _merge_dv(
-        self, src, on, cands, target_cols, conform, update, insert,
+        self, src, on, cands, target_cols, update, insert,
         props: dict[str, str | None] | None = None,
-    ) -> dict:
-        """Merge-on-read MERGE core: matched rows' positions land in a
-        deletion vector (update matches additionally append the source
-        image; ``delete_when`` matches just vanish), unmatched source rows
-        append as inserts — ONE commit carries the vector and the new
-        files. Candidate files never get rewritten, so merge write cost is
-        O(changed + inserted rows), not O(candidate files). Returns ``None``
-        when the marked-row volume exceeds ``DV_MAX_ROWS`` — the caller
-        (``merge_into``) then runs the CoW transform instead."""
+    ) -> dict | None:
+        """Merge-on-read MERGE: matched target rows are the vector (update
+        matches additionally append the source image; ``delete_when``
+        matches just vanish), and update images plus unmatched source rows
+        are the new rows of one ``_commit_dv``. Candidate files never get
+        rewritten, so merge write cost is O(changed + inserted rows), not
+        O(candidate files). Returns ``None`` when the vector exceeds
+        ``DV_MAX_ROWS`` — ``merge_into`` then runs the CoW transform."""
         from pyspark.sql import functions as F
 
-        track = bool(self._state()["rowtrack"].get("enabled"))
+        state = self._state()
+        track = bool(state["rowtrack"].get("enabled"))
         tdf = self._scan_files(
             cands, self._active_dvs(), keep_pos=True,
-            schema_json=self.snapshot()[2], rowid_col=track,
+            schema_json=state["schema"], rowid_col=track,
         )
         if track:
-            tdf = self._attach_row_ids(tdf, self._state())
+            tdf = self._attach_row_ids(tdf, state)
         # a merge-on-read never rewrites target rows, so nothing past this
         # point needs their VALUES — only the key (joins), the position
         # (DV), and the row id. Project BEFORE the eager checkpoint:
@@ -5058,54 +5004,21 @@ class TxTable:
         # whole merge).
         keep = list(on) + ["__rf", "__ri"] + (["__row_id"] if track else [])
         tdf = tdf.select(*keep).localCheckpoint(eager=True)
-        s_keys = src.select(*on, "__s_del")
-        joined = tdf.join(s_keys, on, "inner")
+        joined = tdf.join(src.select(*on, "__s_del"), on, "inner")
         if not update:
             joined = joined.filter(F.col("__s_del"))
-        marked = joined.select(
-            F.col("__rf").alias("rel_file"), F.col("__ri").alias("row_index")
-        )
-        # write the vector and harvest per-file counts from the written
-        # parquet driver-side: the former eager checkpoint +
-        # groupBy().collect() pair cost two extra Spark jobs per merge
-        # for data this commit writes out anyway. DV_MAX_ROWS still
-        # guards the commit — an over-budget vector is discarded unwritten
-        # into the log and the caller falls back to CoW exactly as before.
-        dv_stage = os.path.join(self.path, _STAGING, uuid.uuid4().hex)
-
-        def _dv_job() -> tuple[dict[str, int], list[str]]:
-            marked.coalesce(1).write.mode("overwrite").parquet(dv_stage)
-            import pyarrow.parquet as _pq
-
-            counts: dict[str, int] = {}
-            dv_staged: list[str] = []
-            for name in sorted(os.listdir(dv_stage)):
-                if not name.endswith(".parquet"):
-                    continue
-                fp = os.path.join(dv_stage, name)
-                tbl = _pq.read_table(fp, columns=["rel_file"])
-                if tbl.num_rows == 0:
-                    continue
-                dv_staged.append(fp)
-                for s in tbl.column("rel_file").combine_chunks().value_counts():
-                    rel = s["values"].as_py()
-                    counts[rel] = counts.get(rel, 0) + s["counts"].as_py()
-            return counts, dv_staged
-
-        matched_keys = joined.select(*on)
         new_rows = None
         if update:
-            updated = (
+            new_rows = (
                 src.filter(~F.col("__s_del"))
-                .join(matched_keys, on, "left_semi")
+                .join(joined.select(*on), on, "left_semi")
                 .select(*target_cols)
             )
             if track:
                 # the update RECREATES the row in a new file under the same
                 # identity (min over multi-matches keeps it deterministic)
                 tids = tdf.groupBy(*on).agg(F.min("__row_id").alias("__row_id"))
-                updated = updated.join(tids, on, "left")
-            new_rows = updated
+                new_rows = new_rows.join(tids, on, "left")
         if insert:
             inserts = (
                 src.filter(~F.col("__s_del"))
@@ -5115,107 +5028,9 @@ class TxTable:
             if track:
                 inserts = inserts.withColumn("__row_id", F.lit(None).cast("long"))
             new_rows = inserts if new_rows is None else new_rows.unionByName(inserts)
-        _v, active, schema_json = self.snapshot()
-
-        def _insert_job() -> tuple[list[str], dict[str, dict]]:
-            if new_rows is None:
-                return [], {}
-            out = conform(new_rows)
-            # logical keys via the column mapping (see _update_dv)
-            layout = [k for k in self._parts(cands[0]) if k in target_cols]
-            # stage directly (one evaluation of the insert/update lineage
-            # in the write itself — the former checkpoint + count() pair
-            # cost two extra jobs); zero-row part files are dropped from
-            # the commit afterwards via their own footer row counts
-            added, add_stats = self._stage(out, layout or None)
-            empty = [r for r in added if not (add_stats.get(r) or {}).get("rows")]
-            for r in empty:
-                try:
-                    os.remove(os.path.join(self.path, r))
-                except OSError:
-                    pass
-                add_stats.pop(r, None)
-            return [r for r in added if r not in set(empty)], add_stats
-
-        # the DV write and the insert/update stage are INDEPENDENT Spark
-        # jobs off the same pinned relations (the checkpointed candidate
-        # scan + the materialized source) — run them concurrently so the
-        # per-merge wall time pays max(dv, insert), not their sum (guide
-        # §2.6: overlap independent jobs; actions were only sequential
-        # because this code called them sequentially). Both sides write
-        # to their own unique staging paths, so failure cleanup is the
-        # same as the sequential form's.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as _pool:
-            _f_dv = _pool.submit(_dv_job)
-            _f_ins = _pool.submit(_insert_job)
-            _dv_err = _ins_err = None
-            try:
-                counts, dv_staged = _f_dv.result()
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                _dv_err = e
-            try:
-                added, add_stats = _f_ins.result()
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                _ins_err = e
-        if _dv_err is not None or _ins_err is not None:
-            shutil.rmtree(dv_stage, ignore_errors=True)
-            if _ins_err is None:
-                for r in added:
-                    try:
-                        os.remove(os.path.join(self.path, r))
-                    except OSError:
-                        pass
-            raise _dv_err or _ins_err
-        if sum(counts.values()) > self.DV_MAX_ROWS:
-            # guardrail — merge_into falls back to CoW; un-stage BOTH
-            # sides (the concurrently staged inserts are uncommitted and
-            # invisible, but leaving them would orphan files)
-            shutil.rmtree(dv_stage, ignore_errors=True)
-            for r in added:
-                try:
-                    os.remove(os.path.join(self.path, r))
-                except OSError:
-                    pass
-            return None
-        dv_rel: list[str] = []
-        if counts:
-            os.makedirs(os.path.join(self.path, _DV_DIR), exist_ok=True)
-            for fp in dv_staged:
-                rel = os.path.join(_DV_DIR, f"{uuid.uuid4().hex}.parquet")
-                os.rename(fp, os.path.join(self.path, rel))
-                dv_rel.append(rel)
-        shutil.rmtree(dv_stage, ignore_errors=True)
-        if not added and not dv_rel:
-            if props is not None:
-                return {"dv_rows": 0, "version": self.set_properties(props)}
-            return {"dv_rows": 0, "version": self.version()}
-        extra = {
-            "dv_added": dv_rel,
-            "dv_counts": counts,
-            # per-DV blast radius for fsck: each vector written by this
-            # commit covers exactly these data files (coalesce(1) means
-            # one vector; a multi-file write maps each to the union,
-            # still tighter than a cross-commit scan)
-            "dv_covers": {rel: sorted(counts) for rel in dv_rel},
-        }
-        base = None
-        if props is not None:
-            st = self._state()
-            extra["props"] = self._merged_props(st, props)
-            base = (st["version"], st["schema"])
-        version = self._commit(
-            added,
-            self._dv_commit_removed_fn(set(counts)),
-            schema_json,
-            None,
-            "merge_dv",
-            add_stats,
-            extra=extra,
-            base=base,
-        )
-        return {"dv_rows": sum(counts.values()), "version": version}
+        if new_rows is not None:
+            new_rows = self._conform(new_rows, state["schema"])
+        return self._commit_dv(cands, joined, new_rows, "merge_dv", props)
 
     def read_changes(
         self,
@@ -5556,45 +5371,32 @@ class TxTable:
         ambiguous — only the ambiguous files are actually read and counted.
         A partition-equality predicate is decidable for every file, so
         per-partition counts stay metadata-only at any table size."""
-        _v, active, _s = self.snapshot()
-        predicates = predicates or []
-        stats = self.file_stats() if active else {}
         state = self._state()
-        cm = state["colmap"]
+        predicates = predicates or []
+        cands = self._candidate_files(predicates, state)
+        stats = self.file_stats() if cands else {}
         dv_counts = self._dv_counts()
-        dvs = self._active_dvs()
-        # derived (generated-column) predicates are sound for EXCLUSION
-        # (original implies derived, so derived-impossible => zero rows);
-        # the all-match proof keeps the caller's originals only
-        prune_preds = predicates + (
-            self._derived_predicates(state, predicates) if predicates else []
-        )
         meta_total = 0
         ambiguous: list[str] = []
-        for f in active:
+        # derived (generated-column) predicates only EXCLUDE files (in
+        # _candidate_files); the all-match proof keeps the caller's originals
+        for f in cands:
             st = stats.get(f) or {}
-            parts = self._parts(f, cm)
-            if not _file_may_match(st, parts, prune_preds):
-                continue  # provably zero matching rows
-            if st.get("rows") is not None and _file_all_match(st, parts, predicates):
+            if st.get("rows") is not None and _file_all_match(
+                st, self._parts(f, state["colmap"]), predicates
+            ):
                 # every live row matches; DV'd rows also matched, so the
                 # logged per-file DV count subtracts exactly (still metadata)
                 meta_total += st["rows"] - dv_counts.get(f, 0)
             else:
                 ambiguous.append(f)
         if ambiguous:
-            from pyspark.sql import functions as F
-
             df = self._scan_files(
-                ambiguous, dvs, schema_json=_s,
+                ambiguous, self._active_dvs(), schema_json=state["schema"],
                 dv_rows=sum(dv_counts.values()),
             )
-            ops = {"==": "__eq__", ">=": "__ge__", ">": "__gt__", "<=": "__le__", "<": "__lt__"}
-            for col, op, value in predicates:
-                if op == "in":
-                    df = df.filter(F.col(col).isin(list(value)))
-                else:
-                    df = df.filter(getattr(F.col(col), ops[op])(F.lit(value)))
+            if predicates:
+                df = df.filter(self._predicate_column(predicates))
             meta_total += df.count()
         return meta_total
 

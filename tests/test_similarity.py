@@ -447,6 +447,19 @@ def test_cosine_pairs_kernel_raises_on_zero_norm_like_ansi(spark):
         similarity.cosine_pairs(df, "a", "b", "c").collect()
 
 
+def test_unit_vectors_raises_ansi_divide_by_zero_on_zero_norm(spark):
+    """The unit_vectors kernel's zero-norm error carries the same ANSI
+    DIVIDE_BY_ZERO token as with_normalized's JVM form and the
+    cosine_pairs kernel."""
+    df = spark.createDataFrame(
+        [(1, [1.0] * 8), (2, [0.0] * 8)], "id long, embedding array<double>"
+    )
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        similarity.with_normalized(df).collect()
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        similarity.unit_vectors(df).collect()
+
+
 def test_lsh_key_kernels_bit_identical_to_expression_form(spark):
     """lsh_table_keys and the kernelized lsh_bucket_signatures must equal
     the _lsh_bucket_expr expression tree bucket-for-bucket, including the

@@ -2004,6 +2004,124 @@ def test_dv_guardrail_routes_large_dml_to_cow(spark, tmp_path):
     assert t2._active_dvs() == []
 
 
+#: op name each mode="dv" statement commits under
+_DV_OPS = {"delete": "delete_dv", "update": "update_dv", "merge": "merge_dv"}
+
+
+def _dv_table(spark, path, rows=2000, files=4):
+    t = TxTable(spark, path)
+    t.append(
+        spark.range(rows)
+        .selectExpr("cast(id as int) k", "concat('v', id) v")
+        .repartition(files)
+    )
+    return t
+
+
+def _dv_statement(spark, t, op, lo):
+    """A 50-row mode="dv" statement on keys [lo, lo + 50)."""
+    where = [("k", ">=", lo), ("k", "<", lo + 50)]
+    if op == "delete":
+        return t.delete_where(where, mode="dv")
+    if op == "update":
+        return t.update_where(where, {"v": F.lit("u")}, mode="dv")
+    src = spark.createDataFrame(
+        [(lo + i, "m") for i in range(25)] + [(-1 - lo - i, "n") for i in range(25)],
+        "k int, v string",
+    )
+    return t.merge_into(src, on=["k"], mode="dv")
+
+
+def _inject_write_failure(monkeypatch, leg):
+    """Make every parquet write of one leg fail AFTER its files landed:
+    ``"vector"`` is the deletion-vector write (rel_file, row_index), and
+    ``"stage"`` every other write (the data-file stage)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **kw):
+        real(self, path, *a, **kw)
+        if (self._df.columns == ["rel_file", "row_index"]) == (leg == "vector"):
+            raise RuntimeError(f"injected {leg} write failure")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+@pytest.mark.parametrize("op", sorted(_DV_OPS))
+def test_dv_dml_shares_one_commit_protocol(spark, tmp_path, monkeypatch, op):
+    """DELETE, UPDATE and MERGE in mode="dv" commit through one protocol:
+    a failure in either leg (the vector write, the new-row stage) adds no
+    version and leaves nothing uncommitted behind — no staging residue,
+    no orphaned data or vector file; a successful statement lands exactly
+    one commit whose vectors' blast radius covers every vector it adds."""
+    t = _dv_table(spark, str(tmp_path / "t"))
+    v0 = t.version()
+    staging = os.path.join(t.path, "_staging")
+    for leg in ("vector", "stage") if op != "delete" else ("vector",):
+        with monkeypatch.context() as m:
+            _inject_write_failure(m, leg)
+            with pytest.raises(Exception, match=f"injected {leg} write failure"):
+                _dv_statement(spark, t, op, 100)
+        assert t.version() == v0, leg
+        assert not os.path.isdir(staging) or os.listdir(staging) == [], leg
+        assert t.orphan_sweep(dry_run=True, grace_seconds=0)["would_remove"] == [], leg
+
+    res = _dv_statement(spark, t, op, 100)
+    assert res["dv_rows"] == (25 if op == "merge" else 50)
+    assert t.version() == v0 + 1
+    last = t.history()[-1]
+    assert last["op"] == _DV_OPS[op]
+    assert last["dv_added"] and set(last["dv_covers"]) == set(last["dv_added"])
+    assert t.orphan_sweep(dry_run=True, grace_seconds=0)["would_remove"] == []
+    got = {r.k: r.v for r in t.read().collect()}
+    want = {i: f"v{i}" for i in range(2000)}
+    if op == "delete":
+        for i in range(100, 150):
+            del want[i]
+    elif op == "update":
+        want.update({i: "u" for i in range(100, 150)})
+    else:
+        want.update({100 + i: "m" for i in range(25)})
+        want.update({-101 - i: "n" for i in range(25)})
+    assert got == want
+
+
+def test_dv_delete_and_update_job_counts(spark, tmp_path):
+    """A 50-row DV delete or update pays no eager checkpoint and no
+    groupBy().collect() for its per-file counts (harvested from the
+    written vector): fewer jobs than the 4 (delete) and 7 (update) the
+    separate writers took."""
+    jsc = spark.sparkContext._jsc.sc()
+    t = _dv_table(spark, str(tmp_path / "t"), rows=20000, files=8)
+    jobs = {}
+    for rep, op in enumerate(["delete", "update"] * 2):
+        first = jsc.dagScheduler().nextJobId()
+        _dv_statement(spark, t, op, 1000 * rep)
+        jobs[op] = jsc.dagScheduler().nextJobId() - first  # second (warm) run wins
+    assert jobs["delete"] < 4 and jobs["update"] < 7, jobs
+
+
+def test_dv_merge_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """Both concurrent legs of a DV merge submit their jobs under the
+    caller's job group, like the jobs it runs on the calling thread."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    t = _dv_table(spark, str(tmp_path / "t"))
+    sc.setJobGroup("dv-merge-group", "dv merge")
+    try:
+        first = jsc.dagScheduler().nextJobId()
+        _dv_statement(spark, t, "merge", 100)
+        ids = set(range(first, jsc.dagScheduler().nextJobId()))
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    jsc.listenerBus().waitUntilEmpty()
+    grouped = set(sc.statusTracker().getJobIdsForGroup("dv-merge-group"))
+    assert ids and ids <= grouped, sorted(ids - grouped)
+
+
 def test_dv_broadcast_gated_on_logged_counts(spark, tmp_path):
     """Above DV_BROADCAST_MAX_ROWS logged deleted rows, the reader's DV
     anti-join stops broadcasting (shuffle join instead) — and the result is
