@@ -77,11 +77,6 @@ _WATERMARK = "ann.srcVersion"
 #: the object-store sweet spot and keep the SAME pruning shape)
 _CLUSTER_ROWS_PER_FILE = 65536
 
-#: driver-side key-list cap for point-fetch IN-predicates (the
-#: lsh_index.PROBE_KEY_CAP contract): past it, reads fall back to a
-#: distributed semi-join so the driver never holds an unbounded key set
-PROBE_KEY_CAP = 100_000
-
 
 def _bloom_bits(rows_per_file: int) -> int:
     """Bloom sizing for the vec_id point-key index: ~16 bits/row with 7
@@ -1018,7 +1013,6 @@ def ivfpq_index_topk(
     k: int = 5,
     nprobe: int = 3,
     shortlist: int = 200,
-    key_cap: int = PROBE_KEY_CAP,
     as_of: int | None = None,
     allowed: DataFrame | None = None,
 ) -> DataFrame:
@@ -1027,20 +1021,11 @@ def ivfpq_index_topk(
     lists (cid partition predicate -> file pruning), ADC-score ONLY
     those lists' 8-byte codes against the broadcast per-query LUT,
     keep a ``shortlist`` per query, then fetch the shortlist's
-    full-precision vectors BY KEY from the source table (IN-predicate
-    read: bloom/span file skipping, bounded by shortlist×|queries|)
-    and re-rank by exact cosine. Generation pins make this consistent
-    under concurrent rebuilds.
-
-    ``key_cap`` bounds the driver-side shortlist key list (the
-    lsh_index_probe contract): an offline batch of 10⁵–10⁶ queries
-    would otherwise materialize shortlist×|queries| keys on the driver
-    for a multi-megabyte IN-predicate that costs more to evaluate
-    against every file's stats than it skips. Past the cap the fetch
-    degrades to a distributed semi-join of the source read against the
-    shortlist — no driver-side key list at all, still one equi-join,
-    only the file-skipping stage is lost (the regime where the
-    shortlist touches most source files anyway)."""
+    full-precision vectors BY KEY from the source table
+    (``TxTable.read_keys``: bloom/span file skipping for a shortlist
+    under its key cap, a distributed semi-join for an offline batch of
+    queries past it) and re-rank by exact cosine. Generation pins make
+    this consistent under concurrent rebuilds."""
     from .pq import _adc_dist, _pq_lut
     from .similarity import _dot, _norm
 
@@ -1128,21 +1113,14 @@ def ivfpq_index_topk(
         .select("query_id", "vec_id")
         .localCheckpoint(eager=True)
     )
-    ids = [
-        r.vec_id
-        for r in short.select("vec_id").distinct().limit(key_cap + 1).collect()
-    ]
     # the re-rank fetch reads the SOURCE at the index's own watermark —
     # index content and full-precision vectors always come from the same
     # corpus snapshot (and an as_of query time-travels BOTH coherently);
     # pre-watermark indexes (no prop) fall back to the source head
     wm = index.properties(as_of=as_of).get("ann.srcVersion")
     src_v = int(wm) if wm is not None else None
-    preds = [("vec_id", "in", sorted(ids))] if len(ids) <= key_cap else None
     try:
-        # bounded point fetch (span/bloom file skipping) under the cap;
-        # over-cap keeps the key set distributed via semi-join below
-        full = src.read(predicates=preds, as_of=src_v)
+        full = src.read_keys(short, "vec_id", as_of=src_v)
     except (FileNotFoundError, ValueError):
         # a STALE index pinned past the source's vacuum/restore horizon:
         # the watermark snapshot is unreconstructible. For a HEAD query
@@ -1163,10 +1141,8 @@ def ivfpq_index_topk(
             RuntimeWarning,
             stacklevel=2,
         )
-        full = src.read(predicates=preds)
+        full = src.read_keys(short, "vec_id")
     full = full.select("vec_id", "embedding")
-    if preds is None:
-        full = full.join(short.select("vec_id").distinct(), "vec_id", "semi")
     q = queries.select("query_id", F.col("embedding").alias("__q"))
     reranked = (
         short.join(full, "vec_id")

@@ -51,11 +51,6 @@ from .retrieval import BM25_B, BM25_K1, bm25_rank, bm25_score_from_stats
 
 ROWS_PER_FILE = 65536
 
-#: driver-side key-list cap for the probe's token IN-predicate (the
-#: lsh_index.PROBE_KEY_CAP contract; defined locally — lsh_index imports
-#: from this module, so the dependency cannot point the other way)
-PROBE_KEY_CAP = 100_000
-
 def _tf_rows(docs: DataFrame, keys: tuple[str, ...] = ("doc_id",)) -> DataFrame:
     """(doc_id, token, tf, dl) for every doc with >=1 token. Extra
     ``keys`` (the old/new image tag ``_new``) group independently, so one
@@ -257,14 +252,14 @@ def bm25_index_topk(
     k: int = 10,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    key_cap: int = PROBE_KEY_CAP,
     as_of: int | None = None,
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k BM25 through the inverted index: ONE pruned read of the
-    postings restricted to the query terms (token IN-predicate — log
+    postings restricted to the query terms (``TxTable.read_keys`` — log
     stats + clustering spans + per-file blooms skip every file that
-    cannot hold a term), df from the fetched postings, corpus scalars
+    cannot hold a term; a mega-batch of queries past its key cap
+    semi-joins instead), df from the fetched postings, corpus scalars
     from the exact integer properties. Identical arithmetic shape (and
     therefore identical scores) to the corpus-scan ``bm25_topk``.
 
@@ -277,26 +272,9 @@ def bm25_index_topk(
     # prefix-consistency replay primitive); default = current head
     v = index.version() if as_of is None else as_of
     props = index.properties(as_of=v)
-    terms = sorted(
-        r.term
-        for r in queries.select("term").distinct().limit(key_cap + 1).collect()
-    )  # driver-bounded: a query's term list, capped at key_cap
-    if len(terms) <= key_cap:
-        post = index.read(as_of=v, predicates=[("token", "in", terms)])
-    else:
-        # an offline mega-batch of queries past the cap keeps its term
-        # set distributed: semi-join the full postings read instead of
-        # materializing a multi-megabyte IN-predicate on the driver —
-        # only the file-skipping stage degrades (that regime touches
-        # most token files anyway)
-        post = index.read(as_of=v).join(
-            queries.select(F.col("term").alias("token")).distinct(),
-            "token",
-            "semi",
-        )
-    post = post.select(
-        "doc_id", "token", "tf", "dl"
-    ).localCheckpoint(eager=False)
+    post = index.read_keys(
+        queries.select(F.col("term").alias("token")), "token", as_of=v
+    ).select("doc_id", "token", "tf", "dl").localCheckpoint(eager=False)
     tf = post.select("doc_id", "token", "tf")
     dl = post.select("doc_id", "dl").distinct()
     df_t = post.groupBy("token").agg(F.count(F.lit(1)).alias("df"))

@@ -663,7 +663,6 @@ def semantic_dedup_incremental(
     batch: DataFrame,
     threshold: float = 0.9,
     radius: int = 1,
-    key_cap: int = 100_000,
     as_of: int | None = None,
 ) -> DataFrame:
     """EMBEDDING-space dedup of an incoming batch against an EXISTING
@@ -696,8 +695,7 @@ def semantic_dedup_incremental(
        vectors point-fetched from the SOURCE at the index's
        ``ann.srcVersion`` watermark (the ivfpq re-rank coherence
        convention — index codes and verify vectors from one corpus
-       snapshot; capped driver IN-list, distributed semi-join past
-       ``key_cap``), duplicate = 6-dp-rounded cosine >= ``threshold``
+       snapshot; fetched by ``TxTable.read_keys``), duplicate = 6-dp-rounded cosine >= ``threshold``
        (rounded so DuckDB lands on identical keep/drop flags);
     4. a corpus row with the SAME id as a batch row is never a match
        (same-key redelivery is exact dedup's job, not semantic's).
@@ -758,16 +756,9 @@ def semantic_dedup_incremental(
     # exact verify against the watermark-pinned source snapshot
     wm = props.get("ann.srcVersion")
     src_v = int(wm) if wm is not None else None
-    ids = [
-        r.vec_id
-        for r in cands.select("vec_id").distinct().limit(key_cap + 1).collect()  # plan-bounded: capped at key_cap+1 rows, semi-join fallback past the cap
-    ]
-    preds = [("vec_id", "in", sorted(ids))] if len(ids) <= key_cap else None
-    full = src.read(predicates=preds, as_of=src_v).select(
+    full = src.read_keys(cands, "vec_id", as_of=src_v).select(
         "vec_id", F.col("embedding").alias("c_emb")
     )
-    if preds is None:
-        full = full.join(cands.select("vec_id").distinct(), "vec_id", "semi")
     qv = batch.select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )

@@ -159,30 +159,20 @@ def lsh_index_pairs(index, max_bucket: int | None = 4096) -> DataFrame:
     )
 
 
-PROBE_KEY_CAP = 100_000
-
-
 def lsh_index_probe(
     index,
     batch: DataFrame,
     text_col: str = "text",
-    key_cap: int = PROBE_KEY_CAP,
     as_of: int | None = None,
 ) -> DataFrame:
     """Near-dups of an INCOMING batch against the indexed corpus: band
     the batch (tiny), read ONLY the index files whose band_key span /
-    bloom can hold the batch's keys (driver-bounded IN-list — batch docs
-    × bands keys), and equi-join. The cross_corpus_dedup shape with the
-    corpus side answered from the index instead of recomputed. Returns
-    (batch_doc, corpus_doc, n_shared_bands).
-
-    ``key_cap`` bounds the driver-side key list: a batch with more
-    distinct band keys than the cap skips the IN-predicate (a
-    multi-megabyte predicate over every file's stats costs more than it
-    saves) and joins against the full entries read instead — still one
-    equi-join, still never re-signing the corpus; only the file-skipping
-    stage degrades, exactly the regime where the batch touches most
-    files anyway."""
+    bloom can hold the batch's keys (``TxTable.read_keys`` — batch docs
+    × bands keys; past its key cap the entries read semi-joins instead,
+    still never re-signing the corpus), and equi-join. The
+    cross_corpus_dedup shape with the corpus side answered from the
+    index instead of recomputed. Returns
+    (batch_doc, corpus_doc, n_shared_bands)."""
     # as_of pins geometry AND entries to one historical version (the
     # time-travel / prefix-consistency replay discipline); default = head
     props = index.properties(as_of=as_of)
@@ -190,12 +180,7 @@ def lsh_index_probe(
         batch.select("doc_id", text_col).withColumnRenamed(text_col, "text"),
         *_geometry(props),
     ).localCheckpoint(eager=True)
-    keys = sorted(
-        r.band_key
-        for r in qe.select("band_key").distinct().limit(key_cap + 1).collect()
-    )
-    preds = [("band_key", "in", keys)] if len(keys) <= key_cap else None
-    corp = index.read(predicates=preds, as_of=as_of).select(
+    corp = index.read_keys(qe, "band_key", as_of=as_of).select(
         "doc_id", "band_id", "band_key"
     )
     return (

@@ -475,7 +475,6 @@ def materialize_silver_tx(
             "of materialize_silver_tx; rename the output column"
         )
     rows_per_file = 65536
-    key_guard_cap = 100_000  # the PROBE_KEY_CAP driver-list convention
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         table = TxTable(batch.sparkSession, table_dir)
@@ -521,20 +520,8 @@ def materialize_silver_tx(
         )
         if ordering != "trust" and not legacy:
             # per-key regression check: fetch the stored timestamps of
-            # ONLY the touched keys (span/bloom-pruned IN read under the
-            # cap, distributed semi-join past it)
-            keys = [
-                r[0]
-                for r in typed.select(key_col)
-                .limit(key_guard_cap + 1)
-                .collect()
-            ]
-            if len(keys) <= key_guard_cap:
-                cur = table.read(predicates=[(key_col, "in", sorted(keys))])
-            else:
-                cur = table.read().join(
-                    typed.select(key_col).distinct(), key_col, "semi"
-                )
+            # ONLY the touched keys (``read_keys``: span/bloom-pruned)
+            cur = table.read_keys(typed, key_col)
             stale = (
                 typed.select(key_col, "_updated")
                 .join(

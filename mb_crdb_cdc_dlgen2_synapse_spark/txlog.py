@@ -55,6 +55,8 @@ guarantee.
 
 from __future__ import annotations
 
+import base64
+import bisect
 import json
 import os
 import re
@@ -319,8 +321,6 @@ class LocalObjectStore(LogStore):
     def _list_page(self, path: str, start_after: str) -> list[str]:
         """One List request: up to ``page_size`` object names after the
         continuation key, lexicographic (every object store's contract)."""
-        import bisect
-
         self.pages_served += 1
         try:
             names = sorted(
@@ -545,12 +545,12 @@ def _partition_values(relpath: str) -> dict[str, str]:
 
 #: predicate ops accepted by ``TxTable.read(predicates=...)``
 _OPS = {
-    "==": lambda lo, hi, v: not (v < lo or v > hi),
+    "==": None,  # point values and key sets: _KeySet.may_match
     ">=": lambda lo, hi, v: not (hi < v),
     ">": lambda lo, hi, v: not (hi <= v),
     "<=": lambda lo, hi, v: not (lo > v),
     "<": lambda lo, hi, v: not (lo >= v),
-    "in": lambda lo, hi, vs: any(not (v < lo or v > hi) for v in vs),
+    "in": None,
     # substring containment: a min/max RANGE can never prove a substring
     # absent, so the range check keeps the file — skipping comes from the
     # trigram bloom index (and exact partition values) in _file_may_match
@@ -578,8 +578,6 @@ def _bloom_positions(value, k: int, m: int) -> list[int]:
 def _bloom_maybe_contains(bl: dict, value) -> bool:
     """Bloom membership test against a logged per-file filter
     ({"m", "k", "b64"}). True = maybe present; False = PROVEN absent."""
-    import base64
-
     if not isinstance(value, (str, int)) or isinstance(value, bool):
         return True  # only canonically-stringable types are indexed
     bits = base64.b64decode(bl["b64"])
@@ -587,6 +585,69 @@ def _bloom_maybe_contains(bl: dict, value) -> bool:
         if not (bits[h >> 3] >> (h & 7)) & 1:
             return False
     return True
+
+
+#: an ``in`` list probes file blooms only up to this many keys; past it
+#: spans alone decide (hashing 50 k keys costs more driver time than the
+#: skipped files save)
+_BLOOM_IN_CAP = 4_096
+
+
+class _KeySet:
+    """An ``in`` value list (or one ``==`` value) prepared once for a
+    whole file listing: NULLs dropped (a NULL equals no key), values
+    sorted so each file's [min, max] span is one bisect, bloom positions
+    hashed once per key and filter geometry instead of once per key and
+    file."""
+
+    def __init__(self, values):
+        self.values = [v for v in values if v is not None]
+        self._strs: set[str] | None = None  # built on first partition test
+        try:
+            self.sorted = sorted(self.values)
+        except TypeError:
+            self.sorted = None  # incomparable values: no span test
+        self._pos: dict[tuple, list[int]] = {}
+
+    def may_match(self, col: str, stats: dict | None, parts: dict[str, str]) -> bool:
+        """False only when the file's partition value, span or bloom
+        PROVES it holds none of the keys."""
+        if col in parts:
+            if self._strs is None:
+                self._strs = {str(v) for v in self.values}
+            return parts[col] in self._strs
+        if not stats:
+            return True
+        bl = (stats.get("bloom") or {}).get(col)
+        if bl is not None and (
+            bl.get("mode") == "trigram" or len(self.values) > _BLOOM_IN_CAP
+        ):
+            bl = None  # spans alone decide
+        keys = self.values
+        lo, hi = stats.get("min", {}).get(col), stats.get("max", {}).get(col)
+        if lo is not None and hi is not None and self.sorted is not None:
+            try:
+                i = bisect.bisect_left(self.sorted, lo)
+                j = bisect.bisect_right(self.sorted, hi, i)
+            except TypeError:
+                pass  # incomparable predicate value vs stored stat — keep file
+            else:
+                if i == j:
+                    return False
+                keys = self.sorted[i:j] if bl is not None else keys
+        if bl is None:
+            return bool(keys)
+        m, k = bl["m"], bl["k"]
+        bits = base64.b64decode(bl["b64"])
+        for v in keys:
+            if not isinstance(v, (str, int)) or isinstance(v, bool):
+                return True  # only canonically-stringable types are indexed
+            pos = self._pos.get((m, k, v))
+            if pos is None:
+                pos = self._pos[(m, k, v)] = _bloom_positions(v, k, m)
+            if all((bits[h >> 3] >> (h & 7)) & 1 for h in pos):
+                return True
+        return False
 
 
 #: generated-column expression shapes that are MONOTONE NONDECREASING in
@@ -700,18 +761,24 @@ def _file_may_match(stats: dict | None, parts: dict[str, str], predicates) -> bo
     predicate (conjunction). Missing stats for a column -> may match.
     Point predicates (==, in) additionally consult the file's logged
     bloom filter when the table declares one for the column — the skip
-    that works where every file's min/max RANGE overlaps the value."""
+    that works where every file's min/max RANGE overlaps the value.
+    An ``in`` value is a plain list or a ``_KeySet`` prepared once for
+    many files (``TxTable._candidate_files``)."""
     if stats and stats.get("rows") == 0:
         return False  # zero logged rows: provably nothing to match
     for col, op, value in predicates:
         if op not in _OPS:
             raise ValueError(f"unsupported predicate op {op!r} (have {sorted(_OPS)})")
+        if op in ("==", "in"):
+            # a point value is a one-key set
+            ks = value if isinstance(value, _KeySet) else _KeySet(
+                value if op == "in" else [value]
+            )
+            if not ks.may_match(col, stats, parts):
+                return False
+            continue
         if col in parts:
             # partition value: exact, min == max == path string
-            if op == "==" and str(value) != parts[col]:
-                return False
-            if op == "in" and parts[col] not in {str(v) for v in value}:
-                return False
             if op == "contains" and str(value) not in parts[col]:
                 return False
             if op in (">=", ">", "<=", "<") and _part_range_excludes(
@@ -729,21 +796,13 @@ def _file_may_match(stats: dict | None, parts: dict[str, str], predicates) -> bo
             except TypeError:
                 pass  # incomparable predicate value vs stored stat — keep file
         bl = (stats.get("bloom") or {}).get(col)
-        if bl is not None:
-            trigram = bl.get("mode") == "trigram"
-            if op == "==" and not trigram and not _bloom_maybe_contains(bl, value):
-                return False
-            if op == "in" and not trigram and not any(
-                _bloom_maybe_contains(bl, v) for v in value
-            ):
-                return False
-            if op == "contains" and trigram:
-                # every trigram of the needle must be maybe-present; a
-                # needle under 3 chars has no trigram and never skips
-                # (the ClickHouse ngrambf contract)
-                for t in _trigrams(str(value)):
-                    if not _bloom_maybe_contains(bl, t):
-                        return False
+        if op == "contains" and bl is not None and bl.get("mode") == "trigram":
+            # every trigram of the needle must be maybe-present; a needle
+            # under 3 chars has no trigram and never skips (the
+            # ClickHouse ngrambf contract)
+            for t in _trigrams(str(value)):
+                if not _bloom_maybe_contains(bl, t):
+                    return False
     return True
 
 
@@ -1904,8 +1963,6 @@ class TxTable:
         positions per file — bounded by the filter size, not the row
         count. Bitsets key by PHYSICAL column name like min/max stats;
         ``file_stats`` remaps them to logical for pruning consumers."""
-        import base64
-
         from pyspark.sql import functions as F
 
         cfg = self._state()["bloom"]
@@ -2071,7 +2128,7 @@ class TxTable:
     #: the per-commit filter hashes on the driver (<= k x cap md5 calls,
     #: ~0.3 s worst case); above it the distributed pass runs — the
     #: bounded-driver-work-with-distributed-fallback pattern shared with
-    #: PROBE_KEY_CAP / MERGE_KEYSET_CAP
+    #: KEYSET_CAP
     BLOOM_BUILD_DRIVER_ROWS_CAP = 65_536
 
     def _bloom_for_staged_driver(
@@ -2145,8 +2202,6 @@ class TxTable:
         """Assemble per-file bloom bitsets from collected bit positions
         and attach them to ``stats`` — the shared tail of the distributed
         and driver-side builds (identical right-sizing and encoding)."""
-        import base64
-
         for rel in relpaths:
             if rel not in by_rel:
                 # normalization failed to map this staged file back to a
@@ -3818,14 +3873,10 @@ class TxTable:
     #: write and then tax every subsequent read with a huge anti-join,
     #: while CoW pays one partition-parallel rewrite and is read-free after
     DV_MAX_ROWS = 2_000_000
-    #: merge key-set pruning: max distinct source keys (per key column)
-    #: collected driver-side to refine span-based candidate pruning; a
-    #: batch with more distinct keys than this skips the refinement (the
-    #: global span is almost certainly saturated anyway)
-    MERGE_KEYSET_CAP = 50_000
-    #: bloom-based candidate pruning engages only for batches this small
-    #: (per-file cost is keys × hashes bit probes)
-    MERGE_BLOOM_KEYSET_CAP = 4_096
+    #: max distinct keys collected to the driver for an ``in`` predicate
+    #: (``read_keys``, ``merge_into`` pruning); past it reads semi-join
+    #: and merges prune by the key column's min/max only
+    KEYSET_CAP = 100_000
     #: snapshot read-plan memo bound (ADVICE r12): long-lived maintenance
     #: lifecycles commit many versions, each read under several predicate
     #: shapes — an unbounded memo pins one JVM logical plan per
@@ -4191,7 +4242,8 @@ class TxTable:
         Derived (generated-column) predicates join the test: they are
         implication-sound for candidate EXCLUSION (a file provably empty
         under the derived triple holds no row matching the original
-        predicate either); row filtering stays the caller's originals."""
+        predicate either); row filtering stays the caller's originals.
+        Each ``in`` list is prepared once (``_KeySet``) for every file."""
         if state is None:
             state = self._state()
         active = state["active"]
@@ -4199,7 +4251,10 @@ class TxTable:
             return []
         stats = self.file_stats(state["version"])
         cm = state["colmap"]
-        prune = predicates + self._derived_predicates(state, predicates)
+        prune = [
+            (c, op, _KeySet(v) if op == "in" else v)
+            for c, op, v in predicates + self._derived_predicates(state, predicates)
+        ]
         return [
             f for f in active if _file_may_match(stats.get(f), self._parts(f, cm), prune)
         ]
@@ -4212,7 +4267,8 @@ class TxTable:
         to_date(ts)`` partitioning the table, a predicate on raw ``ts``
         implies one on ``ingest_date`` — monotone expressions map range
         bounds (strict ops relax to their inclusive forms: conservative,
-        never wrong), equality/IN map pointwise. The derived triples are
+        never wrong), equality maps pointwise and an IN list through its
+        min and max (a ``>=``/``<=`` pair). The derived triples are
         used for FILE PRUNING only; row filtering stays the caller's
         original predicates. Evaluation of f(bound) runs the expression on
         a one-row literal — driver-side, per (expr, value), no table I/O.
@@ -4232,7 +4288,7 @@ class TxTable:
             if schema
             else {}
         )
-        relax = {"==": "==", ">=": ">=", "<=": "<=", ">": ">=", "<": "<=", "in": "in"}
+        relax = {"==": "==", ">=": ">=", "<=": "<=", ">": ">=", "<": "<="}
 
         def feval(expr: str, src: str, v):
             key = (expr, src, repr(v))
@@ -4257,17 +4313,53 @@ class TxTable:
             if src is None or src not in fields:
                 continue
             for col, op, value in predicates:
-                if col != src or op not in relax:
+                if col != src:
                     continue
                 if op == "in":
-                    fvs = [feval(gexpr, src, v) for v in value]
-                    if all(fv is not None for fv in fvs):
-                        derived.append((gcol, "in", fvs))
+                    vals = [v for v in value if v is not None]
+                    try:
+                        bounds = [(">=", min(vals)), ("<=", max(vals))]
+                    except (TypeError, ValueError):
+                        continue  # empty or incomparable list: no derivation
                 else:
-                    fv = feval(gexpr, src, value)
+                    bounds = [(relax[op], value)] if op in relax else []
+                for gop, v in bounds:
+                    fv = feval(gexpr, src, v)
                     if fv is not None:
-                        derived.append((gcol, relax[op], fv))
+                        derived.append((gcol, gop, fv))
         return derived
+
+    def _distinct_keys(self, df: DataFrame, col: str) -> list | None:
+        """The sorted non-NULL distinct values of ``df[col]``, or None when
+        there are more than ``KEYSET_CAP`` — the one capped driver-side key
+        collect (one job) behind ``read_keys`` and ``merge_into`` pruning."""
+        vals = [
+            r[0]
+            for r in df.select(col).distinct().limit(self.KEYSET_CAP + 1).collect()
+        ]
+        if len(vals) > self.KEYSET_CAP:
+            return None
+        vals = [v for v in vals if v is not None]
+        try:
+            return sorted(vals)
+        except TypeError:
+            return vals
+
+    def read_keys(
+        self, keys: DataFrame, col: str, as_of: int | None = None
+    ) -> DataFrame:
+        """Rows whose ``col`` is one of ``keys[col]`` (NULL keys match
+        nothing). Up to ``KEYSET_CAP`` distinct keys read with an ``in``
+        predicate, so file spans, partition values and blooms skip every
+        file that cannot hold a key; past the cap the key set stays
+        distributed — a semi-join of the full read, only file skipping is
+        lost. Both regimes return the same rows."""
+        vals = self._distinct_keys(keys, col)
+        if vals is not None:
+            return self.read(as_of=as_of, predicates=[(col, "in", vals)])
+        return self.read(as_of=as_of).join(
+            keys.select(col).distinct(), col, "semi"
+        )
 
     def read(
         self,
@@ -4463,7 +4555,11 @@ class TxTable:
         out = out.localCheckpoint(eager=True)
         added, stats = self._stage(out, part_cols or None)
         if extra_df is not None:
-            added2, stats2 = self._stage(extra_df, extra_partition_by)
+            try:
+                added2, stats2 = self._stage(extra_df, extra_partition_by)
+            except BaseException:
+                self._unlink(added)  # the rewrite leg is already staged
+                raise
             added = added + added2
             stats = {**stats, **stats2}
         cand_set = set(cands)
@@ -4692,14 +4788,17 @@ class TxTable:
         - source rows with no target match are inserted (``insert=True``),
           unless they are deletes.
 
-        Scale shape: only files whose logged per-key min/max (or hive
-        partition values) overlap the source's key span are read and
-        rewritten — a merge of a small batch into a huge table touches the
-        few files its keys land in, which is why the table should be laid
-        out by a key-derived partition (``partition_by``, used when the
-        table is created by the first merge). The no-match insert anti-join
-        runs against candidate files only: pruning PROVES non-candidates
-        hold no matching key. Source must carry every target column and be
+        Scale shape: only files that may hold a source key are read and
+        rewritten — the batch's distinct keys go through the same ``in``
+        evaluator as ``read_keys`` (``_candidate_files``: hive partition
+        values, logged per-key min/max, blooms; a key column past
+        ``KEYSET_CAP`` distinct values prunes by its span). A merge of a
+        small batch into a huge table touches the few files its keys land
+        in, which is why the table should be laid out by a key-derived
+        partition (``partition_by``, used when the table is created by
+        the first merge). The no-match insert anti-join runs against
+        candidate files only: pruning PROVES non-candidates hold no
+        matching key. Source must carry every target column and be
         key-unique (reduce CDC streams to latest-per-key first — the
         ``operators.cdc.latest_state`` shape); duplicate source keys would
         fan out matched target rows, as in Delta's multiple-match error.
@@ -4762,132 +4861,31 @@ class TxTable:
             self.append(out, partition_by=partition_by, props=props)
             return {"files_rewritten": 0, "version": self.version()}
 
-        # candidate files: key-span overlap on every merge key. The span
-        # bounds derive from the SAME capped distinct-key collect the
-        # key-set refinement below uses (one Spark job per key column
-        # instead of a bounds aggregate PLUS a distinct collect); only a
-        # batch with more than MERGE_KEYSET_CAP distinct keys pays the
-        # dedicated min/max aggregate.
-        keyvals: dict[str, list] = {}
+        # candidate files: one capped distinct-key collect per merge key
+        # (``_distinct_keys``) prunes through the shared ``in`` evaluator
+        # of ``_candidate_files`` — partition values, each file's span
+        # bisected against the sorted keys, blooms — so a small batch of
+        # scattered keys touches only the files that may hold one. A key
+        # column past KEYSET_CAP prunes by its min/max (one aggregate).
+        preds: list[tuple] = []
         need_agg: list[str] = []
         for k in on:
-            vals = [
-                r[0]
-                for r in src.select(k)
-                .distinct()
-                .limit(self.MERGE_KEYSET_CAP + 1)
-                .collect()
-            ]
-            if len(vals) <= self.MERGE_KEYSET_CAP:
-                keyvals[k] = vals
-            else:
+            vals = self._distinct_keys(src, k)
+            if vals is None:
                 need_agg.append(k)
-        bounds = (
-            src.agg(
+            else:
+                preds.append((k, "in", vals))
+        if need_agg:
+            bounds = src.agg(
                 *[F.min(k).alias(f"lo_{k}") for k in need_agg],
                 *[F.max(k).alias(f"hi_{k}") for k in need_agg],
             ).first()
-            if need_agg
-            else {}
-        )
-        preds = []
-        for k in on:
-            if k in keyvals:
-                nn = [v for v in keyvals[k] if v is not None]
-                try:
-                    lo = min(nn) if nn else None
-                    hi = max(nn) if nn else None
-                except TypeError:
-                    lo = hi = None  # incomparable type: no span pruning
-            else:
-                lo, hi = bounds[f"lo_{k}"], bounds[f"hi_{k}"]
-            if lo is not None:
-                preds.append((k, ">=", lo))
-            if hi is not None:
-                preds.append((k, "<=", hi))
+            for k in need_agg:
+                if bounds[f"lo_{k}"] is not None:
+                    preds.append((k, ">=", bounds[f"lo_{k}"]))
+                if bounds[f"hi_{k}"] is not None:
+                    preds.append((k, "<=", bounds[f"hi_{k}"]))
         cands = self._candidate_files(preds)
-        # KEY-SET refinement: the span test keeps every file the batch's
-        # GLOBAL [min,max] overlaps — on a merge-key-clustered table a
-        # small batch of scattered keys still spans the whole domain and
-        # defeats it. When the batch's distinct keys are few (bounded
-        # driver set), a candidate whose [lo,hi] contains NONE of them is
-        # PROVEN clean: bisect the sorted key list against each file's
-        # tight span. Sound by construction (only ever shrinks the set
-        # using the same footer stats); fail-open on missing stats or
-        # incomparable types.
-        if len(cands) > 1:
-            keysets: dict[str, list] = {}
-            for k, vals in keyvals.items():
-                if 0 < len(vals) <= self.MERGE_KEYSET_CAP and None not in vals:
-                    try:
-                        keysets[k] = sorted(vals)
-                    except TypeError:
-                        pass
-            if keysets:
-                import base64
-                import bisect
-
-                # bloom positions are a function of (value, k, m) only —
-                # precompute per distinct filter geometry so the md5 cost
-                # is paid once per key, not once per key × file. Only
-                # engaged for small key sets (the per-file bit test is
-                # keys × hashes); larger batches rely on spans alone.
-                pos_cache: dict[tuple[int, int], list[list[int]]] = {}
-
-                def _bloom_proves_absent(bl: dict, vs: list) -> bool:
-                    if len(vs) > self.MERGE_BLOOM_KEYSET_CAP:
-                        return False
-                    if not all(
-                        isinstance(v, (str, int)) and not isinstance(v, bool)
-                        for v in vs
-                    ):
-                        return False
-                    geom = (bl["m"], bl["k"])
-                    pos = pos_cache.get(geom)
-                    if pos is None:
-                        pos = [
-                            _bloom_positions(v, bl["k"], bl["m"]) for v in vs
-                        ]
-                        pos_cache[geom] = pos
-                    bits = base64.b64decode(bl["b64"])
-                    for plist in pos:
-                        if all((bits[h >> 3] >> (h & 7)) & 1 for h in plist):
-                            return False  # this key maybe present
-                    return True  # every key provably absent
-
-                stats = self.file_stats()
-                cm = self._state()["colmap"]
-
-                def _holds_a_key(f: str) -> bool:
-                    st = stats.get(f) or {}
-                    parts_f = self._parts(f, cm)
-                    for k, vs in keysets.items():
-                        # _parts returns LOGICAL keys; footer stats carry
-                        # PHYSICAL column names
-                        pk = cm.get(k, k) if cm else k
-                        if k in parts_f:
-                            if parts_f[k] not in {str(v) for v in vs}:
-                                return False
-                            continue
-                        lo = st.get("min", {}).get(pk)
-                        hi = st.get("max", {}).get(pk)
-                        if lo is not None and hi is not None:
-                            try:
-                                i = bisect.bisect_left(vs, lo)
-                                if i == len(vs) or vs[i] > hi:
-                                    return False
-                            except TypeError:
-                                pass
-                        # span saturated (e.g. every bucket partition tiles
-                        # the whole key domain): the per-file bloom proves
-                        # point keys absent where ranges cannot
-                        bl = (st.get("bloom") or {}).get(pk)
-                        if bl is not None and bl.get("mode") != "trigram":
-                            if _bloom_proves_absent(bl, vs):
-                                return False
-                    return True
-
-                cands = [f for f in cands if _holds_a_key(f)]
 
         # target columns come from the LOGGED schema — constructing a full
         # table scan just to ask for .columns costs a multi-group plan

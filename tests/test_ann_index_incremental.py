@@ -1295,9 +1295,9 @@ def test_drift_policy_empty_sample_falls_back_to_exact(spark, tmp_path):
         catchup_ivfpq_index(src2, idx2, cents2, books2)
 
 
-def test_ivfpq_topk_key_cap_falls_back_to_semi_join(spark, tmp_path):
+def test_ivfpq_topk_key_cap_falls_back_to_semi_join(spark, tmp_path, monkeypatch):
     """ADVICE-r10 advisory: the IVFADC+R re-rank fetch is driver-bounded
-    by key_cap — past it the full-precision vectors come from a
+    by TxTable.KEYSET_CAP — past it the full-precision vectors come from a
     distributed semi-join against the shortlist instead of a
     shortlist×|queries| IN-predicate, with identical answers."""
     from mb_crdb_cdc_dlgen2_synapse_spark.operators.ann_index import (
@@ -1322,9 +1322,9 @@ def test_ivfpq_topk_key_cap_falls_back_to_semi_join(spark, tmp_path):
     capped = key(ivfpq_index_topk(
         index, cents, books, src, queries, k=3, nprobe=3, shortlist=60
     ))
+    monkeypatch.setattr(TxTable, "KEYSET_CAP", 1)
     fallback = key(ivfpq_index_topk(
-        index, cents, books, src, queries, k=3, nprobe=3, shortlist=60,
-        key_cap=1,
+        index, cents, books, src, queries, k=3, nprobe=3, shortlist=60
     ))
     assert capped == fallback and capped
 

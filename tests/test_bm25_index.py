@@ -359,15 +359,16 @@ def test_autocompact_bounds_postings_fragmentation(
     assert via_index == via_scan
 
 
-def test_topk_term_cap_falls_back_to_semi_join(spark, docs, tmp_path):
+def test_topk_term_cap_falls_back_to_semi_join(spark, docs, tmp_path, monkeypatch):
     """Past the driver-side term cap the probe skips the token
     IN-predicate and semi-joins the full postings read — identical
-    scores either way (the lsh_index_probe key_cap contract)."""
+    scores either way (the TxTable.read_keys contract)."""
     src = TxTable(spark, str(tmp_path / "src"))
     src.append(docs.filter(F.col("doc_id") < 200))
     index = TxTable(spark, str(tmp_path / "idx"))
     catchup_bm25_index(src, index)
     q = _queries(spark)
     pruned = retrieval_rows(bm25_index_topk(index, q, k=10))
-    full = retrieval_rows(bm25_index_topk(index, q, k=10, key_cap=1))
+    monkeypatch.setattr(TxTable, "KEYSET_CAP", 1)
+    full = retrieval_rows(bm25_index_topk(index, q, k=10))
     assert pruned == full and pruned

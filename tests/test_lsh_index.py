@@ -149,7 +149,7 @@ def test_streaming_maintenance_resumes_exactly_once(spark, docs, tmp_path):
     assert catchup_lsh_index(src, TxTable(spark, idx_dir)) == src.version()
 
 
-def test_probe_key_cap_falls_back_to_full_join(spark, docs, tmp_path):
+def test_probe_key_cap_falls_back_to_full_join(spark, docs, tmp_path, monkeypatch):
     """Past the driver-side key cap the probe skips the IN-predicate and
     joins the full entries read — identical answers either way."""
     src = TxTable(spark, str(tmp_path / "src"))
@@ -163,5 +163,6 @@ def test_probe_key_cap_falls_back_to_full_join(spark, docs, tmp_path):
         (r.batch_doc, r.corpus_doc, r.n_shared_bands) for r in df.collect()
     )
     pruned = key(lsh_index_probe(index, batch))
-    full = key(lsh_index_probe(index, batch, key_cap=1))  # force fallback
+    monkeypatch.setattr(TxTable, "KEYSET_CAP", 1)  # force fallback
+    full = key(lsh_index_probe(index, batch))
     assert pruned == full and pruned

@@ -105,3 +105,33 @@ def test_carried_rows_respect_deletion_vectors(spark, tmp_path):
     t.replace_where(_df(spark, [(100, "a", "new")]), [("region", "==", "a")])
     got = sorted(r.k for r in t.read().collect())
     assert got == [5, 6, 8, 9, 100]  # 7 stays deleted; region=a replaced
+
+
+def test_failed_incoming_stage_leaves_no_orphan(spark, tmp_path, monkeypatch):
+    """The rewritten carried rows are staged before the incoming rows: when
+    the incoming rows' write fails, the already-staged rewrite is removed
+    again — no version added, nothing left for the orphan sweep."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.append(_df(spark, [(i, "a", f"v{i}") for i in range(100)]))
+    v0 = t.version()
+    real = DataFrameWriter.parquet
+    writes = []
+
+    def parquet(self, path, *a, **kw):
+        real(self, path, *a, **kw)
+        writes.append(path)
+        if len(writes) == 2:
+            raise RuntimeError("injected incoming-rows write failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        with pytest.raises(RuntimeError, match="injected incoming-rows"):
+            t.replace_where(
+                _df(spark, [(i, "a", "new") for i in range(25)]), [("k", "<", 25)]
+            )
+    assert len(writes) == 2
+    assert t.version() == v0
+    assert t.orphan_sweep(dry_run=True, grace_seconds=0)["would_remove"] == []
+    assert sorted(r.k for r in t.read().collect()) == list(range(100))

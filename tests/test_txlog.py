@@ -2311,6 +2311,105 @@ def test_merge_keyset_pruning_bounds_candidates_on_clustered_table(
     assert t.read().filter("k = 999").count() == 0
 
 
+def _key_clustered(spark, path, files=16):
+    """``files`` key-clustered files of 100 rows with disjoint key spans."""
+    t = TxTable(spark, path)
+    t.append(
+        spark.range(files * 100).selectExpr("id k", "concat('v', id) v"),
+        cluster_by=["k"],
+        max_records_per_file=100,
+    )
+    spans = sorted(
+        (st["min"]["k"], st["max"]["k"]) for st in t.file_stats().values()
+    )
+    assert len(spans) == files
+    assert all(a[1] < b[0] for a, b in zip(spans, spans[1:])), spans
+    return t
+
+
+def _jobs(spark, thunk):
+    """(Spark jobs ``thunk`` started, its result)."""
+    jsc = spark.sparkContext._jsc.sc()
+    first = jsc.dagScheduler().nextJobId()
+    out = thunk()
+    return jsc.dagScheduler().nextJobId() - first, out
+
+
+def test_merge_keyset_pruning_survives_a_key_rename(spark, tmp_path):
+    """Merge pruning goes through the shared ``in`` evaluator, which reads
+    stats under LOGICAL names: after renaming the merge key, a 2-key DV
+    merge into 16 disjoint key-clustered files has as many candidates as
+    on the plain key, and the merge starts at most 13 Spark jobs."""
+    src = spark.createDataFrame([(150, "u"), (1250, "u")], "k long, v string")
+    plain = _key_clustered(spark, str(tmp_path / "plain"))
+    jobs, res = _jobs(spark, lambda: plain.merge_into(src, on=["k"], mode="dv"))
+    assert res["candidates"] == 2, res
+    assert jobs <= 13, jobs
+
+    renamed = _key_clustered(spark, str(tmp_path / "renamed"))
+    renamed.rename_column("k", "key")
+    res2 = renamed.merge_into(
+        src.withColumnRenamed("k", "key"), on=["key"], mode="dv"
+    )
+    assert res2["candidates"] == res["candidates"], (res2, res)
+    got = {r.key: r.v for r in renamed.read().collect()}
+    assert len(got) == 1600 and got[150] == got[1250] == "u" and got[151] == "v151"
+
+
+def test_in_read_on_generated_source_evaluates_two_bounds(spark, tmp_path):
+    """An ``in`` list on a generated column's source derives the partition
+    filter from its min and max (two evaluations, not one per value): a
+    100-value read starts no more Spark jobs than the ``>=``/``<=`` read of
+    the same span."""
+    import datetime
+
+    path = str(tmp_path / "t")
+    t0 = datetime.datetime(2024, 1, 1)
+    rows = [(k, t0 + datetime.timedelta(hours=k)) for k in range(240)]
+    df = spark.createDataFrame(rows, "k int, ts timestamp")
+    t = TxTable(spark, path)
+    t.append(df.limit(0))
+    t.set_generated_column("d", "to_date(ts)")
+    t.append(df, partition_by=["d"])
+    vals = [ts for _, ts in rows[:100]]
+
+    def read(preds):
+        # a fresh handle: no generated-expression evaluations cached
+        return sorted(r.k for r in TxTable(spark, path).read(predicates=preds).collect())
+
+    n_in, got_in = _jobs(spark, lambda: read([("ts", "in", vals)]))
+    n_range, got_range = _jobs(
+        spark, lambda: read([("ts", ">=", vals[0]), ("ts", "<=", vals[-1])])
+    )
+    assert got_in == got_range == list(range(100))
+    assert n_in <= n_range, (n_in, n_range)
+
+
+def test_read_keys_regimes_return_the_same_rows(spark, tmp_path, monkeypatch):
+    """``read_keys`` under the key cap (``in`` read, file pruning) and past
+    it (semi-join) return the same rows — with a NULL and a duplicate key,
+    a renamed key column and time travel."""
+    t = _key_clustered(spark, str(tmp_path / "t"), files=4)
+    t.rename_column("k", "key")
+    v_before = t.version()
+    t.delete_where([("key", "<", 10)])
+    keys = spark.createDataFrame(
+        [(3,), (42,), (42,), (399,), (None,), (5000,)], "key long"
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    pruned = {
+        v: rows(t.read_keys(keys, "key", as_of=v)) for v in (None, v_before)
+    }
+    assert pruned[None] == [(42, "v42"), (399, "v399")]
+    assert pruned[v_before] == [(3, "v3"), (42, "v42"), (399, "v399")]
+    monkeypatch.setattr(TxTable, "KEYSET_CAP", 1)
+    for v, want in pruned.items():
+        assert rows(t.read_keys(keys, "key", as_of=v)) == want, v
+
+
 def test_props_carrying_merge_aborts_on_racing_props_commit(
     spark, tmp_path, monkeypatch
 ):
