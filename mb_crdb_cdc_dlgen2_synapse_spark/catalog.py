@@ -1659,7 +1659,7 @@ def media_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_latest_state_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CDC latest-state pipeline through the DELETION-VECTOR sink
-    (materialize_latest_state_dv): per-batch write cost tracks the batch —
+    (materialize_latest_state): per-batch write cost tracks the batch —
     changed rows plus kilobytes of vector — instead of rewriting touched
     buckets.
 
@@ -1675,8 +1675,8 @@ def streaming_latest_state_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .streaming.ingest import (
         changefeed_stream,
-        materialize_latest_state_dv,
-        read_latest_state_tx,
+        materialize_latest_state,
+        read_latest_state,
     )
 
     tmp = _scratch("cdc_stream_dv")
@@ -1720,10 +1720,10 @@ def streaming_latest_state_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream = changefeed_stream(spark, landing, after_schema)
     table_dir = os.path.join(tmp, "state_dv")
-    q = materialize_latest_state_dv(stream, table_dir, os.path.join(tmp, "ckpt"))
+    q = materialize_latest_state(stream, table_dir, os.path.join(tmp, "ckpt"))
     q.awaitTermination()
     return (
-        read_latest_state_tx(spark, table_dir)
+        read_latest_state(spark, table_dir)
         .select(
             "row_key",
             F.col("after.city").alias("city"),
@@ -3133,7 +3133,7 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge), so the derived SCD2 history hash-checks against the SAME
     oracle as the batch form: streaming ingestion is invisible in the
     result, which is the exactly-once claim."""
-    from .txlog import TxTable, scd2_history
+    from .txlog import TxTable, _foreach_batch, scd2_history
 
     tmp = _scratch("stream_scd2")
     src = os.path.join(tmp, "src")
@@ -3144,7 +3144,7 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = "c_custkey long, c_name string, c_acctbal double, bucket long"
     table_path = os.path.join(tmp, "table")
 
-    def land(batch: DataFrame, batch_id: int) -> None:
+    def land(batch: DataFrame, txn) -> None:
         t = TxTable(batch.sparkSession, table_path)
         if t.version() < 0:
             t.append(batch, partition_by=["bucket"])
@@ -3155,13 +3155,7 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def run_once() -> None:
         stream = spark.readStream.schema(schema).json(src)
-        q = (
-            stream.writeStream.foreachBatch(land)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _foreach_batch(stream, os.path.join(tmp, "ckpt"), land).awaitTermination()
 
     cust.coalesce(2).write.mode("append").json(src)
     run_once()  # v0: base image
@@ -7663,7 +7657,7 @@ def streaming_matview_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     stand-in. Exact decimal accumulation makes the refresh cadence
     immaterial (cadence-invariance asserted in tests/test_matview.py)."""
     from .matview import IncrementalAggView
-    from .txlog import TxTable
+    from .txlog import TxTable, _foreach_batch
 
     tmp = _scratch("stream_mv")
     src = os.path.join(tmp, "json")
@@ -7680,19 +7674,13 @@ def streaming_matview_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, table, os.path.join(tmp, "mv"), ["event_type"], ["value"]
     )
 
-    def land_and_refresh(batch: DataFrame, batch_id: int) -> None:
-        table.append(
-            batch, partition_by=["bucket"], txn={"app": "stream_mv", "batch": batch_id}
-        )
+    def land_and_refresh(batch: DataFrame, txn) -> None:
+        table.append(batch, partition_by=["bucket"], txn=txn("stream_mv"))
         view.refresh()
 
-    q = (
-        stream.writeStream.foreachBatch(land_and_refresh)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _foreach_batch(
+        stream, os.path.join(tmp, "ckpt"), land_and_refresh
+    ).awaitTermination()
     return view.read()
 
 

@@ -131,20 +131,14 @@ class Engine:
         available_now: bool = True,
     ):
         """The full ingestion half of the reference pipeline: unbounded
-        envelope stream -> watermark dedup -> keyed latest-state merge."""
-        from .streaming.ingest import changefeed_stream, materialize_latest_state
+        envelope stream -> keyed latest-state merge (one merge-on-read
+        commit per micro-batch); read with ``read_tx_state``."""
+        from .streaming.ingest import changefeed_stream
 
         stream = changefeed_stream(self.spark, landing_dir, after_schema)
-        return materialize_latest_state(
+        return self.start_dv_ingestion(
             stream, state_dir, checkpoint_dir, available_now=available_now
         )
-
-    def read_state(self, state_dir: str) -> DataFrame:
-        """Live rows of a materialized latest-state table (tombstone delete
-        markers filtered out — see streaming.ingest.read_latest_state)."""
-        from .streaming.ingest import read_latest_state
-
-        return read_latest_state(self.spark, state_dir)
 
     # -- CDC batch surface ---------------------------------------------------
     def latest_state(self, changes: DataFrame, key_cols, ts_col, **kw) -> DataFrame:
@@ -161,27 +155,12 @@ class Engine:
 
         return TxTable(self.spark, path)
 
-    def start_tx_ingestion(
-        self,
-        landing_dir: str,
-        after_schema: T.StructType,
-        table_dir: str,
-        checkpoint_dir: str,
-        available_now: bool = True,
-    ):
-        """Changefeed stream -> transactional latest-state merge (one atomic
-        commit per micro-batch); read with ``read_tx_state``."""
-        from .streaming.ingest import changefeed_stream, materialize_latest_state_tx
-
-        stream = changefeed_stream(self.spark, landing_dir, after_schema)
-        return materialize_latest_state_tx(
-            stream, table_dir, checkpoint_dir, available_now=available_now
-        )
-
     def read_tx_state(self, table_dir: str) -> DataFrame:
-        from .streaming.ingest import read_latest_state_tx
+        """Live rows of a latest-state table (tombstone markers filtered
+        out — see streaming.ingest.read_latest_state)."""
+        from .streaming.ingest import read_latest_state
 
-        return read_latest_state_tx(self.spark, table_dir)
+        return read_latest_state(self.spark, table_dir)
 
     def read_tx_stream(self, table_dir: str, **options) -> DataFrame:
         """A txlog table as a Structured Streaming SOURCE (the Delta
@@ -379,11 +358,11 @@ class Engine:
         self, stream, table_dir: str, checkpoint_dir: str, **kw
     ):
         """CDC latest-state via merge-on-read commits (streaming.ingest.
-        materialize_latest_state_dv): per-batch write cost tracks the
+        materialize_latest_state): per-batch write cost tracks the
         batch, not the touched buckets' state."""
-        from .streaming.ingest import materialize_latest_state_dv
+        from .streaming.ingest import materialize_latest_state
 
-        return materialize_latest_state_dv(stream, table_dir, checkpoint_dir, **kw)
+        return materialize_latest_state(stream, table_dir, checkpoint_dir, **kw)
 
     def start_silver_ingestion(
         self, stream, table_dir: str, checkpoint_dir: str, key_col: str,

@@ -31,7 +31,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..txlog import maybe_compact_index
+from ..txlog import _foreach_batch, maybe_compact_index
 
 #: CDF metadata columns every fold reads besides the family's payload
 _CDF_META = ("_change_type", "_commit_version")
@@ -211,7 +211,7 @@ def stream(
     feed = reader.load(src_dir)
     cols = list(dict.fromkeys(c for _, fam in sides for c in fam.columns))
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
+    def fold(batch: DataFrame, txn) -> None:
         s = batch.sparkSession
         batch = batch.select(*cols, *_CDF_META).localCheckpoint(eager=True)
         for index_dir, make in targets:
@@ -224,14 +224,7 @@ def stream(
             _fold(fam)(index, part, hi)
             fam.compact(index, fam.rows_per_file)
 
-    writer = (
-        feed.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(feed, checkpoint_dir, fold, available_now, "update")
 
 
 def assert_matches_scratch(fam: IndexFamily, index, src) -> None:

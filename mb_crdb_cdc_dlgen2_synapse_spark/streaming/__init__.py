@@ -1,11 +1,8 @@
 from .ingest import (
     changefeed_stream,
-    compact_state,
     dedup_stream,
     materialize_latest_state,
-    materialize_latest_state_tx,
     read_latest_state,
-    read_latest_state_tx,
     stream_to_lake,
 )
 from .source import TxStreamDataSource, TxStreamSinkWriter, register_tx_source
@@ -13,12 +10,9 @@ from .windows import sliding_counts, tumbling_revenue, session_windows
 
 __all__ = [
     "changefeed_stream",
-    "compact_state",
     "dedup_stream",
     "materialize_latest_state",
-    "materialize_latest_state_tx",
     "read_latest_state",
-    "read_latest_state_tx",
     "stream_to_lake",
     "TxStreamDataSource",
     "TxStreamSinkWriter",

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..txlog import TxTable, _foreach_batch
+
 
 def maintain_city_revenue(
     stream: DataFrame,
@@ -28,7 +30,7 @@ def maintain_city_revenue(
     nothing (their ``after`` is NULL).
     """
 
-    def write_partial(batch: DataFrame, batch_id: int) -> None:
+    def write_partial(batch: DataFrame, txn) -> None:
         partial = (
             batch.filter(F.col("after").isNotNull())
             .groupBy(F.col("after.city").alias("city"))
@@ -37,17 +39,14 @@ def maintain_city_revenue(
                 F.count(F.lit(1)).alias("partial_n"),
             )
         )
-        # idempotent under replay: same batch_id -> same directory overwritten
-        partial.write.mode("overwrite").parquet(f"{journal_dir}/batch={batch_id}")
+        # idempotent under replay: same batch id -> same directory overwritten
+        partial.write.mode("overwrite").parquet(
+            f"{journal_dir}/batch={txn()['batch']}"
+        )
 
-    writer = (
-        stream.writeStream.foreachBatch(write_partial)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _foreach_batch(
+        stream, checkpoint_dir, write_partial, available_now, "update"
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_city_revenue(spark: SparkSession, journal_dir: str) -> DataFrame:
@@ -83,11 +82,11 @@ def maintain_distinct_sketches(
     register-max union are deterministic, so the final estimates equal a
     one-shot batch sketch over the same data exactly (asserted in
     tests/test_sketches.py), and the persisted sketch table stays
-    re-mergeable by later rollups (operators/sketches.py).
+    re-mergeable by later rollups (operators/sketches.py). ``app_id``
+    tags the checkpoint-keyed txn marker.
     """
-    from ..txlog import TxTable
 
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
+    def merge_batch(batch: DataFrame, txn) -> None:
         spark = batch.sparkSession
         t = TxTable(spark, table_path)
         batch_sk = batch.groupBy(*key_cols).agg(
@@ -116,16 +115,11 @@ def maintain_distinct_sketches(
             merged = batch_sk
         # staging writes BEFORE the commit swaps the snapshot, so reading
         # `cur` while overwriting is safe; txn marker makes replays no-ops
-        t.overwrite(merged, txn={"app": app_id, "batch": batch_id})
+        t.overwrite(merged, txn=txn(app_id))
 
-    writer = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _foreach_batch(
+        stream, checkpoint_dir, merge_batch, available_now, "update"
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_distinct_estimates(
@@ -133,8 +127,6 @@ def read_distinct_estimates(
 ) -> DataFrame:
     """Current approximate-distinct counts from the persisted sketch table
     (no base-data access; further rollups may union the sketches again)."""
-    from ..txlog import TxTable
-
     t = TxTable(spark, table_path)
     return t.read().select(
         *key_cols, F.hll_sketch_estimate("sketch").alias("approx_distinct")

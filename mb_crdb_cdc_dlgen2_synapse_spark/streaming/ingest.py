@@ -7,9 +7,12 @@ Mapping to reference semantics (SURVEY.md §2.7):
      (tests use ``Trigger.AvailableNow`` for bounded replay)
   T2 event time (``updated``) vs arrival date (dir name) -> both kept
   T3 watermark / late data                 -> ``withWatermark``
-  T6 stateful latest-state                 -> ``foreachBatch`` merge
-  T8 exactly-once                          -> checkpoint + idempotent batch
-     overwrite (at-least-once input x idempotent sink = effectively-once)
+  T6 stateful latest-state                 -> ``materialize_latest_state``:
+     one deletion-vector merge commit per micro-batch
+  T8 exactly-once                          -> checkpoint + idempotent sink
+     (at-least-once input x idempotent sink = effectively-once); every
+     ``foreachBatch`` writer starts through ``txlog._foreach_batch``, which
+     keys txn markers by the query's checkpoint
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ from pyspark.sql import types as T
 
 from ..sources.ndjson import cdc_envelope_schema
 from ..operators.cdc import latest_state
+from ..txlog import TxTable, _foreach_batch
 
 
 def changefeed_stream(
@@ -95,207 +99,10 @@ def stream_to_lake(
 _UPDATED_NUMERIC = "cast(updated as decimal(38,10))"
 
 
-def read_latest_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Read the live rows of a ``materialize_latest_state`` table.
-
-    The state table retains one latest row per key *including tombstones*
-    (``after IS NULL``) — exactly how a Delta MERGE target retains delete
-    markers until VACUUM — so per-batch merges can use dynamic partition
-    overwrite without ever needing to rewrite a bucket to empty. Readers see
-    only live rows; ``compact_state`` purges tombstones for real.
-    """
-    return (
-        spark.read.parquet(state_dir)
-        .filter(F.col("after").isNotNull())
-        .drop("bucket")
-    )
-
-
-def compact_state(spark: SparkSession, state_dir: str) -> None:
-    """Purge tombstone rows bucket-by-bucket (the VACUUM analog). Dynamic
-    partition overwrite rewrites every bucket that still holds a tombstone
-    alongside live rows; buckets that are ALL tombstones get no rows written,
-    so their directories are dropped explicitly via the Hadoop FS API.
-    Buckets without tombstones are left untouched. The bucket lists collected
-    here are partition metadata, bounded by n_buckets."""
-    state = spark.read.parquet(state_dir)
-    doomed = {
-        r.bucket
-        for r in state.filter(F.col("after").isNull()).select("bucket").distinct().collect()
-    }
-    if not doomed:
-        return
-    live = state.filter(F.col("bucket").isin(list(doomed)) & F.col("after").isNotNull())
-    live = live.localCheckpoint(eager=True)
-    live_buckets = {r.bucket for r in live.select("bucket").distinct().collect()}
-    if live_buckets:
-        with _dynamic_overwrite(spark):
-            live.write.mode("overwrite").partitionBy("bucket").parquet(state_dir)
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    for b in doomed - live_buckets:
-        path = jvm.org.apache.hadoop.fs.Path(f"{state_dir}/bucket={b}")
-        path.getFileSystem(conf).delete(path, True)
-
-
-class _dynamic_overwrite:
-    """Scoped ``partitionOverwriteMode=dynamic``: INSERT OVERWRITE replaces
-    only the partitions present in the written data."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", self.prev)
-
-
-def materialize_latest_state(
-    stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    key_expr: str = "cast(key as string)",
-    available_now: bool = True,
-    n_buckets: int = 32,
-):
-    """T6/T7/T8: maintain the current-state table with a ``foreachBatch``
-    keyed merge whose per-batch cost tracks the BATCH, not total state.
-
-    State layout: hive-partitioned by ``bucket = pmod(xxhash64(row_key),
-    n_buckets)``. Each micro-batch
-      1. buckets its incoming keys,
-      2. reads ONLY the state buckets the batch touches (partition pruning),
-      3. takes numeric latest-per-key over (touched state ∪ batch), keeping
-         tombstones as delete markers (see ``read_latest_state``),
-      4. rewrites exactly the touched buckets via dynamic partition overwrite.
-
-    This is the plain-parquet analog of a Delta/Iceberg ``MERGE`` keyed on
-    ``row_key`` (the container has no table format): a batch touching k of N
-    buckets rewrites ~k/N of the state, so a 100 TB state table is never
-    rewritten per trigger. Size ``n_buckets`` so one bucket's live rows fit an
-    executor's memory at the target scale (xxhash64 spreads keys uniformly —
-    no skew). Idempotent under batch replay: re-merging the same events picks
-    the same latest rows, which is what upgrades at-least-once delivery to
-    effectively-once (T8).
-
-    Missing-state detection is an explicit filesystem probe via Spark's
-    Hadoop FS (works for any path scheme); real read errors PROPAGATE and
-    fail the batch instead of silently re-initializing the table.
-    """
-
-    def _state_exists(spark: SparkSession) -> bool:
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc
-        path = jvm.org.apache.hadoop.fs.Path(state_dir)
-        fs = path.getFileSystem(jsc.hadoopConfiguration())
-        return fs.exists(path)
-
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        incoming = batch.select(
-            F.expr(key_expr).alias("row_key"),
-            F.col("updated"),
-            F.col("after"),
-        ).withColumn("bucket", F.pmod(F.xxhash64("row_key"), F.lit(n_buckets)).cast("int"))
-        # Partition METADATA, bounded by n_buckets — not a data collect.
-        touched = [r.bucket for r in incoming.select("bucket").distinct().collect()]
-        if not touched:
-            return
-        if _state_exists(spark):
-            current = spark.read.parquet(state_dir).filter(F.col("bucket").isin(touched))
-            merged_input = current.unionByName(incoming)
-        else:
-            merged_input = incoming
-        new_state = latest_state(
-            merged_input.withColumn("__ts", F.expr(_UPDATED_NUMERIC)),
-            ["row_key"],
-            "__ts",
-        ).drop("__ts")
-        # Every incoming key yields exactly one latest row (live or tombstone),
-        # so each touched bucket is non-empty and dynamic overwrite replaces
-        # precisely the touched buckets. localCheckpoint breaks lineage from
-        # the directory we overwrite.
-        with _dynamic_overwrite(spark):
-            new_state.localCheckpoint(eager=True).write.mode("overwrite").partitionBy(
-                "bucket"
-            ).parquet(state_dir)
-
-    writer = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def materialize_latest_state_tx(
-    stream: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str,
-    key_expr: str = "cast(key as string)",
-    available_now: bool = True,
-    n_buckets: int = 32,
-):
-    """Transactional twin of ``materialize_latest_state``: identical bucketed
-    merge dataflow, but state lives in a txlog table (``..txlog.TxTable``) and
-    each micro-batch lands as ONE atomic ``overwrite_partitions`` commit.
-
-    What the transaction buys over dynamic partition overwrite: a concurrent
-    reader sees the pre-merge or post-merge snapshot, never a half-rewritten
-    bucket, and a crash mid-write leaves the table at the previous version
-    (the uncommitted files are invisible). Same per-batch cost profile — only
-    the touched buckets are read and rewritten. Read the result with
-    ``TxTable(spark, table_dir).read()`` (tombstone markers included; filter
-    ``after IS NOT NULL`` for live rows) or ``read_latest_state_tx``.
-    """
-    from ..txlog import TxTable
-
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        table = TxTable(spark, table_dir)
-        incoming = batch.select(
-            F.expr(key_expr).alias("row_key"),
-            F.col("updated"),
-            F.col("after"),
-        ).withColumn("bucket", F.pmod(F.xxhash64("row_key"), F.lit(n_buckets)).cast("int"))
-        touched = [r.bucket for r in incoming.select("bucket").distinct().collect()]
-        if not touched:
-            return
-        if table.version() >= 0:
-            current = table.read().filter(F.col("bucket").isin(touched))
-            merged_input = current.unionByName(incoming)
-        else:
-            merged_input = incoming
-        new_state = latest_state(
-            merged_input.withColumn("__ts", F.expr(_UPDATED_NUMERIC)),
-            ["row_key"],
-            "__ts",
-        ).drop("__ts")
-        table.overwrite_partitions(
-            new_state.localCheckpoint(eager=True), ["bucket"]
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def read_latest_state_tx(spark: SparkSession, table_dir: str) -> DataFrame:
-    """Live rows of a transactional latest-state table."""
-    from ..txlog import TxTable
-
+def read_latest_state(spark: SparkSession, table_dir: str) -> DataFrame:
+    """Live rows of a ``materialize_latest_state`` table: its tombstone
+    markers (``after IS NULL``) filtered out, the ``bucket`` column
+    dropped."""
     return (
         TxTable(spark, table_dir)
         .read()
@@ -304,7 +111,7 @@ def read_latest_state_tx(spark: SparkSession, table_dir: str) -> DataFrame:
     )
 
 
-def materialize_latest_state_dv(
+def materialize_latest_state(
     stream: DataFrame,
     table_dir: str,
     checkpoint_dir: str,
@@ -312,26 +119,28 @@ def materialize_latest_state_dv(
     available_now: bool = True,
     n_buckets: int = 32,
 ):
-    """Deletion-vector twin of ``materialize_latest_state_tx``: per batch,
-    reduce the batch to latest-per-key, keep only rows NEWER than the
-    current state (numeric-timestamp compare against a column-pruned scan
-    of the touched buckets' ``row_key``/``updated``), and land them as ONE
-    merge-on-read commit (``merge_into(mode="dv")``).
+    """T6/T7/T8: maintain the current-state txlog table (one latest row
+    per ``row_key``, bucketed by ``pmod(xxhash64(row_key), n_buckets)``)
+    with a ``foreachBatch`` keyed merge whose per-batch cost tracks the
+    BATCH, not total state. Per batch: reduce the batch to latest-per-key,
+    keep only rows NEWER than the current state (numeric-timestamp compare
+    against a column-pruned scan of the touched buckets' ``row_key``/
+    ``updated``), and land them as ONE merge-on-read commit
+    (``merge_into(mode="dv")``); the first batch is a plain append.
 
-    The cost profile this buys at 100 TB state: the bucket-overwrite form
-    rewrites every touched bucket's FULL rows each trigger; this form
-    reads only two thin columns of the touched buckets and writes only the
-    CHANGED rows plus kilobytes of deletion vector — per-batch write cost
-    tracks the batch, full stop. Tombstones stay as marker rows (after
-    NULL), exactly like the bucket form, so a late out-of-order update for
-    a deleted key cannot resurrect it; readers filter ``after IS NOT
-    NULL`` (``read_latest_state_tx``). Run ``compact()`` on a maintenance
-    cadence to fold vectors into data files."""
-    from ..txlog import TxTable
+    The cost profile this buys at 100 TB state: a bucket overwrite would
+    rewrite every touched bucket's FULL rows each trigger; this reads only
+    two thin columns of the touched buckets and writes only the CHANGED
+    rows plus kilobytes of deletion vector. Tombstones stay as marker rows
+    (after NULL), exactly how a Delta MERGE target retains delete markers
+    until VACUUM, so a late out-of-order update for a deleted key cannot
+    resurrect it; readers filter them out (``read_latest_state``). A
+    re-delivered batch is stale against the state it already landed, so
+    replays are no-ops (effectively-once, T8). Run ``compact()`` on a
+    maintenance cadence to fold vectors into data files."""
 
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        table = TxTable(spark, table_dir)
+    def merge_batch(batch: DataFrame, txn) -> None:
+        table = TxTable(batch.sparkSession, table_dir)
         incoming = batch.select(
             F.expr(key_expr).alias("row_key"),
             F.col("updated"),
@@ -382,14 +191,9 @@ def materialize_latest_state_dv(
                 incoming.localCheckpoint(eager=True), partition_by=["bucket"]
             )
 
-    writer = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _foreach_batch(
+        stream, checkpoint_dir, merge_batch, available_now, "update"
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def materialize_silver_tx(
@@ -423,7 +227,7 @@ def materialize_silver_tx(
     the changefeed per-key ordering contract — strictly increasing
     ``updated`` per key across batches (the CockroachDB changefeed
     guarantee the envelope format models, FIXTURES.md §B); out-of-order
-    producers should land through ``materialize_latest_state_dv``, which
+    producers should land through ``materialize_latest_state``, which
     keeps the timestamp compare.
 
     The ordering contract is ENFORCED, not just documented: each row
@@ -441,7 +245,7 @@ def materialize_silver_tx(
       micro-batches legitimately re-delivers old images — run backfills
       with ``"skip"``.
     - ``"skip"``: drop the stale rows and merge the rest — the
-      order-insensitive safe merge (the ``materialize_latest_state_dv``
+      order-insensitive safe merge (the ``materialize_latest_state``
       compare, minus its tombstone markers), for producers known to
       re-order within a horizon and for backfills.
     - ``"trust"``: no check (the pre-r12 behavior; the column is still
@@ -450,7 +254,7 @@ def materialize_silver_tx(
     Residual blind spot (all modes, documented): a late update for a
     PHYSICALLY DELETED key cannot be detected because silver drops
     tombstone markers by design — producers that re-order across
-    deletes belong on ``materialize_latest_state_dv``. Tables created
+    deletes belong on ``materialize_latest_state``. Tables created
     before r12 (no ``_updated`` column) keep their legacy layout and the
     guard auto-disables.
 
@@ -460,10 +264,7 @@ def materialize_silver_tx(
     its candidate files by key span/bloom — per-batch merge cost tracks
     the BATCH, not the table — and the relative-threshold compaction
     cadence restores the layout as trickle batches fragment it."""
-    import pyspark.sql.types as T
-
-    from ..operators.cdc import latest_state
-    from ..txlog import TxTable, maybe_compact_index
+    from ..txlog import maybe_compact_index
 
     if ordering not in ("error", "skip", "trust"):
         raise ValueError(
@@ -476,7 +277,7 @@ def materialize_silver_tx(
         )
     rows_per_file = 65536
 
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
+    def merge_batch(batch: DataFrame, txn) -> None:
         table = TxTable(batch.sparkSession, table_dir)
         net = latest_state(
             batch.withColumn("__ts", F.expr(_UPDATED_NUMERIC)),
@@ -538,13 +339,13 @@ def materialize_silver_tx(
                     names = ", ".join(f"{r[0]}@{r[1]}<{r[2]}" for r in bad)
                     raise RuntimeError(
                         f"silver ordering violation at {table_dir!r} batch "
-                        f"{batch_id}: incoming image(s) OLDER than the "
+                        f"{txn()['batch']}: incoming image(s) OLDER than the "
                         f"stored row for the same key ({names}, first 3 "
                         "shown) — the producer broke the strictly-"
                         "increasing-updated-per-key changefeed contract. "
                         "Re-order the feed, run backfills with "
                         "ordering='skip', or land this producer through "
-                        "materialize_latest_state_dv (keeps the per-key "
+                        "materialize_latest_state (keeps the per-key "
                         "timestamp compare and tombstone markers)."
                     )
             else:  # "skip": the order-insensitive safe merge
@@ -560,14 +361,9 @@ def materialize_silver_tx(
         )
         maybe_compact_index(table, rows_per_file)
 
-    writer = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _foreach_batch(
+        stream, checkpoint_dir, merge_batch, available_now, "update"
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_with_dlq(
@@ -583,14 +379,14 @@ def stream_with_dlq(
     ``operators.cdc.route_dead_letters``; well-formed envelopes append to
     the good txlog table, everything else appends — raw line + reason +
     whatever partial envelope parsed — to the DLQ table for replay. Both
-    appends carry the same per-batch txn marker, so a re-delivered batch is
-    a no-op on BOTH tables: nothing lost, nothing doubled, the
-    at-least-once-in / exactly-once-out contract with an explicit quarantine
-    instead of silent drops."""
+    appends carry the batch's checkpoint-keyed txn marker, so a
+    re-delivered batch is a no-op on BOTH tables while another query
+    landing into the same tables keeps its own markers: nothing lost,
+    nothing doubled, the at-least-once-in / exactly-once-out contract with
+    an explicit quarantine instead of silent drops."""
     from ..operators.cdc import route_dead_letters
-    from ..txlog import TxTable
 
-    def land(batch: DataFrame, batch_id: int) -> None:
+    def land(batch: DataFrame, txn) -> None:
         spark = batch.sparkSession
         routed = route_dead_letters(batch, after_schema).localCheckpoint(eager=True)
         good = routed.filter(F.col("dlq_reason").isNull()).select(
@@ -599,16 +395,7 @@ def stream_with_dlq(
         bad = routed.filter(F.col("dlq_reason").isNotNull()).select(
             "line", "dlq_reason", "envelope"
         )
-        txn_g = {"app": f"dlq-good:{good_table_dir}", "batch": batch_id}
-        txn_b = {"app": f"dlq-bad:{dlq_table_dir}", "batch": batch_id}
-        TxTable(spark, good_table_dir).append(good, txn=txn_g)
-        TxTable(spark, dlq_table_dir).append(bad, txn=txn_b)
+        TxTable(spark, good_table_dir).append(good, txn=txn("dlq-good"))
+        TxTable(spark, dlq_table_dir).append(bad, txn=txn("dlq-bad"))
 
-    writer = (
-        stream_lines.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(stream_lines, checkpoint_dir, land, available_now)

@@ -6149,6 +6149,41 @@ def maybe_compact_index(
     return True
 
 
+def _foreach_batch(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    fn,
+    available_now: bool = True,
+    output_mode: str = "append",
+):
+    """Start ``stream`` into the micro-batch sink ``fn(batch, txn)``: the
+    one ``foreachBatch`` starter behind every streaming writer of the
+    package. ``txn(tag=None)`` returns the batch's exactly-once marker,
+    ``{"app": "<tag>:<abs checkpoint>", "batch": <batch id>}`` (the bare
+    path when untagged): keyed by the query's checkpoint, the identity a
+    restart keeps, so a re-delivered batch is txn-skipped while a second
+    query on a fresh checkpoint lands its own batches. Sinks that commit
+    to two tables tag each marker."""
+    app = os.path.abspath(checkpoint_dir)
+
+    def run(batch: DataFrame, batch_id: int) -> None:
+        fn(
+            batch,
+            lambda tag=None: {
+                "app": f"{tag}:{app}" if tag else app, "batch": batch_id
+            },
+        )
+
+    writer = (
+        stream.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode(output_mode)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def stream_to_tx_table(
     stream: DataFrame,
     table_dir: str,
@@ -6165,24 +6200,34 @@ def stream_to_tx_table(
     appends over at-least-once delivery, the same protocol Structured
     Streaming uses with Delta's idempotent writes.
     """
-    app_id = os.path.abspath(checkpoint_dir)
 
-    def commit_batch(batch: DataFrame, batch_id: int) -> None:
+    def commit_batch(batch: DataFrame, txn) -> None:
         table = TxTable(batch.sparkSession, table_dir)
-        table.append(batch, partition_by=partition_by, txn={"app": app_id, "batch": batch_id})
+        table.append(batch, partition_by=partition_by, txn=txn())
         # compaction is its own commit AFTER the append: a crash between
         # them loses only the compaction (re-runs next batch), never data.
         # Policy: explicit arg, else the table's autoCompact.* properties.
         maybe_autocompact(table, autocompact_max_files)
 
-    writer = (
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _foreach_batch(stream, checkpoint_dir, commit_batch, available_now)
+
+
+def _first_per_hash(batch: DataFrame, text_col: str = "text") -> DataFrame:
+    """Exact within-batch dedup of the dedup-on-ingest sinks: the batch
+    with its ``content_hash`` (``dedup.with_content_hash``), keeping the
+    first ``doc_id`` per hash."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from .operators.dedup import with_content_hash
+
+    w = Window.partitionBy("content_hash").orderBy("doc_id")
+    return (
+        with_content_hash(batch, text_col)
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_dedup_to_tx_table(
@@ -6206,40 +6251,20 @@ def stream_dedup_to_tx_table(
     hashes. A production deployment puts a bloom/bucket pre-filter in front
     of the anti-join; the dataflow is unchanged.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
-    app_id = os.path.abspath(checkpoint_dir)
-
-    def commit_batch(batch: DataFrame, batch_id: int) -> None:
+    def commit_batch(batch: DataFrame, txn) -> None:
         table = TxTable(batch.sparkSession, table_dir, log_store)
-        hashed = batch.withColumn(
-            "content_hash",
-            F.md5(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")),
-        )
-        w = Window.partitionBy("content_hash").orderBy("doc_id")
-        firsts = (
-            hashed.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        firsts = _first_per_hash(batch, text_col)
         if table.version() >= 0:
             seen = table.read().select("content_hash")
             # reselect in the original order — the USING join moves the key
             # column first, which would trip write-time schema enforcement
             firsts = firsts.join(seen, "content_hash", "left_anti").select(
-                *hashed.columns
+                *firsts.columns
             )
-        table.append(firsts, txn={"app": app_id, "batch": batch_id})
+        table.append(firsts, txn=txn())
 
-    writer = (
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(stream, checkpoint_dir, commit_batch, available_now)
 
 
 def stream_dedup_to_tx_table_bloom(
@@ -6266,30 +6291,18 @@ def stream_dedup_to_tx_table_bloom(
     the two commits only creates extra candidates (exact-checked next
     batch), never a missed duplicate. Both commits carry the batch txn
     marker, so a re-delivered batch is a no-op on both tables."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from .operators import bloom as B
 
     bits = n_bits or B.DEFAULT_N_BITS
     hashes = n_hashes or B.DEFAULT_N_HASHES
-    app_state = f"dedup-bloom-state:{os.path.abspath(checkpoint_dir)}"
-    app_bloom = f"dedup-bloom-filter:{os.path.abspath(checkpoint_dir)}"
 
-    def commit_batch(batch: DataFrame, batch_id: int) -> None:
+    def commit_batch(batch: DataFrame, txn) -> None:
         spark = batch.sparkSession
         state = TxTable(spark, table_dir)
         bloom_t = TxTable(spark, bloom_dir)
-        hashed = batch.withColumn(
-            "content_hash",
-            F.md5(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")),
-        )
-        w = Window.partitionBy("content_hash").orderBy("doc_id")
-        firsts = (
-            hashed.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        newdocs = firsts = _first_per_hash(batch, text_col)
         if bloom_t.version() >= 0 and state.version() >= 0:
             flagged = B.with_membership(
                 firsts, "content_hash", bloom_t.read(), bits, hashes
@@ -6298,9 +6311,7 @@ def stream_dedup_to_tx_table_bloom(
             cands = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
             seen = state.read().select("content_hash")
             survived = cands.join(seen, "content_hash", "left_anti")
-            newdocs = sure_new.unionByName(survived).select(*hashed.columns)
-        else:
-            newdocs = firsts.select(*hashed.columns)
+            newdocs = sure_new.unionByName(survived).select(*firsts.columns)
         newdocs = newdocs.localCheckpoint(eager=True)
         batch_bloom = B.build_bloom(newdocs, "content_hash", bits, hashes)
         merged = (
@@ -6309,19 +6320,10 @@ def stream_dedup_to_tx_table_bloom(
             else batch_bloom
         )
         # bloom FIRST (superset invariant), then the state append
-        bloom_t.overwrite(
-            merged.coalesce(1), txn={"app": app_bloom, "batch": batch_id}
-        )
-        state.append(newdocs, txn={"app": app_state, "batch": batch_id})
+        bloom_t.overwrite(merged.coalesce(1), txn=txn("dedup-bloom-filter"))
+        state.append(newdocs, txn=txn("dedup-bloom-state"))
 
-    writer = (
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(stream, checkpoint_dir, commit_batch, available_now)
 
 
 def stream_neardedup_to_tx_table(
@@ -6365,7 +6367,6 @@ def stream_neardedup_to_tx_table(
     append is txn-skipped — never a missed duplicate, never a lost doc.
     Both commits carry the batch txn marker.
     """
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from .operators.dedup import (
@@ -6375,26 +6376,13 @@ def stream_neardedup_to_tx_table(
         jaccard_pairs,
     )
 
-    app_state = f"neardedup-state:{os.path.abspath(checkpoint_dir)}"
-    app_sigs = f"neardedup-sigs:{os.path.abspath(checkpoint_dir)}"
-
-    def commit_batch(batch: DataFrame, batch_id: int) -> None:
+    def commit_batch(batch: DataFrame, txn) -> None:
         spark = batch.sparkSession
         state = TxTable(spark, table_dir)
         sigs = TxTable(spark, sig_dir)
         if text_col != "text":  # the shingle/band operators key on "text"
             batch = batch.withColumnRenamed(text_col, "text")
-        hashed = batch.withColumn(
-            "content_hash",
-            F.md5(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")),
-        )
-        w = Window.partitionBy("content_hash").orderBy("doc_id")
-        firsts = (
-            hashed.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-            .localCheckpoint(eager=True)
-        )
+        firsts = _first_per_hash(batch).localCheckpoint(eager=True)
         pairs = jaccard_pairs(firsts, shingle_k=shingle_k, threshold=threshold)
         reps = (
             duplicate_clusters(firsts, pairs)
@@ -6423,18 +6411,11 @@ def stream_neardedup_to_tx_table(
         # signature table FIRST (superset invariant — see docstring)
         sigs.append(
             _band_entries(novel, n_hashes, bands, shingle_k),
-            txn={"app": app_sigs, "batch": batch_id},
+            txn=txn("neardedup-sigs"),
         )
-        state.append(novel, txn={"app": app_state, "batch": batch_id})
+        state.append(novel, txn=txn("neardedup-state"))
 
-    writer = (
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(stream, checkpoint_dir, commit_batch, available_now)
 
 
 def stream_semantic_dedup_to_tx_table(
@@ -6479,9 +6460,7 @@ def stream_semantic_dedup_to_tx_table(
     from .operators.dedup import duplicate_clusters, semantic_dedup_incremental
     from .operators.similarity import _dot, _norm
 
-    app_state = f"semdedup-state:{os.path.abspath(checkpoint_dir)}"
-
-    def commit_batch(batch: DataFrame, batch_id: int) -> None:
+    def commit_batch(batch: DataFrame, txn) -> None:
         spark = batch.sparkSession
         state = TxTable(spark, table_dir)
         codes = TxTable(spark, codes_dir)
@@ -6523,16 +6502,9 @@ def stream_semantic_dedup_to_tx_table(
             novel = batch_reps
         novel = novel.localCheckpoint(eager=True)
         if novel.take(1):
-            state.append(novel, txn={"app": app_state, "batch": batch_id})
+            state.append(novel, txn=txn("semdedup-state"))
 
-    writer = (
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(stream, checkpoint_dir, commit_batch, available_now)
 
 
 def sync_changes(

@@ -44,7 +44,7 @@ def test_reference_walkthrough(spark, sf_dir, tmp_path):
         landing, AFTER_SCHEMA, str(tmp_path / "state"), str(tmp_path / "ckpt")
     )
     q.awaitTermination()
-    state = eng.read_state(str(tmp_path / "state"))
+    state = eng.read_tx_state(str(tmp_path / "state"))
     assert state.count() == len(fx.expected_state)
 
     # step 4: SQL front-end over the star schema
@@ -70,7 +70,9 @@ def test_tx_ingestion_and_llm_surface(spark, sf_dir, tmp_path):
     landing = str(tmp_path / "landing")
     fx = generate_changefeed(landing, n_rows=100, seed=5)
     table_dir = str(tmp_path / "tx_state")
-    q = eng.start_tx_ingestion(landing, AFTER_SCHEMA, table_dir, str(tmp_path / "ckpt"))
+    q = eng.start_changefeed_ingestion(
+        landing, AFTER_SCHEMA, table_dir, str(tmp_path / "ckpt")
+    )
     q.awaitTermination()
     state = eng.read_tx_state(table_dir)
     assert state.count() == len(fx.expected_state)

@@ -14,8 +14,8 @@ from pyspark.sql import types as T
 from mb_crdb_cdc_dlgen2_synapse_spark.txlog import TxTable, stream_to_tx_table
 from mb_crdb_cdc_dlgen2_synapse_spark.streaming.ingest import (
     changefeed_stream,
-    materialize_latest_state_tx,
-    read_latest_state_tx,
+    materialize_latest_state,
+    read_latest_state,
 )
 
 from test_cdc_replay import AFTER_SCHEMA, _env_line, _write_envelope_lines
@@ -195,18 +195,18 @@ def test_stream_append_exactly_once_across_restart(spark, tmp_path):
 def test_tx_state_merge_matches_plain_merge(spark, fixture_dir_tx, tmp_path):
     landing, expected = fixture_dir_tx
     table_dir = str(tmp_path / "state_tx")
-    q = materialize_latest_state_tx(
+    q = materialize_latest_state(
         changefeed_stream(spark, landing, AFTER_SCHEMA), table_dir, str(tmp_path / "ckpt")
     )
     q.awaitTermination()
     got = {
         r["after"]["id"]: r["after"]["revenue"]
-        for r in read_latest_state_tx(spark, table_dir).collect()
+        for r in read_latest_state(spark, table_dir).collect()
     }
     assert got == expected
-    # merge landed as overwrite_partitions commits
+    # the bootstrap batch appends, later batches land as DV merges
     ops = {c["op"] for c in TxTable(spark, table_dir).history()}
-    assert ops == {"overwrite_partitions"}
+    assert ops <= {"append", "merge_dv"}
 
 
 @pytest.fixture()
@@ -1751,13 +1751,9 @@ def test_dv_state_merge_matches_plain_merge(spark, fixture_dir_tx, tmp_path):
     """The deletion-vector latest-state sink lands on the same final state
     as the batch dedup (golden fixture: duplicates, out-of-order update,
     tombstone), with merge-on-read commits instead of bucket rewrites."""
-    from mb_crdb_cdc_dlgen2_synapse_spark.streaming.ingest import (
-        materialize_latest_state_dv,
-    )
-
     landing, expected = fixture_dir_tx
     table_dir = str(tmp_path / "state_dv")
-    q = materialize_latest_state_dv(
+    q = materialize_latest_state(
         changefeed_stream(spark, landing, AFTER_SCHEMA),
         table_dir,
         str(tmp_path / "ckpt"),
@@ -1765,7 +1761,7 @@ def test_dv_state_merge_matches_plain_merge(spark, fixture_dir_tx, tmp_path):
     q.awaitTermination()
     got = {
         r["after"]["id"]: r["after"]["revenue"]
-        for r in read_latest_state_tx(spark, table_dir).collect()
+        for r in read_latest_state(spark, table_dir).collect()
     }
     assert got == expected
     ops = {c["op"] for c in TxTable(spark, table_dir).history()}
@@ -1778,7 +1774,7 @@ def test_dv_state_merge_matches_plain_merge(spark, fixture_dir_tx, tmp_path):
     TxTable(spark, table_dir).compact(target_files=1)
     got2 = {
         r["after"]["id"]: r["after"]["revenue"]
-        for r in read_latest_state_tx(spark, table_dir).collect()
+        for r in read_latest_state(spark, table_dir).collect()
     }
     assert got2 == expected
 
@@ -1787,16 +1783,12 @@ def test_dv_state_merge_ignores_late_older_updates(spark, tmp_path):
     """A LATER batch carrying OLDER versions (late-arriving files) must not
     regress live state nor resurrect a tombstoned key — the newer-filter +
     marker-row design."""
-    from mb_crdb_cdc_dlgen2_synapse_spark.streaming.ingest import (
-        materialize_latest_state_dv,
-    )
-
     landing = str(tmp_path / "landing")
     table_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
 
     def run():
-        q = materialize_latest_state_dv(
+        q = materialize_latest_state(
             changefeed_stream(spark, landing, AFTER_SCHEMA), table_dir, ckpt
         )
         q.awaitTermination()
@@ -1821,7 +1813,7 @@ def test_dv_state_merge_ignores_late_older_updates(spark, tmp_path):
     run()
     got = {
         r["after"]["id"]: r["after"]["revenue"]
-        for r in read_latest_state_tx(spark, table_dir).collect()
+        for r in read_latest_state(spark, table_dir).collect()
     }
     assert got == {"k1": 9.0}  # k1 keeps the newer value; k2 stays deleted
 
@@ -2152,16 +2144,12 @@ def test_dv_state_merge_all_stale_batch_skips_merge_entirely(spark, tmp_path, mo
     merge_into: an empty merge source yields empty key bounds, every active
     file becomes a candidate, and the 'no-op' costs a full-table scan —
     exactly the steady replay case this sink exists for."""
-    from mb_crdb_cdc_dlgen2_synapse_spark.streaming.ingest import (
-        materialize_latest_state_dv,
-    )
-
     landing = str(tmp_path / "landing")
     table_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
 
     def run():
-        q = materialize_latest_state_dv(
+        q = materialize_latest_state(
             changefeed_stream(spark, landing, AFTER_SCHEMA), table_dir, ckpt
         )
         q.awaitTermination()
@@ -2191,7 +2179,7 @@ def test_dv_state_merge_all_stale_batch_skips_merge_entirely(spark, tmp_path, mo
     assert TxTable(spark, table_dir).version() == v_before
     got = {
         r["after"]["id"]: r["after"]["revenue"]
-        for r in read_latest_state_tx(spark, table_dir).collect()
+        for r in read_latest_state(spark, table_dir).collect()
     }
     assert got == {"k1": 9.0, "k2": 2.0}
 
