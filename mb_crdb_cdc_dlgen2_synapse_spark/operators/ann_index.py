@@ -96,21 +96,43 @@ def _net_changes(changes: DataFrame) -> DataFrame:
     """Reduce a CDF slice to one net row per vec_id: the change at the
     highest ``_commit_version`` wins; within one version an insert beats
     the delete it replaced (Delta renders an update as delete+insert at
-    the same version — the post-image is the surviving row)."""
+    the same version — the post-image is the surviving row).
+
+    Carried pairs cancel: a key whose earliest change is a delete and
+    whose latest is an insert with null-safe-equal (``<=>``) data
+    columns (every column but ``vec_id`` and the ``_``-prefixed CDF
+    metadata) did not change across the range — a copy-on-write rewrite
+    carried it over — so it yields no row and a fold re-encodes only the
+    vectors that changed. ``<=>`` treats ±0.0 and NaN as equal, as every
+    encoder does (``binary_quantize`` tests ``> 0``)."""
     # one hash aggregate (map-side partial agg, no sort) instead of the
     # former row_number window: max_by on the lexicographic
     # (_commit_version, is-insert) key picks exactly the window's top
     # row — highest version, insert over delete within it (guide §2.3:
-    # aggregate before the shuffle; the window shipped every change row)
+    # aggregate before the shuffle; the window shipped every change row);
+    # min_by on the same key picks the earliest change
     cols = changes.columns
     key = F.struct(
         F.col("_commit_version"),
         (F.col("_change_type") == "insert").cast("int"),
     )
     payload = [c for c in cols if c != "vec_id"]
+    data = [c for c in payload if not c.startswith("_")]
+    first = F.struct(F.col("_change_type"), *data)
+    carried = (
+        (F.col("__first._change_type") == "delete")
+        & (F.col("__top._change_type") == "insert")
+        & F.struct(*[F.col(f"__first.{c}") for c in data]).eqNullSafe(
+            F.struct(*[F.col(f"__top.{c}") for c in data])
+        )
+    )
     return (
         changes.groupBy("vec_id")
-        .agg(F.max_by(F.struct(*payload), key).alias("__top"))
+        .agg(
+            F.max_by(F.struct(*payload), key).alias("__top"),
+            F.min_by(first, key).alias("__first"),
+        )
+        .filter(~carried)
         .select("vec_id", *[F.col(f"__top.{c}").alias(c) for c in payload])
         .select(*cols)
     )

@@ -81,32 +81,32 @@ def _doc_net_images(changes: DataFrame, text_col: str) -> DataFrame:
     died inside the range — appears in neither side, so it is dropped).
     The former shape cost two window sorts plus a full-outer join (three
     exchanges of the full text payload); this is one exchange with
-    map-side partial aggregation (guide §2.3/§2.4)."""
+    map-side partial aggregation (guide §2.3/§2.4).
+
+    Carried pairs cancel: a doc whose earliest image is a delete and
+    whose latest is an insert of a null-safe-equal (``<=>``) text did
+    not change across the range — a copy-on-write rewrite carried it
+    over — so it is dropped here, and a fold re-tokenizes only the docs
+    that changed (its scalar deltas would be 0 - 0 anyway)."""
     rows = changes.select(
         "doc_id", F.col(text_col).alias("_text"), "_change_type", "_commit_version"
     )
     key = F.struct(F.col("_commit_version"), F.col("_change_type"))
     img = F.struct(F.col("_change_type"), F.col("_text"))
+    had = F.col("__first._change_type") == "delete"
+    has = F.col("__last._change_type") == "insert"
+    carried = had & has & F.col("__first._text").eqNullSafe(F.col("__last._text"))
     return (
         rows.groupBy("doc_id")
         .agg(
             F.min_by(img, key).alias("__first"),
             F.max_by(img, key).alias("__last"),
         )
-        .filter(
-            (F.col("__first._change_type") == "delete")
-            | (F.col("__last._change_type") == "insert")
-        )
+        .filter((had | has) & ~carried)
         .select(
             "doc_id",
-            F.when(
-                F.col("__first._change_type") == "delete",
-                F.col("__first._text"),
-            ).alias("old_text"),
-            F.when(
-                F.col("__last._change_type") == "insert",
-                F.col("__last._text"),
-            ).alias("new_text"),
+            F.when(had, F.col("__first._text")).alias("old_text"),
+            F.when(has, F.col("__last._text")).alias("new_text"),
         )
     )
 

@@ -3,14 +3,17 @@
 fresh instead of recomputed over the ever-growing file set each run.
 
 Exactly-once without a transactional table format: each micro-batch writes
-its *partial* aggregate to a batch-id partition (``batch=N``), and a batch
-replay after failure overwrites the same partition — idempotent by
-construction.  Readers merge partials with an exact decimal sum, so the
+its *partial* aggregate to a partition keyed by the query's checkpoint and
+the batch id (``batch=<checkpoint key>-N``), and a batch replay after
+failure overwrites the same partition — idempotent by construction — while
+a second query on a fresh checkpoint lands its partials beside the first's.  Readers merge partials with an exact decimal sum, so the
 merged result is independent of batch boundaries.  The journal doubles as
 an audit log; a compaction pass (operators/lake.py) folds old partials.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,9 +42,13 @@ def maintain_city_revenue(
                 F.count(F.lit(1)).alias("partial_n"),
             )
         )
-        # idempotent under replay: same batch id -> same directory overwritten
+        # idempotent under replay: the txn marker (checkpoint, batch id)
+        # names the directory, so a replay overwrites its own partial and
+        # another query's batch of the same id lands beside it
+        t = txn()
+        query = hashlib.sha1(t["app"].encode()).hexdigest()[:16]
         partial.write.mode("overwrite").parquet(
-            f"{journal_dir}/batch={txn()['batch']}"
+            f"{journal_dir}/batch={query}-{t['batch']}"
         )
 
     return _foreach_batch(

@@ -592,6 +592,11 @@ def _bloom_maybe_contains(bl: dict, value) -> bool:
 #: skipped files save)
 _BLOOM_IN_CAP = 4_096
 
+#: a DV upsert filters its candidate rows by ``in`` lists up to this many
+#: keys; a longer list is joined instead (a Column ``isin`` costs one
+#: driver round trip per value: ~0.5 ms each, measured on 4 vCPUs)
+_IN_FILTER_CAP = 256
+
 
 class _KeySet:
     """An ``in`` value list (or one ``==`` value) prepared once for a
@@ -3873,6 +3878,9 @@ class TxTable:
     #: write and then tax every subsequent read with a huge anti-join,
     #: while CoW pays one partition-parallel rewrite and is read-free after
     DV_MAX_ROWS = 2_000_000
+    #: the schema of every deletion-vector file: supplying it skips the
+    #: one-task schema-inference job a bare ``spark.read.parquet`` runs
+    DV_SCHEMA = "rel_file STRING, row_index BIGINT"
     #: max distinct keys collected to the driver for an ``in`` predicate
     #: (``read_keys``, ``merge_into`` pruning); past it reads semi-join
     #: and merges prune by the key column's min/max only
@@ -3959,9 +3967,9 @@ class TxTable:
             lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
         )
         if dvs:
-            dvdf = self.spark.read.parquet(
+            dvdf = self.spark.read.schema(self.DV_SCHEMA).parquet(
                 *[os.path.join(self.path, f) for f in dvs]
-            ).select("rel_file", "row_index")
+            )
             # broadcast only while the LOGGED deleted-row total (metadata —
             # no file I/O) stays under the cap; unknown counts default to
             # broadcast (legacy commits without dv_counts are small)
@@ -4329,21 +4337,23 @@ class TxTable:
                         derived.append((gcol, gop, fv))
         return derived
 
-    def _distinct_keys(self, df: DataFrame, col: str) -> list | None:
-        """The sorted non-NULL distinct values of ``df[col]``, or None when
-        there are more than ``KEYSET_CAP`` — the one capped driver-side key
-        collect (one job) behind ``read_keys`` and ``merge_into`` pruning."""
-        vals = [
-            r[0]
-            for r in df.select(col).distinct().limit(self.KEYSET_CAP + 1).collect()
-        ]
-        if len(vals) > self.KEYSET_CAP:
+    def _distinct_keys(self, df: DataFrame, cols: list[str]) -> dict | None:
+        """Per column of ``cols``, the sorted non-NULL distinct values it
+        takes in ``df``, or None when ``df`` holds more than ``KEYSET_CAP``
+        distinct ``cols`` tuples — the one capped driver-side key collect
+        (one job) behind ``read_keys`` and ``merge_into`` pruning."""
+        rows = df.select(*cols).distinct().limit(self.KEYSET_CAP + 1).collect()
+        if len(rows) > self.KEYSET_CAP:
             return None
-        vals = [v for v in vals if v is not None]
-        try:
-            return sorted(vals)
-        except TypeError:
-            return vals
+        out = {}
+        for i, c in enumerate(cols):
+            vals = [r[i] for r in rows if r[i] is not None]
+            try:
+                vals = sorted(set(vals))
+            except TypeError:
+                pass  # unhashable or unorderable: a repeat in an in-list is harmless
+            out[c] = vals
+        return out
 
     def read_keys(
         self, keys: DataFrame, col: str, as_of: int | None = None
@@ -4354,9 +4364,9 @@ class TxTable:
         file that cannot hold a key; past the cap the key set stays
         distributed — a semi-join of the full read, only file skipping is
         lost. Both regimes return the same rows."""
-        vals = self._distinct_keys(keys, col)
+        vals = self._distinct_keys(keys, [col])
         if vals is not None:
-            return self.read(as_of=as_of, predicates=[(col, "in", vals)])
+            return self.read(as_of=as_of, predicates=[(col, "in", vals[col])])
         return self.read(as_of=as_of).join(
             keys.select(col).distinct(), col, "semi"
         )
@@ -4552,7 +4562,7 @@ class TxTable:
             # shuffle-partition-count tiny files per dir — the write-side
             # small-files guard; the shuffle moves only the rewritten rows
             out = out.repartition(*[F.col(c) for c in part_cols])
-        out = out.localCheckpoint(eager=True)
+        # the stage is the rewrite's only consumer: no checkpoint before it
         added, stats = self._stage(out, part_cols or None)
         if extra_df is not None:
             try:
@@ -4789,10 +4799,11 @@ class TxTable:
           unless they are deletes.
 
         Scale shape: only files that may hold a source key are read and
-        rewritten — the batch's distinct keys go through the same ``in``
-        evaluator as ``read_keys`` (``_candidate_files``: hive partition
-        values, logged per-key min/max, blooms; a key column past
-        ``KEYSET_CAP`` distinct values prunes by its span). A merge of a
+        rewritten — the batch's distinct key tuples, collected once, give
+        each key column an ``in`` list for the same evaluator as
+        ``read_keys`` (``_candidate_files``: hive partition values, logged
+        per-key min/max, blooms; a key column past ``KEYSET_CAP`` distinct
+        values prunes by its span). A merge of a
         small batch into a huge table touches the few files its keys land
         in, which is why the table should be laid out by a key-derived
         partition (``partition_by``, used when the table is created by
@@ -4807,6 +4818,10 @@ class TxTable:
         ``mode="dv"`` merges on-read: matched rows are deletion-vectored
         (updates additionally append the source image), so write cost is
         O(changed + inserted rows) — candidate files are never rewritten.
+        The upsert shape (``update`` and ``insert``, no row tracking — the
+        index folds and the latest-state sinks) reads the candidates once:
+        the key-unique source's non-deleted rows are the new rows, and the
+        candidate rows passing the key ``in`` lists are the vector.
 
         ``props`` merges into the table's property map ATOMICALLY with the
         merge (``None`` unsets): the data-changing commit carries the full
@@ -4861,20 +4876,21 @@ class TxTable:
             self.append(out, partition_by=partition_by, props=props)
             return {"files_rewritten": 0, "version": self.version()}
 
-        # candidate files: one capped distinct-key collect per merge key
-        # (``_distinct_keys``) prunes through the shared ``in`` evaluator
-        # of ``_candidate_files`` — partition values, each file's span
-        # bisected against the sorted keys, blooms — so a small batch of
-        # scattered keys touches only the files that may hold one. A key
-        # column past KEYSET_CAP prunes by its min/max (one aggregate).
-        preds: list[tuple] = []
-        need_agg: list[str] = []
-        for k in on:
-            vals = self._distinct_keys(src, k)
-            if vals is None:
-                need_agg.append(k)
-            else:
-                preds.append((k, "in", vals))
+        # candidate files: ONE capped collect of the distinct key tuples
+        # (``_distinct_keys``) gives every merge key its ``in`` list for the
+        # shared evaluator of ``_candidate_files`` — partition values, each
+        # file's span bisected against the sorted keys, blooms — so a small
+        # batch of scattered keys touches only the files that may hold one.
+        # Past KEYSET_CAP tuples each key column is collected alone, and a
+        # column past the cap by itself prunes by its min/max (one aggregate).
+        keys = self._distinct_keys(src, list(on))
+        if keys is None and len(on) > 1:
+            keys = {}
+            for k in on:
+                keys.update(self._distinct_keys(src, [k]) or {})
+        keys = keys or {}
+        preds = [(k, "in", keys[k]) for k in on if k in keys]
+        need_agg = [k for k in on if k not in keys]
         if need_agg:
             bounds = src.agg(
                 *[F.min(k).alias(f"lo_{k}") for k in need_agg],
@@ -4961,7 +4977,7 @@ class TxTable:
 
         if mode == "dv":
             res = self._merge_dv(
-                src, on, cands, target_cols, update, insert, props=props
+                src, on, preds, cands, target_cols, update, insert, props=props
             )
             if res is not None:
                 res["candidates"] = len(cands)
@@ -4973,7 +4989,7 @@ class TxTable:
         return out
 
     def _merge_dv(
-        self, src, on, cands, target_cols, update, insert,
+        self, src, on, preds, cands, target_cols, update, insert,
         props: dict[str, str | None] | None = None,
     ) -> dict | None:
         """Merge-on-read MERGE: matched target rows are the vector (update
@@ -4982,7 +4998,15 @@ class TxTable:
         are the new rows of one ``_commit_dv``. Candidate files never get
         rewritten, so merge write cost is O(changed + inserted rows), not
         O(candidate files). Returns ``None`` when the vector exceeds
-        ``DV_MAX_ROWS`` — ``merge_into`` then runs the CoW transform."""
+        ``DV_MAX_ROWS`` — ``merge_into`` then runs the CoW transform.
+
+        The upsert (``update`` and ``insert``, no row tracking) reads the
+        target once: the source is key-unique, so its non-deleted rows ARE
+        the new rows (updates and inserts alike), and the marked rows are
+        the candidate rows passing the merge's pruning predicates ``preds``
+        (``in`` lists up to ``_IN_FILTER_CAP`` keys) — exact for one key
+        column filtered by its ``in`` list, else semi-joined to the source
+        keys. Other shapes join the candidate keys."""
         from pyspark.sql import functions as F
 
         state = self._state()
@@ -4991,6 +5015,19 @@ class TxTable:
             cands, self._active_dvs(), keep_pos=True,
             schema_json=state["schema"], rowid_col=track,
         )
+        if update and insert and not track:
+            short = [
+                p for p in preds if p[1] != "in" or len(p[2]) <= _IN_FILTER_CAP
+            ]
+            hit = tdf.filter(self._predicate_column(short)).select(
+                *on, "__rf", "__ri"
+            )
+            if not (len(on) == 1 and [op for _c, op, _v in short] == ["in"]):
+                hit = hit.join(src.select(*on), list(on), "left_semi")
+            new_rows = self._conform(
+                src.filter(~F.col("__s_del")).select(*target_cols), state["schema"]
+            )
+            return self._commit_dv(cands, hit, new_rows, "merge_dv", props)
         if track:
             tdf = self._attach_row_ids(tdf, state)
         # a merge-on-read never rewrites target rows, so nothing past this
@@ -5211,9 +5248,9 @@ class TxTable:
             if c.get("dv_added"):
                 # a merge-on-read delete moves no data files; its deleted row
                 # IMAGES come from joining the DV pairs back to their files
-                dvdf = self.spark.read.parquet(
+                dvdf = self.spark.read.schema(self.DV_SCHEMA).parquet(
                     *[os.path.join(self.path, f) for f in c["dv_added"]]
-                ).select("rel_file", "row_index")
+                )
                 data_files = sorted(c.get("dv_counts", {}))
                 missing = [
                     f

@@ -582,6 +582,42 @@ def test_fold_is_one_commit_carrying_the_watermark(spark, tmp_path, family):
     assert index.properties()[wm] == str(src.version())
 
 
+@pytest.mark.parametrize("family", ["bm25", "ann"])
+def test_cow_merge_folds_only_the_changed_keys(spark, tmp_path, family):
+    """A copy-on-write merge of a few scattered keys rewrites every file
+    of the source, and the feed renders each rewrite as delete+insert of
+    every row in it. The carried (unchanged) rows cancel in the net
+    reducers, so the fold's deletion vector marks only the changed keys'
+    index rows (their postings / vectors), not the whole index."""
+    rows, catch, check, _wm, _clustering, _bloom = _families()[family]
+    src = TxTable(spark, str(tmp_path / "src"))
+    src.append(rows(spark, 0, 200).repartition(4))
+    index = TxTable(spark, str(tmp_path / "idx"))
+    catch(src, index, {})
+    key = src.read().columns[0]
+    changed = [3, 77, 140, 199]
+    upd = src.read().filter(F.col(key).isin(changed))
+    upd = upd.select(
+        key,
+        *[
+            F.transform(c, lambda x: -x).alias(c) if c == "embedding"
+            else F.concat(F.col(c), F.lit(" revised")).alias(c)
+            for c in upd.columns if c != key
+        ],
+    )
+    n_files = len(src.snapshot()[1])
+    src.merge_into(upd, on=[key], mode="cow")
+    assert len(src.history()[-1]["removed"]) == n_files == 4
+    before = index.read().filter(F.col(key).isin(changed)).count()
+    v0 = index.version()
+    catch(src, index, {})
+    folds = [h for h in index.history() if h["version"] > v0 and h["op"] == "merge_dv"]
+    assert len(folds) == 1, [h["op"] for h in index.history()]
+    assert sum(folds[0]["dv_counts"].values()) == before
+    assert before < index.count_rows()
+    check(index, src, {})
+
+
 def test_source_vacuum_within_retention_does_not_break_catchup(spark, tmp_path):
     """VACUUM that removes only files OLDER than the index watermark must
     leave catch-up working: the feed replays only (watermark, head], and

@@ -78,3 +78,22 @@ def test_compaction_preserves_results(spark, fixture, tmp_path):
     after = {r["city"]: r["total_revenue"]
              for r in read_city_revenue(spark, journal).collect()}
     assert before == after
+
+
+def test_queries_on_fresh_checkpoints_keep_each_others_partials(spark, tmp_path):
+    """Two queries on fresh checkpoints into one journal: their partials of
+    the same batch ids are keyed by checkpoint, so neither overwrites the
+    other's (3 events, then 2, read back as 5)."""
+    schema = "after struct<city: string, revenue: double>"
+    journal = str(tmp_path / "journal")
+    for name, n in (("c0", 3), ("c1", 2)):
+        src = tmp_path / f"src_{name}"
+        src.mkdir()
+        (src / "part.json").write_text(
+            "".join(f'{{"after": {{"city": "nyc", "revenue": {i}.5}}}}\n' for i in range(n))
+        )
+        stream = spark.readStream.schema(schema).json(str(src))
+        maintain_city_revenue(stream, journal, str(tmp_path / name)).awaitTermination()
+    got = read_city_revenue(spark, journal).collect()
+    assert [(r["city"], r["n_events"]) for r in got] == [("nyc", 5)]
+    assert got[0]["total_revenue"] == 0.5 + 1.5 + 2.5 + 0.5 + 1.5

@@ -4,7 +4,13 @@ min_by/max_by hash aggregates. These tests pin the rewrite to the
 original window-based semantics on a crafted batch covering every case:
 multi-version keys, update rendered as delete+insert at one version,
 insert-then-delete inside the range (must vanish from the doc-image
-relation), delete-only keys, insert-only keys, and NULL payloads."""
+relation), delete-only keys, insert-only keys, and NULL payloads.
+
+Carried pairs (a copy-on-write rewrite's delete+insert of an unchanged
+row, at one version or spread over the range, NULL payload included)
+cancel in both reducers: the references exclude every key whose
+earliest image is a delete and latest an insert of a null-safe-equal
+payload."""
 
 from __future__ import annotations
 
@@ -30,7 +36,15 @@ ROWS = [
     (6, "b", "insert", 2),
     (6, "b", "delete", 5),
     (6, "c", "insert", 5),
+    (7, "same", "delete", 3),            # carried by a rewrite at v3
+    (7, "same", "insert", 3),
+    (8, None, "delete", 3),              # carried NULL payload
+    (8, None, "insert", 3),
+    (9, "x", "delete", 2),               # deleted at v2, same row back at v4
+    (9, "x", "insert", 4),
 ]
+
+CARRIED = {7, 8, 9}
 
 
 def _changes(spark, key_col, payload_col):
@@ -47,10 +61,24 @@ def test_net_changes_equals_window_reference(spark):
         F.col("_commit_version").desc(),
         (F.col("_change_type") == "insert").cast("int").desc(),
     )
+    first = W.partitionBy("vec_id").orderBy(
+        F.col("_commit_version").asc(),
+        (F.col("_change_type") == "insert").cast("int").asc(),
+    )
     ref = (
         changes.withColumn("__rn", F.row_number().over(w))
+        .withColumn("__first", F.first(F.struct("_change_type", "embedding")).over(
+            first.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+        ))
         .filter(F.col("__rn") == 1)
-        .drop("__rn")
+        .filter(
+            ~(
+                (F.col("__first._change_type") == "delete")
+                & (F.col("_change_type") == "insert")
+                & F.col("__first.embedding").eqNullSafe(F.col("embedding"))
+            )
+        )
+        .drop("__rn", "__first")
     )
     got = _net_changes(changes)
     assert got.columns == changes.columns
@@ -72,7 +100,7 @@ def test_doc_net_images_equals_window_join_reference(spark):
             ),
         )
         .filter((F.col("rn") == 1) & (F.col("_change_type") == "delete"))
-        .select("doc_id", F.col("text").alias("old_text"))
+        .select("doc_id", F.col("text").alias("old_text"), F.lit(True).alias("had"))
     )
     last = (
         changes.withColumn(
@@ -84,9 +112,19 @@ def test_doc_net_images_equals_window_join_reference(spark):
             ),
         )
         .filter((F.col("rn") == 1) & (F.col("_change_type") == "insert"))
-        .select("doc_id", F.col("text").alias("new_text"))
+        .select("doc_id", F.col("text").alias("new_text"), F.lit(True).alias("has"))
     )
-    ref = first.join(last, "doc_id", "full_outer")
+    ref = (
+        first.join(last, "doc_id", "full_outer")
+        .filter(
+            ~(
+                F.coalesce("had", F.lit(False))
+                & F.coalesce("has", F.lit(False))
+                & F.col("old_text").eqNullSafe(F.col("new_text"))
+            )
+        )
+        .select("doc_id", "old_text", "new_text")
+    )
     got = _doc_net_images(changes, "text")
     assert got.columns == ["doc_id", "old_text", "new_text"]
     assert sorted(map(tuple, got.collect())) == sorted(
@@ -94,6 +132,16 @@ def test_doc_net_images_equals_window_join_reference(spark):
     )
     # the lived-and-died-inside-the-range doc must not appear at all
     assert got.filter(F.col("doc_id") == 4).count() == 0
+
+
+def test_carried_pairs_cancel_in_both_reducers(spark):
+    for reduce, key, payload in (
+        (_net_changes, "vec_id", "embedding"),
+        (lambda c: _doc_net_images(c, "text"), "doc_id", "text"),
+    ):
+        got = {r[0] for r in reduce(_changes(spark, key, payload)).collect()}
+        assert got & CARRIED == set(), (key, got)
+        assert {1, 2, 3, 5, 6} <= got, (key, got)
 
 
 def test_doc_net_images_single_exchange(spark):

@@ -2094,6 +2094,40 @@ def test_dv_delete_and_update_job_counts(spark, tmp_path):
     assert jobs["delete"] < 4 and jobs["update"] < 7, jobs
 
 
+def test_dv_upsert_job_count(spark, tmp_path):
+    """A 50-row DV upsert (25 updates, 25 inserts) reads the target once:
+    its new rows are the key-unique source's rows and its marked rows the
+    candidates passing the key ``in`` list — no eager checkpoint of the
+    candidate rows, no insert anti-join, one key collect. At most 6 jobs
+    warm (13 with those joins)."""
+    t = _dv_table(spark, str(tmp_path / "t"), rows=20000, files=8)
+    for rep in range(2):
+        jobs, res = _jobs(spark, lambda: _dv_statement(spark, t, "merge", 1000 * rep))
+        assert res["dv_rows"] == 25
+    assert jobs <= 6, jobs  # the second (warm) run
+    got = {r.k: r.v for r in t.read().collect()}
+    assert len(got) == 20050
+    assert got[1000] == got[1024] == "m" and got[-1001] == got[-1025] == "n"
+    assert got[1025] == "v1025"
+
+
+def test_dv_upsert_joins_past_the_in_filter_cap(spark, tmp_path, monkeypatch):
+    """Past ``_IN_FILTER_CAP`` keys the DV upsert semi-joins its candidate
+    rows to the source keys instead of filtering them by the ``in`` list:
+    the same rows are marked and landed."""
+    from mb_crdb_cdc_dlgen2_synapse_spark import txlog
+
+    monkeypatch.setattr(txlog, "_IN_FILTER_CAP", 0)
+    t = _dv_table(spark, str(tmp_path / "t"))
+    res = _dv_statement(spark, t, "merge", 100)
+    assert res["dv_rows"] == 25
+    got = {r.k: r.v for r in t.read().collect()}
+    want = {i: f"v{i}" for i in range(2000)}
+    want.update({100 + i: "m" for i in range(25)})
+    want.update({-101 - i: "n" for i in range(25)})
+    assert got == want
+
+
 def test_dv_merge_jobs_keep_the_callers_job_group(spark, tmp_path):
     """Both concurrent legs of a DV merge submit their jobs under the
     caller's job group, like the jobs it runs on the calling thread."""
