@@ -6,8 +6,9 @@ Exactly-once without a transactional table format: each micro-batch writes
 its *partial* aggregate to a partition keyed by the query's checkpoint and
 the batch id (``batch=<checkpoint key>-N``), and a batch replay after
 failure overwrites the same partition — idempotent by construction — while
-a second query on a fresh checkpoint lands its partials beside the first's.  Readers merge partials with an exact decimal sum, so the
-merged result is independent of batch boundaries.  The journal doubles as
+a second query on a fresh checkpoint lands its partials beside the first's.
+Readers merge partials with an exact decimal sum, so the merged result is
+independent of batch boundaries.  The journal doubles as
 an audit log; a compaction pass (operators/lake.py) folds old partials.
 """
 
